@@ -860,17 +860,17 @@ def q_s2_bbox_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     under-selecting cover loses rows and fails the hash."""
     from geomesa_spark.cells.s2 import s2_cover_bbox
     from geomesa_spark.geo import from_wkt
-    from geomesa_spark.plans.planner import prune_by_geometry
+    from geomesa_spark.plans.planner import int_predicate, prune_by_geometry
 
     # level 6: ~24k cells world-wide; this bbox covers ~1k — the driver
     # cover stays sub-second while the prune still reads ~4% of cells
     qx0, qy0, qx1, qy1 = 60.0, 55.0, 150.0, 75.0
-    cover = [int(c) for c in s2_cover_bbox(qx0, qy0, qx1, qy1, 6).tolist()]
+    cover = s2_cover_bbox(qx0, qy0, qx1, qy1, 6).tolist()
     pts = _events_s2_table(spark, sf_dir)  # stored s2 + cell_prefix
     box = from_wkt(f"POLYGON(({qx0} {qy0}, {qx1} {qy0}, {qx1} {qy1}, "
                    f"{qx0} {qy1}, {qx0} {qy0}))")
     pruned = prune_by_geometry(pts, box)  # partition prune (Z2 layout)
-    return (pruned.where(F.col("s2").isin(cover))  # row-group prune (S2)
+    return (pruned.where(int_predicate("s2", cover))  # row-group prune (S2)
             .where((F.col("lon") >= qx0) & (F.col("lon") <= qx1)
                    & (F.col("lat") >= qy0) & (F.col("lat") <= qy1))
             .select("event_id"))
@@ -2344,7 +2344,7 @@ def oracle_sql() -> dict[str, str]:
               FROM documents),
             c AS (
               SELECT doc_id, n_tokens,
-                     sum(n_tokens) OVER (ORDER BY doc_id)
+                     CAST(sum(n_tokens) OVER (ORDER BY doc_id) AS BIGINT)
                        - n_tokens AS global_start
               FROM t)
             SELECT doc_id, n_tokens, global_start,

@@ -283,6 +283,17 @@ def haversine_m(lon1, lat1, lon2, lat2):
     return 2 * EARTH_MEAN_RADIUS_M * np.arcsin(np.minimum(1.0, np.sqrt(h)))
 
 
+def haversine_expr(lon1: str, lat1: str, lon2: str, lat2: str):
+    """``haversine_m`` between named columns as ONE Catalyst expression
+    (codegen, no Python worker) built in a single JVM call."""
+    from pyspark.sql import functions as F
+    x1, y1, x2, y2 = (f"radians(`{c}`)" for c in (lon1, lat1, lon2, lat2))
+    a = (f"power(sin(({y2} - {y1}) / 2), 2)"
+         f" + cos({y1}) * cos({y2}) * power(sin(({x2} - {x1}) / 2), 2)")
+    # clamp: float rounding can push a epsilon past 1 for antipodes
+    return F.expr(f"asin(least(1.0D, sqrt({a}))) * {2 * EARTH_MEAN_RADIUS_M!r}D")
+
+
 def vincenty_m(lon1, lat1, lon2, lat2, iterations: int = 200, tol: float = 1e-12):
     """Vectorized WGS84 ellipsoid inverse distance (Vincenty, meters).
 

@@ -34,18 +34,7 @@ import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-EARTH_MEAN_RADIUS_M = 6371008.7714
-
-
-def haversine_expr(lon1, lat1, lon2, lat2,
-                   radius: float = EARTH_MEAN_RADIUS_M) -> Column:
-    """Great-circle distance in meters, pure Catalyst (codegen)."""
-    rl1, rl2 = F.radians(lat1), F.radians(lat2)
-    dlat = (rl2 - rl1) / 2
-    dlon = (F.radians(lon2) - F.radians(lon1)) / 2
-    a = F.sin(dlat) ** 2 + F.cos(rl1) * F.cos(rl2) * F.sin(dlon) ** 2
-    # clamp: float rounding can push a epsilon past 1 for antipodes
-    return 2 * radius * F.asin(F.least(F.lit(1.0), F.sqrt(a)))
+from geomesa_spark.geo.measures import haversine_expr
 
 
 def point2point(df: DataFrame, *, group: str, sort: str,
@@ -89,8 +78,7 @@ def point2point(df: DataFrame, *, group: str, sort: str,
         F.col("__x2__").alias("x2"), F.col("__y2__").alias("y2"),
         F.col(sort).alias(f"{sort}_start"),
         F.col("__s2__").alias(f"{sort}_end"),
-        haversine_expr(F.col(lon), F.col(lat),
-                       F.col("__x2__"), F.col("__y2__")).alias("dist_m"))
+        haversine_expr(lon, lat, "__x2__", "__y2__").alias("dist_m"))
     if filter_singular:
         out = out.where(F.col("dist_m") > 0.0)
     return out
@@ -223,7 +211,9 @@ def route_search(features: DataFrame,
             ((px - F.col("x1")) * dx + (py - F.col("y1")) * dy) / len2))
     ).otherwise(F.lit(0.0))
     cx, cy = F.col("x1") + t * dx, F.col("y1") + t * dy
-    scored = (cand.withColumn("dist_m", haversine_expr(px, py, cx, cy))
+    scored = (cand.withColumns({"__cx__": cx, "__cy__": cy})
+              .withColumn("dist_m",
+                          haversine_expr(lon, lat, "__cx__", "__cy__"))
               .where(F.col("dist_m") <= buffer_m)
               .withColumn("raz", F.round(_bearing_expr(
                   F.col("x1"), F.col("y1"), F.col("x2"),

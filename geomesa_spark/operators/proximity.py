@@ -21,15 +21,18 @@ refine contract as the rest of the engine.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from geomesa_spark.cells import PARTITION_RES
 from geomesa_spark.cells.native import cell_expr
+from geomesa_spark.geo.measures import haversine_expr
 # _window_cells is the ONE radius-window cover implementation
 # (poleward-cos over-cover, antimeridian wrap via bbox_cover's split —
 # Envelope.toWorld semantics, KNearestNeighborSearchProcess.scala:524-544);
 # a second local copy here once diverged from it, so share it instead
-from geomesa_spark.operators.knn import (_METRIC_UDF, _METRIC_WINDOW_SLACK,
-                                         _window_cells, udf_haversine)
+from geomesa_spark.operators.knn import (QUERY_CELLS, _METRIC_DIST,
+                                         _METRIC_WINDOW_SLACK, _window_cells,
+                                         local_frame)
 
 
 def proximity_join(points: DataFrame,
@@ -43,20 +46,16 @@ def proximity_join(points: DataFrame,
     Output: (query_id, <point columns>, dist_m), deduped per (query,
     point). Spheroid windows inflate by the documented slack before the
     cell cover so the candidate set still provably over-selects."""
-    if metric not in _METRIC_UDF:
+    if metric not in _METRIC_DIST:
         raise ValueError(f"unknown metric {metric!r}; "
-                         f"use one of {sorted(_METRIC_UDF)}")
-    spark = points.sparkSession
+                         f"use one of {sorted(_METRIC_DIST)}")
     w = radius_m * _METRIC_WINDOW_SLACK[metric]
-    cand_rows = [(qid, qlon, qlat, c)
-                 for (qid, qlon, qlat) in queries
-                 for c in _window_cells(qlon, qlat, w, res)]
-    cand = spark.createDataFrame(
-        cand_rows, "query_id string, qlon double, qlat double, __cell__ long")
+    cand = local_frame(points.sparkSession, [
+        (qid, qlon, qlat, c) for (qid, qlon, qlat) in queries
+        for c in _window_cells(qlon, qlat, w, res)], QUERY_CELLS)
     pts = points.withColumn("__cell__", cell_expr(lon, lat, res))
     joined = pts.join(F.broadcast(cand), "__cell__").drop("__cell__")
-    dist = _METRIC_UDF[metric](F.col(lon), F.col(lat),
-                               F.col("qlon"), F.col("qlat"))
+    dist = _METRIC_DIST[metric](lon, lat, "qlon", "qlat")
     return (joined.withColumn("dist_m", dist)
             .where(F.col("dist_m") <= radius_m)
             .drop("qlon", "qlat"))
@@ -73,18 +72,15 @@ def tube_select(events: DataFrame,
     row per matching event (deduped across overlapping vertices) with the
     nearest-vertex distance.
     """
-    spark = events.sparkSession
     cand_rows = [(i, t, qlon, qlat, c)
                  for i, (t, qlon, qlat) in enumerate(track)
                  for c in _window_cells(qlon, qlat, radius_m, res)]
-    cand = spark.createDataFrame(
-        cand_rows,
-        "vertex int, qts string, qlon double, qlat double, __cell__ long") \
-        .withColumn("qts", F.to_timestamp("qts"))
+    cand = local_frame(events.sparkSession, cand_rows, StructType([
+        StructField("vertex", IntegerType()), StructField("qts", StringType()),
+        *QUERY_CELLS.fields[1:]])).withColumn("qts", F.to_timestamp("qts"))
     ev = events.withColumn("__cell__", cell_expr(lon, lat, res))
     joined = ev.join(F.broadcast(cand), "__cell__").drop("__cell__")
-    dist = udf_haversine(F.col(lon), F.col(lat),
-                         F.col("qlon"), F.col("qlat"))
+    dist = haversine_expr(lon, lat, "qlon", "qlat")
     # NTZ timestamps cannot cast straight to double; route via timestamp
     dt = F.abs(F.col(ts).cast("timestamp").cast("double")
                - F.col("qts").cast("timestamp").cast("double"))

@@ -7,9 +7,9 @@ geomesa/index/index/z2/XZ2Index.scala; curve /root/reference/geomesa-z3/
 .../curve/XZ2SFC.scala:130-252).
 
 Spark mapping: an ``xz2`` long column computed at write time (Arrow
-pandas UDF over the geometry bboxes); a query bbox becomes a disjunction
-of BETWEEN predicates on that column — sargable, so Parquet row-group
-min/max skipping and Iceberg range pruning apply — followed by the exact
+pandas UDF over the geometry bboxes); a query bbox becomes ONE expression
+of range terms on that column — sargable, so Parquet row-group min/max
+skipping and Iceberg range pruning apply — followed by the exact
 bbox/geometry refine (cover may over-select, never under-select)."""
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType
 
 from geomesa_spark.cells.xz2 import XZ2_MAX_RES, xz2_covers, xz2_index
+from geomesa_spark.plans.planner import int_predicate
 
 
 def udf_xz2(res: int = XZ2_MAX_RES):
@@ -75,13 +76,8 @@ def xz2_range_predicate(bbox: tuple[float, float, float, float],
     """Disjunction of BETWEEN ranges covering every geometry that may
     intersect the query bbox (driver-side cover computation — the
     reference's getRangeBytes stage), budgeted to ``max_terms``."""
-    ranges = coalesce_ranges(xz2_covers(*bbox, res=res), max_terms)
-    pred = None
-    for lo, hi in ranges:
-        term = (F.col(col) >= lo) & (F.col(col) <= hi) if lo != hi \
-            else (F.col(col) == lo)
-        pred = term if pred is None else (pred | term)
-    return pred if pred is not None else F.lit(False)
+    return int_predicate(
+        col, coalesce_ranges(xz2_covers(*bbox, res=res), max_terms))
 
 
 def xz2_bbox_query(df: DataFrame,
@@ -94,6 +90,6 @@ def xz2_bbox_query(df: DataFrame,
     then exact bbox refine. ``df`` must carry the ``xz2`` column (use
     ``with_xz2`` at write time)."""
     qx0, qy0, qx1, qy1 = (float(v) for v in bbox)
-    pruned = df.where(xz2_range_predicate(bbox, res=res, col=col))
-    return pruned.where((F.col(xmin) <= qx1) & (F.col(xmax) >= qx0)
-                        & (F.col(ymin) <= qy1) & (F.col(ymax) >= qy0))
+    return df.where(xz2_range_predicate(bbox, res=res, col=col)
+                    & (F.col(xmin) <= qx1) & (F.col(xmax) >= qx0)
+                    & (F.col(ymin) <= qy1) & (F.col(ymax) >= qy0))

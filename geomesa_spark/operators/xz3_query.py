@@ -31,6 +31,7 @@ from pyspark.sql.types import LongType
 from geomesa_spark.cells.xz3 import XZ3_MAX_RES, xz3_code, xz3_covers
 from geomesa_spark.cells.z3 import WEEK_SECONDS
 from geomesa_spark.operators.xz2_query import coalesce_ranges
+from geomesa_spark.plans.planner import int_predicate
 
 MAX_EPOCH_SPAN = 32  # intervals spanning more weeks use the reserved -1
 
@@ -87,17 +88,12 @@ def xz3_range_predicate(bbox: tuple[float, float, float, float],
     e1 = int(t1_s // WEEK_SECONDS)
     all_ranges: list[tuple[int, int]] = []
 
-    def range_term(lo: float, hi: float) -> Column | None:
+    def range_term(lo: float, hi: float) -> Column:
         ranges = coalesce_ranges(
             xz3_covers(qx0, qy0, qx1, qy1, lo, hi, res=res),
             max_terms_per_epoch)
         all_ranges.extend(ranges)
-        term = None
-        for a, b in ranges:
-            t = (F.col(col) >= a) & (F.col(col) <= b) if a != b \
-                else (F.col(col) == a)
-            term = t if term is None else (term | t)
-        return term
+        return int_predicate(col, ranges)
 
     # Epochs fully inside the interval share ONE cover (the bbox over the
     # whole week): emit it once under an epoch BETWEEN instead of per week,
@@ -109,18 +105,15 @@ def xz3_range_predicate(bbox: tuple[float, float, float, float],
                 and t1_s >= (e + 1) * WEEK_SECONDS]
     pred = F.col(epoch_col) == -1
     if interior:
-        term = range_term(0.0, float(WEEK_SECONDS))
-        if term is not None:
-            pred = pred | ((F.col(epoch_col) >= interior[0])
-                           & (F.col(epoch_col) <= interior[-1]) & term)
+        pred = pred | ((F.col(epoch_col) >= interior[0])
+                       & (F.col(epoch_col) <= interior[-1])
+                       & range_term(0.0, float(WEEK_SECONDS)))
     for e in range(e0, e1 + 1):
         if interior and interior[0] <= e <= interior[-1]:
             continue
         lo = max(0.0, t0_s - e * WEEK_SECONDS)
         hi = min(float(WEEK_SECONDS), t1_s - e * WEEK_SECONDS)
-        term = range_term(lo, hi)
-        if term is not None:
-            pred = pred | ((F.col(epoch_col) == e) & term)
+        pred = pred | ((F.col(epoch_col) == e) & range_term(lo, hi))
 
     # Redundant xz3-ONLY conjunct for parquet row-group skipping: the
     # disjunction above mixes the PARTITION column (epoch) with the data
@@ -133,11 +126,7 @@ def xz3_range_predicate(bbox: tuple[float, float, float, float],
     if all_ranges:
         union = coalesce_ranges(sorted(set(all_ranges)),
                                 max_terms_per_epoch)
-        push = F.col(col) == -1
-        for a, b in union:
-            push = push | ((F.col(col) >= a) & (F.col(col) <= b)
-                           if a != b else (F.col(col) == a))
-        pred = pred & push
+        pred = pred & int_predicate(col, [(-1, -1)] + union)
     return pred
 
 

@@ -40,7 +40,7 @@ from geomesa_spark.cells import PARTITION_RES
 from geomesa_spark.cells.z3 import WEEK_SECONDS
 from geomesa_spark.geo.model import Geometry, Polygon
 from geomesa_spark.plans.planner import DEFAULT_MAX_COVER, \
-    cell_cover_of_geometry
+    cell_cover_of_geometry, int_predicate
 
 # ---------------------------------------------------------------- filter AST
 
@@ -347,12 +347,11 @@ def plan_query(df: DataFrame, f, *, cell_col: str = "cell_prefix",
     if cover is not None:
         if len(cover) == 0:
             return out.where(F.lit(False))  # disjoint short-circuit
-        out = out.where(F.col(cell_col).isin(
-            [int(c) for c in cover.tolist()]))
+        out = out.where(int_predicate(cell_col, cover.tolist()))
     if week_col and weeks is not None:
         if not weeks:
             return out.where(F.lit(False))
-        out = out.where(F.col(week_col).isin(sorted(weeks)))
+        out = out.where(int_predicate(week_col, sorted(weeks)))
     return out.where(to_refine_column(f, lon=lon, lat=lat, ts=ts,
                                       loose_bbox=loose_bbox))
 

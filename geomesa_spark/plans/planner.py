@@ -30,6 +30,24 @@ _WORLD_BOUNDS = (-180.0, -90.0, 180.0, 90.0)
 DEFAULT_MAX_COVER = 4096  # range budget, analog of ScanRangesTarget
 
 
+def int_predicate(col: str, items) -> Column:
+    """``col IN (v, ...)`` over integers, or ``col >= lo AND col <= hi OR
+    ...`` over ``(lo, hi)`` pairs, as ONE SQL expression built in a single
+    JVM call (``isin`` and Column operators cost a py4j round trip each).
+    Plain comparisons on the bare column, so Catalyst still prunes
+    partitions and pushes the filter to the Parquet scan."""
+    items = list(items)
+    if not items:
+        return F.lit(False)
+    c = "`" + col.replace("`", "``") + "`"
+    if isinstance(items[0], (tuple, list)):
+        return F.expr(" OR ".join(
+            f"{c} = {int(lo)}L" if lo == hi
+            else f"({c} >= {int(lo)}L AND {c} <= {int(hi)}L)"
+            for lo, hi in items))
+    return F.expr(f"{c} IN ({', '.join(str(int(v)) for v in items)})")
+
+
 def cell_cover_of_geometry(geom: Geometry, res: int = PARTITION_RES,
                            max_cells: int = DEFAULT_MAX_COVER,
                            exact: bool = True) -> np.ndarray | None:
@@ -168,7 +186,7 @@ def prune_by_geometry(df: DataFrame, geom: Geometry, cell_col: str = "cell_prefi
         return df
     if len(cover) == 0:
         return df.where(F.lit(False))
-    return df.where(F.col(cell_col).isin([int(c) for c in cover.tolist()]))
+    return df.where(int_predicate(cell_col, cover.tolist()))
 
 
 def query_guard(geom: Geometry | None, *, allow_full_scan: bool = False) -> None:

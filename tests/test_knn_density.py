@@ -2,6 +2,8 @@
 (the reference's process-level golden-test pattern,
 KNearestNeighborSearchProcessTest / DensityProcessTest)."""
 
+import uuid
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -96,11 +98,15 @@ def test_proximity_spheroid_matches_brute_force(points):
 
 
 def test_knn_k_larger_than_matches(spark):
+    # a duplicated point makes an exact tie, ordered by the tiebreak
+    lon = np.array([10.0, 10.1, 10.1, 10.2, -50.0, 120.0])
+    lat = np.array([10.0, 10.1, 10.1, 10.2, 40.0, -60.0])
     few = spark.createDataFrame(
-        [(1, 10.0, 10.0), (2, 10.1, 10.1), (3, 10.2, 10.2)],
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
         "point_id int, lon double, lat double")
-    out = knn_join(few, [("q", 10.0, 10.05)], 10, max_rounds=40)
-    assert out.count() == 3  # emits all available when < k exist
+    got, _ = _knn_jobs(spark, few, [("q", 10.0, 10.05)], 10, max_rounds=40)
+    assert len(got["q"]) == len(lon)  # emits all available when < k exist
+    _assert_twin(got["q"], lon, lat, 10.0, 10.05, 10)
 
 
 def test_density_grid(points):
@@ -126,3 +132,84 @@ def test_density_weighted(points):
                   envelope=env, width=4, height=2, weight="wt").collect()
     total = sum(r.weight for r in out)
     assert total == sum(i % 3 for i in range(N))
+
+
+# --- twin checks with a tiebreak: duplicated coordinates make exact ties,
+# so the (dist_m, point_id) order is fully determined
+
+CLUSTER = 1.0  # every point of the dense set lies within 1 deg of (0, 0)
+
+
+def _twin(lon, lat, qlon, qlat, k):
+    d = haversine_m(lon, lat, np.full(len(lon), qlon), np.full(len(lat), qlat))
+    idx = np.lexsort((np.arange(len(lon)), d))[:k]
+    return [int(i) for i in idx], d[idx]
+
+
+def _parquet_points(spark, path, lon, lat):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.table({"point_id": np.arange(len(lon), dtype=np.int64),
+                             "lon": lon, "lat": lat}), str(path))
+    return spark.read.parquet(str(path))
+
+
+def _knn_jobs(spark, points, queries, k, **kw):
+    """knn_join's result rows by query and the Spark jobs its build ran."""
+    sc = spark.sparkContext
+    group = f"knn-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "knn build")
+    try:
+        out = knn_join(points, queries, k, tiebreak=["point_id"], **kw)
+    finally:
+        sc.setJobGroup("idle", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    by_q = {}
+    for r in out.collect():
+        by_q.setdefault(r.query_id, []).append(r)
+    return {q: sorted(rs, key=lambda r: r.rank) for q, rs in by_q.items()}, jobs
+
+
+def _assert_twin(rows, lon, lat, qlon, qlat, k):
+    ids, d = _twin(lon, lat, qlon, qlat, k)
+    assert [r.rank for r in rows] == list(range(1, len(ids) + 1))
+    assert [r.point_id for r in rows] == ids
+    np.testing.assert_allclose([r.dist_m for r in rows], d, rtol=1e-9)
+
+
+@pytest.fixture(scope="module")
+def clustered(spark, tmp_path_factory):
+    """A dense cluster at (0, 0) plus a sparse world-wide scatter, every
+    point stored twice: the global density estimate is far too high for
+    queries away from the cluster. Returned as a flat parquet file and as
+    a table partitioned by cell_prefix (the layout a round prunes)."""
+    from geomesa_spark.cells.native import cell_expr
+    rng = np.random.default_rng(7)
+    lon = np.concatenate([rng.uniform(-CLUSTER, CLUSTER, 4500),
+                          rng.uniform(-180, 180, 250)])
+    lat = np.concatenate([rng.uniform(-CLUSTER, CLUSTER, 4500),
+                          rng.uniform(-80, 80, 250)])
+    lon, lat = np.repeat(lon, 2), np.repeat(lat, 2)
+    path = tmp_path_factory.mktemp("knn")
+    flat = _parquet_points(spark, path / "clustered.parquet", lon, lat)
+    flat.withColumn("cell_prefix", cell_expr("lon", "lat")) \
+        .write.partitionBy("cell_prefix").parquet(str(path / "cells"))
+    return lon, lat, flat, spark.read.parquet(str(path / "cells"))
+
+
+def test_knn_sparse_query_grows_over_rounds(spark, clustered):
+    lon, lat, flat, cells = clustered
+    q = ("sparse", 100.0, -30.0)
+    got, jobs = _knn_jobs(spark, cells, [q], K)
+    assert jobs >= 2  # one job per round: the first window came back short
+    _assert_twin(got["sparse"], lon, lat, q[1], q[2], K)
+    got, _ = _knn_jobs(spark, flat, [q], K)  # parallel broadcast rounds
+    _assert_twin(got["sparse"], lon, lat, q[1], q[2], K)
+
+
+def test_knn_single_round_build_is_one_job(spark, clustered):
+    lon, lat, _, cells = clustered
+    q = ("dense", 0.1, -0.2)
+    got, jobs = _knn_jobs(spark, cells, [q], K)
+    assert jobs == 1
+    _assert_twin(got["dense"], lon, lat, q[1], q[2], K)

@@ -36,24 +36,31 @@ class TestJoinPlans:
         assert "Join" in plan
 
     def test_knn_candidates_use_native_cells(self, spark, entry):
-        # q_knn's rounds materialize eagerly (localCheckpoint per ring
-        # scan), so assert on the per-round candidate plan directly: the
-        # cell column must be native bit math and the query frame must
-        # broadcast against the unshuffled point side
-        from geomesa_spark.cells import PARTITION_RES
-        from geomesa_spark.operators.knn import (_cell_expr,
-                                                 _round_candidates)
+        # q_knn runs its rounds eagerly, so assert on one round's plan:
+        # the cell column must be native bit math and the distance native
+        # Catalyst (no Python eval node). A partition-pruned round
+        # coalesces and never exchanges; a full-scan round broadcasts the
+        # ring cells and exchanges only the joined rows, by query
+        import re
+        from geomesa_spark.cells.native import cell_expr
+        from geomesa_spark.operators.knn import _ring_top_k
         pts = entry._events_points(spark, SF).withColumn(
-            "__pc__", _cell_expr("lon", "lat", PARTITION_RES))
-        qdf = spark.createDataFrame(
-            [("q", 0.0, 0.0, 0)],
-            "query_id string, qlon double, qlat double, cell long")
-        plan = _plan(_round_candidates(pts, qdf, "lon", "lat", "__pc__",
-                                       has_prefix=False))
-        assert "shiftleft" in plan or "shiftright" in plan
-        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-        join_part = plan.split("BroadcastExchange")[0]
-        assert "Exchange hashpartitioning" not in join_part
+            "__pc__", cell_expr("lon", "lat"))
+        for pruned in (True, False):
+            plan = _plan(_ring_top_k(pts, [("q", 0.0, 0.0, 0)], 10,
+                                     ["event_id", "lon", "lat"], "__pc__",
+                                     pruned, lon="lon", lat="lat",
+                                     metric="haversine",
+                                     tiebreak=["event_id"]))
+            assert "shiftleft" in plan or "shiftright" in plan
+            assert "ArrowEvalPython" not in plan
+            assert "BatchEvalPython" not in plan
+            if pruned:
+                assert "Exchange" not in plan
+            else:
+                assert "BroadcastExchange" in plan
+                keys = re.findall(r"Exchange hashpartitioning\((\w+)", plan)
+                assert keys and all(k.startswith("query_id") for k in keys)
 
 
 class TestCodegen:
