@@ -437,13 +437,18 @@ def _parquet_num_rows(path: str) -> int:
     """Row count from parquet footer metadata only — tolerant of BOTH
     single-file tables (the driver fixtures) and Spark-written
     directory tables (the scaled /tmp fixtures), which
-    ``pq.read_metadata`` alone rejects."""
+    ``pq.read_metadata`` alone rejects. A directory without top-level
+    ``*.parquet`` files (a hive-partitioned or nested layout) raises
+    rather than counting 0 rows."""
     import glob
 
     import pyarrow.parquet as pq
     if os.path.isdir(path):
-        return sum(pq.read_metadata(f).num_rows
-                   for f in glob.glob(os.path.join(path, "*.parquet")))
+        files = glob.glob(os.path.join(path, "*.parquet"))
+        if not files:
+            raise ValueError(f"{path}: directory table has no top-level "
+                             f"*.parquet files to count rows from")
+        return sum(pq.read_metadata(f).num_rows for f in files)
     return pq.read_metadata(path).num_rows
 
 

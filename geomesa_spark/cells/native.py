@@ -21,37 +21,28 @@ _LON_MIN, _LON_SPAN = -180.0, 360.0
 _LAT_MIN, _LAT_SPAN = -90.0, 180.0
 
 
-def _bin_expr(v: Column, vmin: float, span: float, res: int) -> Column:
+def _bin_sql(v: str, vmin: float, span: float, res: int) -> str:
     n = 1 << res
-    raw = F.floor((v - F.lit(vmin)) / F.lit(span) * F.lit(float(n)))
-    return F.greatest(F.least(raw, F.lit(n - 1)), F.lit(0)).cast("long")
+    return (f"CAST(greatest(least(floor(({v} - {vmin!r}D) / {span!r}D"
+            f" * {float(n)!r}D), {n - 1}), 0) AS BIGINT)")
 
 
-def _interleave(x: Column, y: Column, res: int) -> Column:
-    out = F.lit(0).cast("long")
-    for i in range(res):
-        out = out.bitwiseOR(
-            F.shiftleft(F.shiftrightunsigned(x, i).bitwiseAND(F.lit(1)),
-                        2 * i)
-        ).bitwiseOR(
-            F.shiftleft(F.shiftrightunsigned(y, i).bitwiseAND(F.lit(1)),
-                        2 * i + 1))
-    return out
-
-
-def cell_expr(lon, lat, res: int = PARTITION_RES) -> Column:
-    """Morton cell id of (lon, lat) at ``res`` bits/dim; -1 for bad rows."""
+def cell_expr(lon: str, lat: str, res: int = PARTITION_RES) -> Column:
+    """Morton cell id of columns (lon, lat) at ``res`` bits/dim; -1 for
+    bad rows. One SQL expression, so building it is one JVM call."""
     if not 0 < res <= MAX_RES:
         raise ValueError(f"res must be in (0, {MAX_RES}]")
-    lon_c = F.col(lon) if isinstance(lon, str) else lon
-    lat_c = F.col(lat) if isinstance(lat, str) else lat
-    ok = (lon_c.isNotNull() & lat_c.isNotNull()
-          & ~F.isnan(lon_c) & ~F.isnan(lat_c)
-          & (lon_c >= _LON_MIN) & (lon_c <= _LON_MIN + _LON_SPAN)
-          & (lat_c >= _LAT_MIN) & (lat_c <= _LAT_MIN + _LAT_SPAN))
-    morton = _interleave(_bin_expr(lon_c, _LON_MIN, _LON_SPAN, res),
-                         _bin_expr(lat_c, _LAT_MIN, _LAT_SPAN, res), res)
-    return F.when(ok, morton).otherwise(F.lit(-1).cast("long"))
+    x, y = (f"`{c.replace('`', '``')}`" for c in (lon, lat))
+    ok = (f"{x} IS NOT NULL AND {y} IS NOT NULL"
+          f" AND NOT isnan({x}) AND NOT isnan({y})"
+          f" AND {x} >= {_LON_MIN!r}D AND {x} <= {_LON_MIN + _LON_SPAN!r}D"
+          f" AND {y} >= {_LAT_MIN!r}D AND {y} <= {_LAT_MIN + _LAT_SPAN!r}D")
+    bx = _bin_sql(x, _LON_MIN, _LON_SPAN, res)
+    by = _bin_sql(y, _LAT_MIN, _LAT_SPAN, res)
+    morton = " | ".join(
+        f"shiftleft(shiftrightunsigned({b}, {i}) & 1L, {2 * i + j})"
+        for i in range(res) for j, b in enumerate((bx, by)))
+    return F.expr(f"CASE WHEN {ok} THEN {morton} ELSE -1L END")
 
 
 def cell_prefix_expr(cell: Column, from_res: int, to_res: int) -> Column:

@@ -43,9 +43,12 @@ import os
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from geomesa_spark.ml.similarity import (_collect_matrix, _rank_topk,
-                                         cos_prenormed_expr, norm_expr)
+from geomesa_spark.ml.similarity import (_collect_matrix, _query_vectors,
+                                         _rank_topk, cos_prenormed_expr,
+                                         norm_expr)
+from geomesa_spark.plans.planner import local_frame
 
 _IVF_META_FILE = "_ivf_meta.json"
 _IVF_CENTROID_FILE = "_ivf_centroids.parquet"
@@ -331,17 +334,16 @@ def ivf_topk_indexed(index: DataFrame, queries: DataFrame, k: int, *,
     probe_rows = sorted({(str(qid), int(li))
                          for qid, row in zip(q_ids, probes)
                          for li in row.tolist()})
-    probe_df = spark.createDataFrame(
-        probe_rows, f"{query_id_col} string, list_id int")
+    probe_df = local_frame(spark, probe_rows, StructType([
+        StructField(query_id_col, StringType()),
+        StructField("list_id", IntegerType())]))
     probe_lists = sorted({li for _, li in probe_rows})
     flt = (F.col("list_id").isin(probe_lists) if probe_lists
            else F.lit(False))
     if "pt" in index.columns and probe_lists:
         flt = F.col("pt").isin(
             sorted({li % list_partitions for li in probe_lists})) & flt
-    qvec_df = spark.createDataFrame(
-        [(str(q), [float(x) for x in v]) for q, v in zip(q_ids, q_mat)],
-        f"{query_id_col} string, _qv array<double>")
+    qvec_df = _query_vectors(spark, q_ids, q_mat, query_id_col)
     # row norm hoisted below the probe join (one fold per scanned index
     # row, reused when several queries probe the same list); the query
     # side is unit-length from _collect_matrix, so the per-(query, row)

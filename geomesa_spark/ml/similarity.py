@@ -23,6 +23,10 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
+                               StructField, StructType)
+
+from geomesa_spark.plans.planner import local_frame
 
 
 def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
@@ -34,6 +38,15 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0] = 1.0
     return ids, mat / norms[:, None]
+
+
+def _query_vectors(spark, q_ids: list, q_mat: np.ndarray,
+                   query_id_col: str) -> DataFrame:
+    """(query id, ``_qv`` unit vector) rows of a collected query set."""
+    return local_frame(spark, [(str(q), v) for q, v in
+                               zip(q_ids, q_mat.tolist())], StructType([
+        StructField(query_id_col, StringType()),
+        StructField("_qv", ArrayType(DoubleType()))]))
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int, *,
@@ -282,8 +295,12 @@ def build_lsh_index_local(embeddings_parquet: str, path: str, *,
     either builder yields bit-identical (vec_id, bk) rows; correctness
     never depends on which builder ran because query and oracle read
     the same stored files. ``n_planes=None`` sizes to the corpus via
-    ``default_n_planes`` exactly like the ingest path."""
+    ``default_n_planes`` exactly like the ingest path. The index is
+    built in a sibling directory and renamed over ``path``, so no file
+    of an earlier build (another plane count, a Spark build) survives
+    into it."""
     import os
+    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -300,6 +317,9 @@ def build_lsh_index_local(embeddings_parquet: str, path: str, *,
         ((mat @ planes[t]) > 0) @ weights + (t << np.int64(n_planes + 1))
         for t in range(n_tables)])
     pts = all_bks % np.int64(bucket_partitions)
+    tmp = f"{os.path.normpath(path)}.building-{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
     for pt in range(bucket_partitions):
         mask = pts == pt
         if not mask.any():
@@ -309,14 +329,16 @@ def build_lsh_index_local(embeddings_parquet: str, path: str, *,
             id_col: pa.array(all_ids[mask][order]),
             "bk": pa.array(all_bks[mask][order], pa.int64()),
         })
-        d = os.path.join(path, f"pt={pt}")
-        os.makedirs(d, exist_ok=True)
+        d = os.path.join(tmp, f"pt={pt}")
+        os.makedirs(d)
         pq.write_table(sub, os.path.join(d, "part-00000.parquet"))
-    _write_lsh_meta(path, {"n_planes": int(n_planes),
-                           "n_tables": n_tables, "dim": dim,
-                           "seed": seed,
-                           "bucket_partitions": bucket_partitions})
-    open(os.path.join(path, "_SUCCESS"), "w").close()
+    _write_lsh_meta(tmp, {"n_planes": int(n_planes),
+                          "n_tables": n_tables, "dim": dim,
+                          "seed": seed,
+                          "bucket_partitions": bucket_partitions})
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
 
 
 def build_lsh_index(corpus: DataFrame, path: str, *,
@@ -406,8 +428,9 @@ def lsh_topk_indexed(index: DataFrame, corpus: DataFrame,
     probe_rows = compute_probe_rows(q_ids, q_mat, n_planes=n_planes,
                                     n_tables=n_tables, dim=dim, seed=seed,
                                     multiprobe=multiprobe)
-    probe_df = spark.createDataFrame(
-        sorted(probe_rows), f"{query_id_col} string, bk long")
+    probe_df = local_frame(spark, sorted(probe_rows), StructType([
+        StructField(query_id_col, StringType()),
+        StructField("bk", LongType())]))
     probe_vals = sorted({bk for _, bk in probe_rows})
     # pt literals prune partitions; bk literals push down to parquet
     # row-group stats (files are bk-sorted at build). Old-layout indexes
@@ -433,9 +456,7 @@ def lsh_topk_indexed(index: DataFrame, corpus: DataFrame,
     cvecs = corpus.select(F.col(id_col), F.col(vec_col).alias("_cv"),
                           norm_expr(vec_col).alias("_cn")) \
         .join(cand_ids, id_col)
-    qvec_df = spark.createDataFrame(
-        [(str(q), [float(x) for x in v]) for q, v in zip(q_ids, q_mat)],
-        f"{query_id_col} string, _qv array<double>")
+    qvec_df = _query_vectors(spark, q_ids, q_mat, query_id_col)
     scored = cvecs.join(F.broadcast(qvec_df), query_id_col) \
         .withColumn("cos", cos_prenormed_expr("_qv", "_cv", "_cn"))
     # single-shuffle finale: hash(q) partitioning satisfies the (q, id)

@@ -5,12 +5,18 @@ sweeplineJoin, /root/reference/geomesa-spark/geomesa-spark-sql/src/main/
 scala/org/locationtech/geomesa/spark/GeoMesaJoinRelation.scala:41-91) as an
 idiomatic Spark plan:
 
-    regions --(cover cells pUDF + explode)--> (cell, region)
-    points  --(cell_id pUDF)---------------> (cell, point)
+    regions --(cover cells + explode)-------> (cell, region[, edges])
+    points  --(cell_expr, native bit math)--> (cell, point)
     equi-join on cell  (broadcast-hash if regions are small: zero shuffle
                         of the big point side; sort-merge + AQE skew-join
                         otherwise)
-    exact refine       (vectorized point-in-polygon over Arrow batches)
+    exact refine       (broadcast: the region side is exploded on the
+                        driver into an Arrow-built local relation whose
+                        rows carry the polygon edges near their cell, and
+                        the refine is one SQL ray-casting expression over
+                        them — no Python stage;
+                        distributed: cover pUDF + vectorized
+                        point-in-polygon pUDF over Arrow batches)
     dedupe             (only when both sides can span multiple cells --
                         duplication semantics of RelationUtils.gridIdMapper
                         :35-53 and its acknowledged duplicate TODO :38)
@@ -27,10 +33,11 @@ import weakref
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, BooleanType, LongType
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
+                               StructField, StructType)
 
-from geomesa_spark.cells import PARTITION_RES, cell_id
+from geomesa_spark.cells import PARTITION_RES, cell_bounds, cell_id
 from geomesa_spark.geo import io as gio
 from geomesa_spark.geo import predicates as gp
 from geomesa_spark.plans.planner import cell_cover_of_geometry
@@ -62,10 +69,7 @@ def locate_points_in_geometry(x: np.ndarray, y: np.ndarray, geom) -> np.ndarray:
             boundary = np.zeros(n, dtype=bool)
             for ri, ring in enumerate(part.rings()):
                 cross = np.zeros(n, dtype=bool)
-                ax, ay = ring[:-1, 0], ring[:-1, 1]
-                bx, by = ring[1:, 0], ring[1:, 1]
-                keep = ~((ax == bx) & (ay == by))
-                ax, ay, bx, by = ax[keep], ay[keep], bx[keep], by[keep]
+                ax, ay, bx, by = _ring_edges(ring).T
                 for s in range(0, len(ax), 512):  # edge-chunk to bound memory
                     a_x, a_y = ax[s:s + 512][None, :], ay[s:s + 512][None, :]
                     b_x, b_y = bx[s:s + 512][None, :], by[s:s + 512][None, :]
@@ -96,6 +100,13 @@ def locate_points_in_geometry(x: np.ndarray, y: np.ndarray, geom) -> np.ndarray:
                 code = 1 if loc == "I" else (0 if loc == "B" else -1)
                 out[i] = max(out[i], code)
     return out
+
+
+def _ring_edges(ring: np.ndarray) -> np.ndarray:
+    """A closed ring's edges as rows (ax, ay, bx, by), zero-length
+    edges (a repeated vertex) dropped."""
+    e = np.column_stack([ring[:-1], ring[1:]])
+    return e[~((e[:, 0] == e[:, 2]) & (e[:, 1] == e[:, 3]))]
 
 
 def _flatten(geom):
@@ -137,8 +148,6 @@ def udf_cover_cells_classified(res: int):
     point joined through an INTERIOR cell is provably in the region's
     interior, so the exact refine is skipped for it — the reference's
     contained-range shortcut applied to the join."""
-    from pyspark.sql.types import StructField, StructType
-
     from geomesa_spark.plans.planner import cell_cover_classified
 
     schema = ArrayType(StructType([
@@ -209,8 +218,6 @@ def udf_cover_cells_bbox(res: int):
     never cross the Arrow boundary (the in-cell candidate pruning the
     reference's sweepline gets from its per-cell x-interval index,
     GeoMesaJoinRelation.sweeplineJoin:41-55)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     schema = StructType([
         StructField("cells", ArrayType(LongType())),
         StructField("xmin", DoubleType()), StructField("ymin", DoubleType()),
@@ -405,11 +412,14 @@ def udf_refine_pairs(predicate: str):
 
 # ------------------------------------------------------------- public API
 
-# cross-query cover/envelope memo for the driver-side broadcast explode:
-# region dims are static (the same frame feeds every query of a session),
-# so the per-geometry cover computation (~4 ms each) is a plan-cache hit
-# after the first query. Bounded like a plan cache; entries are tiny.
-_DRIVER_COVER_MEMO: dict[tuple[bytes, int], tuple[list, tuple]] = {}
+# cross-query cover/envelope/edge memo for the driver-side broadcast
+# explode: region dims are static (the same frame feeds every query of a
+# session), so the per-geometry cover computation (~4 ms each) is a
+# plan-cache hit after the first query. Bounded like a plan cache; an
+# entry holds one geometry's cells, envelope and polygon edges (float64
+# arrays, 32 B an edge against the WKB key's 16 B a vertex).
+_DRIVER_COVER_MEMO: dict[tuple[bytes, int],
+                         tuple[list, tuple, list | None]] = {}
 _DRIVER_COVER_MEMO_CAP = 65536
 
 # frame-level memo: when the SAME region DataFrame object is joined
@@ -454,69 +464,173 @@ def _is_axis_rect(g) -> bool:
                for i in range(4))
 
 
+# an edge a -> b with its y-range (y0 <= y1), which lets the refine skip
+# an edge the point's y misses in two comparisons
+_EDGE = StructType([StructField(c, DoubleType())
+                    for c in ("ax", "ay", "bx", "by", "y0", "y1")])
+
+
+# degrees by which a cell is widened before edges are clipped to it: a
+# point's cell comes from floor bit math and a crossing's abscissa from a
+# division, and either may round by a few ulps (~1e-13 at 360)
+_CLIP_MARGIN = 1e-9
+
+
+def _polygon_parts(g) -> list | None:
+    """``g``'s polygon edges as part -> ring -> ``_ring_edges`` array,
+    empty parts dropped as ``locate_points_in_geometry`` drops them; None
+    when a part is not a polygon."""
+    from geomesa_spark.geo.model import Polygon
+
+    parts = []
+    for part in _flatten(g):
+        if not isinstance(part, Polygon):
+            return None
+        if not part.is_empty():
+            parts.append([_ring_edges(ring) for ring in part.rings()])
+    return parts
+
+
+def _cell_edges(parts: list, x0: float, y0: float, y1: float) -> list:
+    """The edges of ``parts`` that can decide a point of a cell whose lon
+    starts at ``x0`` and whose lat spans [``y0``, ``y1``], as rows of
+    ``_EDGE``. An edge wholly below, above or left of the cell neither
+    holds such a point nor is crossed by the +x ray from it (the ray's y
+    is outside the edge's, or the crossing lies left of the point), so
+    dropping it changes no classification. Rings keep their order (a
+    part's shell stays first); a part with no edge left is dropped."""
+    m = _CLIP_MARGIN
+    out = []
+    for rings in parts:
+        kept = []
+        for e in rings:
+            lo, hi = np.minimum(e[:, 1], e[:, 3]), np.maximum(e[:, 1], e[:, 3])
+            keep = (np.maximum(e[:, 0], e[:, 2]) >= x0 - m) \
+                & (hi >= y0 - m) & (lo <= y1 + m)
+            kept.append(np.column_stack([e, lo, hi])[keep])
+        if any(len(e) for e in kept):
+            out.append(kept)
+    return out
+
+
+def _row_edges(parts: list, cover: list, res: int) -> list:
+    """Per ``(cell, interior)`` of a geometry's cover, the ``__parts__``
+    value its exploded row carries: null on an interior cell (no refine),
+    every edge on the reserved cell -1 of a world-spanning region, else
+    the edges clipped to the cell (``_cell_edges``). A row's edges are a
+    subset of the geometry's, so it carries at most ~3x the WKB the row
+    already holds, and the refine walks only the edges near its cell."""
+    cells = np.array([c for c, _ in cover])
+    x0s, y0s, _, y1s = cell_bounds(cells, res)
+    world = cells < 0
+    x0s, y0s = np.where(world, -np.inf, x0s), np.where(world, -np.inf, y0s)
+    y1s = np.where(world, np.inf, y1s)
+    return [None if interior else
+            [[list(map(tuple, r.tolist())) for r in p]
+             for p in _cell_edges(parts, x0s[i], y0s[i], y1s[i])]
+            for i, (_, interior) in enumerate(cover)]
+
+
+def _native_refine(predicate: str, lon: str, lat: str) -> Column:
+    """The exact point-vs-region predicate over ``__parts__`` as ONE SQL
+    expression: ``locate_points_in_geometry``'s ray casting with the same
+    arithmetic in the same operation order, so it classifies every point
+    bit-identically. Per part: boundary = on some edge (collinear and
+    within the edge's bbox); inside = an odd crossing count of the +x ray
+    with the shell and an even one with every hole. The numpy kernel takes
+    the max code over parts, so interior-only predicates accept a point if
+    some part has it inside and not on its boundary, the others if some
+    part has it inside or on its boundary. ``xint`` divides only where the
+    edge spans the ray's y (ANSI mode raises on a division by zero)."""
+    x, y = (f"`{c.replace('`', '``')}`" for c in (lon, lat))
+    ax, ay, bx, by, y0, y1 = (f"__e.{f}" for f in _EDGE.fieldNames())
+    on_edge = (f"{y} >= {y0} AND {y} <= {y1}"
+               f" AND {x} >= least({ax}, {bx}) AND {x} <= greatest({ax}, {bx})"
+               f" AND ({bx} - {ax}) * ({y} - {ay}) - ({by} - {ay}) * ({x} - {ax})"
+               f" = 0.0D")
+    # the kernel's spans test (ay > y) != (by > y), i.e. y0 <= y < y1
+    spans = f"{y} >= {y0} AND {y} < {y1}"
+    hit = f"{ax} + ({y} - {ay}) * ({bx} - {ax}) / ({by} - {ay}) > {x}"
+
+    def odd(ring: str) -> str:
+        return (f"aggregate({ring}, false,"
+                f" (__c, __e) -> IF({spans}, __c != ({hit}), __c))")
+
+    boundary = f"exists(__p, __b -> exists(__b, __e -> {on_edge}))"
+    inside = (f"{odd('__p[0]')} AND NOT exists(slice(__p, 2, size(__p)),"
+              f" __r -> {odd('__r')})")
+    at = (f"{inside} AND NOT {boundary}"
+          if _POINT_PREDICATES[predicate] == frozenset("I")
+          else f"{inside} OR {boundary}")
+    return F.expr(f"`__int__` OR exists(`__parts__`, __p -> {at})")
+
+
 def _driver_cover_explode(regions: DataFrame, region_geom: str,
                           res: int) -> tuple[DataFrame, bool]:
     """Cover-cell explode of a TO-BE-BROADCAST region side, computed on
-    the driver. Returns ``(frame, all_rect)``.
+    the driver. Returns ``(frame, native)``.
 
     Scale contract: callers reach this only with ``broadcast_regions=
     True``, i.e. they have already asserted the frame fits in driver/
     executor memory — Spark's BroadcastExchange performs exactly this
     collect itself to build the broadcast relation, so no new memory or
-    distribution assumption is introduced. The result is a local
-    relation carrying the original columns plus (``__cell__``,
-    ``__int__``) and the geometry envelope (``__xmin__ .. __ymax__``,
-    folded into a codegen bbox pre-filter ahead of the Python refine),
-    identical row-for-row to the distributed
-    ``udf_cover_cells_classified`` + explode plan. ``all_rect`` is True
-    when every non-null geometry is an axis-aligned rectangle
-    (``_is_axis_rect``), in which case the envelope columns are not
-    merely necessary but EXACT and the caller may skip the Python
-    refine stage altogether."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from geomesa_spark.plans.planner import cell_cover_classified
+    distribution assumption is introduced. The result is a local relation
+    built from Arrow (no Python RDD, so reading it costs no job) carrying
+    the original columns plus (``__cell__``, ``__int__``), the geometry
+    envelope (``__xmin__ .. __ymax__``, a codegen bbox pre-filter ahead of
+    the refine) and, on boundary-cell rows, the geometry's polygon edges
+    that can decide a point of the cell (``__parts__``, part -> ring ->
+    edge, ``_row_edges``; null on interior-cell rows, which need no
+    refine). Its cells equal the distributed
+    ``udf_cover_cells_classified`` + explode plan's row-for-row.
+    ``native`` is False when some geometry has a non-polygon part: only
+    the pandas refine locates points against those, and every row's
+    ``__parts__`` is then null."""
+    from geomesa_spark.plans.planner import cell_cover_classified, local_frame
 
     frame_memo = _DRIVER_COVER_FRAMES.setdefault(regions, {})
     cached = frame_memo.get((region_geom, res))
     if cached is not None:
         return cached
 
-    spark = regions.sparkSession
-    all_rect = True
-    out_rows = []
+    gi = regions.columns.index(region_geom)
+    native = True
+    geoms = []
     for row in regions.collect():
-        d = row.asDict()
-        v = d[region_geom]
+        v = row[gi]
         key = (bytes(v), res) if v is not None else None
         hit = _DRIVER_COVER_MEMO.get(key) if key is not None else None
         if hit is None:
             if key is None:
-                c, env, rect = [(-1, False)], (None,) * 4, True
+                c, env, parts = [(-1, False)], (None,) * 4, []
             else:
                 g = gio.from_wkb(key[0])
                 cov, interior = cell_cover_classified(g, res=res)
                 c = ([(-1, False)] if cov is None or len(cov) == 0 else
                      [(int(cell), bool(i)) for cell, i in zip(cov, interior)])
                 env = tuple(float(b) for b in g.bounds())
-                rect = _is_axis_rect(g)
+                parts = _polygon_parts(g)
                 if len(_DRIVER_COVER_MEMO) < _DRIVER_COVER_MEMO_CAP:
-                    _DRIVER_COVER_MEMO[key] = (c, env, rect)
+                    _DRIVER_COVER_MEMO[key] = (c, env, parts)
         else:
-            c, env, rect = hit
-        all_rect = all_rect and rect
-        for cell, interior in c:
-            out_rows.append({**d, "__cell__": cell, "__int__": interior,
-                             "__xmin__": env[0], "__ymin__": env[1],
-                             "__xmax__": env[2], "__ymax__": env[3]})
+            c, env, parts = hit
+        native = native and parts is not None
+        geoms.append((row, c, env, parts))
+    rows = []
+    for row, c, env, parts in geoms:
+        edges = _row_edges(parts, c, res) if native else [None] * len(c)
+        rows += [(*row, cell, interior, *env, e)
+                 for (cell, interior), e in zip(c, edges)]
     schema = StructType(list(regions.schema.fields)
                         + [StructField("__cell__", LongType()),
                            StructField("__int__", BooleanType())]
                         + [StructField(f"__{b}__", DoubleType())
-                           for b in ("xmin", "ymin", "xmax", "ymax")])
-    out = spark.createDataFrame(out_rows, schema)
-    frame_memo[(region_geom, res)] = (out, all_rect)
-    return out, all_rect
+                           for b in ("xmin", "ymin", "xmax", "ymax")]
+                        + [StructField("__parts__", ArrayType(ArrayType(
+                            ArrayType(_EDGE))))])
+    out = local_frame(regions.sparkSession, rows, schema), native
+    frame_memo[(region_geom, res)] = out
+    return out
 
 
 def spatial_join(points: DataFrame, regions: DataFrame, *,
@@ -532,6 +646,13 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     st_within is interpreted as within(point, region). The point side keeps
     its partitioning when regions broadcast (zero shuffle of the big side).
 
+    ``broadcast_regions``: the region side is exploded on the driver into
+    an Arrow-built local relation and the exact refine is native ray
+    casting over its stored edges (``_native_refine``), so the plan has no
+    Python stage. Otherwise, and for a broadcast region set with a
+    non-polygon part, regions explode through a pandas cover UDF and
+    candidates refine through the pandas ``udf_refine_point``.
+
     ``salt``: duplicate each region row into ``salt`` copies and scatter
     points across them before the equi-join — explicit skew spreading, the
     reference's shard strategy (ShardStrategy.scala:42-80). Prefer AQE
@@ -542,16 +663,16 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     from geomesa_spark.cells.native import cell_expr
     pts = points.withColumn("__cell__",
                             cell_expr(point_lon, point_lat, res))
-    all_rect = False
+    native = False
     if broadcast_regions:
         # Explicit-broadcast build side: BroadcastExchange collects this
         # frame to the driver regardless, so computing the cover cells
         # DURING that collect costs the same memory while deleting an
         # entire Python-worker stage (pandas-UDF explode) that otherwise
-        # re-executes inside every query's broadcast build — measured
-        # ~0.9 s of the 1.4 s sf0.1 point-join wall. The distributed
-        # explode below remains the path for large (shuffled) region sides.
-        reg, all_rect = _driver_cover_explode(regions, region_geom, res)
+        # re-executes inside every query's broadcast build. The
+        # distributed explode below remains the path for large (shuffled)
+        # region sides.
+        reg, native = _driver_cover_explode(regions, region_geom, res)
     else:
         reg = regions.withColumn(
             "__cells__", udf_cover_cells_classified(res)(F.col(region_geom))) \
@@ -570,39 +691,23 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     if broadcast_regions:
         reg = F.broadcast(reg)
     joined = pts.join(reg, on=join_keys, how="inner")
-    has_env = "__xmin__" in joined.columns
-    if all_rect:
-        # every broadcast geometry is an axis-aligned rectangle: the
-        # exact predicate IS a coordinate comparison against the stored
-        # envelope (strict for interior-only predicates, closed when the
-        # boundary is accepted) — the whole join evaluates in
-        # whole-stage codegen with NO Python refine stage in the plan
-        strict = _POINT_PREDICATES[predicate] == frozenset("I")
-        lo = F.col(point_lon) > F.col("__xmin__") if strict \
-            else F.col(point_lon) >= F.col("__xmin__")
-        hi = F.col(point_lon) < F.col("__xmax__") if strict \
-            else F.col(point_lon) <= F.col("__xmax__")
-        blo = F.col(point_lat) > F.col("__ymin__") if strict \
-            else F.col(point_lat) >= F.col("__ymin__")
-        bhi = F.col(point_lat) < F.col("__ymax__") if strict \
-            else F.col(point_lat) <= F.col("__ymax__")
-        out = joined.where(lo & hi & blo & bhi)
-        return out.drop("__cell__", "__int__", "__xmin__", "__ymin__",
-                        "__xmax__", "__ymax__",
-                        *(["__salt__"] if salt and salt > 1 else []))
-    if has_env:
+    aux = ["__cell__", "__int__"] + (["__salt__"] if salt and salt > 1 else [])
+    if broadcast_regions:
         # closed-interval envelope containment is NECESSARY for every
         # accepted point location (I and B are both inside the closed
         # envelope), so this whole-stage-codegen filter rejects the bulk
-        # of the cell-join candidates before they reach the Arrow/Python
-        # refine stage — same discipline as the pair-join's
-        # _pair_bbox_condition
+        # of the cell-join candidates before the refine — same discipline
+        # as the pair-join's _pair_bbox_condition
         joined = joined.where(
             F.col("__xmin__").isNull() | (
                 (F.col(point_lon) >= F.col("__xmin__"))
                 & (F.col(point_lon) <= F.col("__xmax__"))
                 & (F.col(point_lat) >= F.col("__ymin__"))
                 & (F.col(point_lat) <= F.col("__ymax__"))))
+        aux += ["__xmin__", "__ymin__", "__xmax__", "__ymax__", "__parts__"]
+    if native:
+        return joined.where(
+            _native_refine(predicate, point_lon, point_lat)).drop(*aux)
     refine = udf_refine_point(predicate)
     # a point joined through an INTERIOR cover cell is provably at
     # location 'I', so the shortcut is valid only for predicates that
@@ -618,11 +723,7 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     else:
         out = joined.where(refine(F.col(point_lon), F.col(point_lat),
                                   F.col(region_geom)))
-    drop = ["__cell__", "__int__"] \
-        + (["__salt__"] if salt and salt > 1 else []) \
-        + (["__xmin__", "__ymin__", "__xmax__", "__ymax__"]
-           if has_env else [])
-    return out.drop(*drop)
+    return out.drop(*aux)
 
 
 def _pair_bbox_condition(predicate: str):

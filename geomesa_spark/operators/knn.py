@@ -33,7 +33,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType,
 from geomesa_spark.cells import PARTITION_RES, bbox_cover
 from geomesa_spark.cells.native import cell_expr
 from geomesa_spark.geo.measures import EARTH_MEAN_RADIUS_M, haversine_expr
-from geomesa_spark.plans.planner import int_predicate
+from geomesa_spark.plans.planner import int_predicate, local_frame
 
 _log = logging.getLogger(__name__)
 
@@ -65,16 +65,6 @@ QUERY_CELLS = StructType([StructField("query_id", StringType()),
                           StructField("qlon", DoubleType()),
                           StructField("qlat", DoubleType()),
                           StructField("__cell__", LongType())])
-
-
-def local_frame(spark, rows: list[tuple], schema: StructType) -> DataFrame:
-    """Python rows as a frame built from Arrow: a LocalRelation, so it
-    plans without a Python RDD and reading it costs no job."""
-    from pyspark.sql.conversion import LocalDataToArrowConversion
-    from pyspark.sql.pandas.types import to_arrow_schema
-    table = LocalDataToArrowConversion.convert(rows, schema, False) if rows \
-        else to_arrow_schema(schema).empty_table()
-    return spark.createDataFrame(table, schema)
 
 
 def _window_cells(qlon: float, qlat: float, w_m: float, res: int) -> list[int]:

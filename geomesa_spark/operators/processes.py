@@ -33,8 +33,16 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, StructField,
+                               StructType)
 
 from geomesa_spark.geo.measures import haversine_expr
+from geomesa_spark.plans.planner import local_frame
+
+ROUTE_SEGMENTS = StructType(
+    [StructField(c, IntegerType()) for c in ("route_id", "seg")]
+    + [StructField(c, DoubleType()) for c in (
+        "x1", "y1", "x2", "y2", "bminx", "bmaxx", "bminy", "bmaxy")])
 
 
 def point2point(df: DataFrame, *, group: str, sort: str,
@@ -192,12 +200,8 @@ def route_search(features: DataFrame,
     space (JTS DistanceOp's metric), measured in meters via haversine to
     that point. Output: (id, lon, lat, heading, route_id, seg, dist_m,
     route_heading) for matching features."""
-    spark = features.sparkSession
-    segs = route_segments(routes, buffer_m)
-    seg_df = spark.createDataFrame(
-        segs, "route_id int, seg int, x1 double, y1 double, "
-              "x2 double, y2 double, bminx double, bmaxx double, "
-              "bminy double, bmaxy double")
+    seg_df = local_frame(features.sparkSession,
+                         route_segments(routes, buffer_m), ROUTE_SEGMENTS)
     px, py = F.col(lon), F.col(lat)
     cand = features.select(id_col, lon, lat, heading).join(
         F.broadcast(seg_df),

@@ -31,8 +31,8 @@ from geomesa_spark.geo.measures import haversine_expr
 # Envelope.toWorld semantics, KNearestNeighborSearchProcess.scala:524-544);
 # a second local copy here once diverged from it, so share it instead
 from geomesa_spark.operators.knn import (QUERY_CELLS, _METRIC_DIST,
-                                         _METRIC_WINDOW_SLACK, _window_cells,
-                                         local_frame)
+                                         _METRIC_WINDOW_SLACK, _window_cells)
+from geomesa_spark.plans.planner import local_frame
 
 
 def proximity_join(points: DataFrame,

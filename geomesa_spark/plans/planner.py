@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from geomesa_spark.cells import PARTITION_RES, bbox_cover, cell_bounds
 from geomesa_spark.geo.model import Geometry, Polygon, flatten
@@ -46,6 +47,17 @@ def int_predicate(col: str, items) -> Column:
             else f"({c} >= {int(lo)}L AND {c} <= {int(hi)}L)"
             for lo, hi in items))
     return F.expr(f"{c} IN ({', '.join(str(int(v)) for v in items)})")
+
+
+def local_frame(spark, rows: list, schema: StructType) -> DataFrame:
+    """Python rows (tuples, or dicts keyed by field name) as a frame built
+    from Arrow: a LocalRelation, so it plans without a Python RDD and
+    reading it costs no job."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    table = LocalDataToArrowConversion.convert(rows, schema, False) if rows \
+        else to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 def cell_cover_of_geometry(geom: Geometry, res: int = PARTITION_RES,

@@ -57,6 +57,34 @@ class TestBuilderTwins:
         n = pq.read_metadata(f"{SF}/embeddings.parquet").num_rows
         assert read_lsh_meta(p)["n_planes"] == default_n_planes(n)
 
+    def test_local_rebuild_drops_stale_files(self, spark, tmp_path):
+        """Rebuilding over an index of another plane count and partition
+        fan-out leaves only the new build's files: a stale ``pt=*/``
+        part file would mix old buckets into every candidate set."""
+        import shutil
+
+        from geomesa_spark.ml.similarity import (build_lsh_index_local,
+                                                 read_lsh_meta)
+        p, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+        build_lsh_index_local(f"{SF}/embeddings.parquet", p,
+                              n_planes=3, n_tables=4, bucket_partitions=16)
+        stale = os.path.join(p, "pt=0", "part-00000.parquet")
+        shutil.copy(stale, os.path.join(p, "pt=0", "part-00001-old.parquet"))
+        build_lsh_index_local(f"{SF}/embeddings.parquet", p,
+                              n_planes=5, n_tables=4, bucket_partitions=8)
+        build_lsh_index_local(f"{SF}/embeddings.parquet", fresh,
+                              n_planes=5, n_tables=4, bucket_partitions=8)
+
+        def files(root):
+            return sorted(os.path.relpath(os.path.join(d, f), root)
+                          for d, _, fs in os.walk(root) for f in fs)
+        assert files(p) == files(fresh)
+        assert not os.path.exists(os.path.join(p, "pt=8"))
+        assert read_lsh_meta(p)["n_planes"] == 5
+        assert sorted(tuple(r) for r in spark.read.parquet(p).collect()) \
+            == sorted(tuple(r) for r in spark.read.parquet(fresh).collect())
+        assert not [d for d in os.listdir(tmp_path) if ".building-" in d]
+
 
 class TestProbeSidecar:
     def test_sidecar_probes_equal_engine_probes(self, spark, emb,
@@ -121,6 +149,20 @@ class TestParquetNumRows:
         pq.write_table(pa.table({"x": [3]}), str(d / "part-1.parquet"))
         (d / "_SUCCESS").touch()  # non-parquet marker files are skipped
         assert entry._parquet_num_rows(str(d)) == 3
+
+    def test_partitioned_directory_raises(self, tmp_path):
+        """A hive-layout directory has no top-level parquet files; its
+        footer count must fail loudly, naming the path, not report 0."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        import __spark_entry__ as entry
+        d = tmp_path / "hive.parquet"
+        (d / "pt=0").mkdir(parents=True)
+        pq.write_table(pa.table({"x": [1, 2]}),
+                       str(d / "pt=0" / "part-0.parquet"))
+        with pytest.raises(ValueError, match="hive.parquet"):
+            entry._parquet_num_rows(str(d))
 
 
 class TestRoutedOracle:

@@ -31,6 +31,37 @@ class TestJoinPlans:
         join_part = plan.split("BroadcastExchange")[0]
         assert "Exchange hashpartitioning" not in join_part
 
+    def test_broadcast_point_join_is_pure_jvm(self, spark):
+        """A broadcast join over star polygons (non-rectangles, which
+        need the exact refine) has no Python eval node, and its
+        broadcast side is a local relation, not a Python RDD."""
+        import numpy as np
+
+        from geomesa_spark.geo.io import to_wkb
+        from geomesa_spark.geo.model import Polygon
+        from geomesa_spark.operators.join import spatial_join
+
+        ang = np.linspace(0.0, 2 * np.pi, 9)[:-1]
+        rad = np.where(np.arange(8) % 2 == 0, 6.0, 2.0)
+        stars = [Polygon(np.column_stack([cx + rad * np.cos(ang),
+                                          cy + rad * np.sin(ang)]))
+                 for cx, cy in ((0.0, 0.0), (30.0, 10.0))]
+        regions = spark.createDataFrame(
+            [(i, bytearray(to_wkb(g))) for i, g in enumerate(stars)],
+            "region_id long, geom binary")
+        pts = spark.range(400).select(
+            F.col("id"), (F.col("id") % 40 - 5.0).alias("lon"),
+            (F.col("id") / 40 - 5.0).alias("lat"))
+        df = spatial_join(pts, regions, predicate="st_contains",
+                          broadcast_regions=True)
+        plan = _plan(df)
+        assert "ArrowEvalPython" not in plan
+        assert "BatchEvalPython" not in plan
+        build = plan.split("BroadcastExchange")[1]
+        assert "LocalTableScan" in build
+        assert "ExistingRDD" not in build
+        assert df.count() > 0
+
     def test_attribute_join_is_broadcast_or_smj(self, spark, entry):
         plan = _plan(entry.q_join_pushdown(spark, SF))
         assert "Join" in plan

@@ -256,10 +256,10 @@ class TestRefineScreenBlindSpots:
 
 
 class TestRectFastPath:
-    """Broadcast joins over axis-aligned rectangles fold the exact
-    predicate into codegen coordinate comparisons (no Python refine
-    stage in the plan); any non-rectangle in the set falls back to the
-    envelope-prefiltered Python refine with identical results."""
+    """Broadcast joins refine natively (no Python stage in the plan):
+    rectangles are ordinary polygons of the ray-cast refine, with the
+    exact boundary semantics, and sets mixing them with other polygons
+    agree with the distributed (pandas-refine) plan."""
 
     def _pts(self, spark):
         rows = [(1, 5.0, 5.0),    # interior
@@ -291,10 +291,9 @@ class TestRectFastPath:
                                 broadcast_regions=True).collect()}
             assert got == want, pred
 
-    def test_mixed_set_falls_back_and_agrees(self, spark):
-        # one rect + one triangle: all_rect is False, so the broadcast
-        # path must route through the exact refine and agree with the
-        # distributed (non-broadcast) plan
+    def test_mixed_set_agrees_with_distributed(self, spark):
+        # one rect + one triangle: the broadcast path's native refine
+        # must agree with the distributed (non-broadcast) plan
         tri = Polygon([[0, 0], [10, 0], [0, 10], [0, 0]])
         regs = spark.createDataFrame(
             [("R", bytearray(to_wkb(box_poly(0.0, 0.0, 10.0, 10.0)))),
@@ -336,5 +335,95 @@ class TestRectFastPath:
         # NOTE: a self-intersecting ring is an INVALID polygon, so the
         # exact predicate's classification of individual points is
         # engine-defined (as in JTS) — the contract asserted here is
-        # that the broadcast plan routes through the SAME refine as the
-        # distributed plan instead of folding to envelope comparisons.
+        # that the broadcast plan classifies exactly as the distributed
+        # plan does instead of folding to envelope comparisons.
+
+
+class TestNativeRefineParity:
+    """The broadcast join's native ray-cast refine against the
+    distributed plan's pandas refine (``locate_points_in_geometry``):
+    the same rows for every predicate, on every vertex and edge midpoint
+    (the boundary, where operation order decides) and random points
+    around holes, a multipolygon, a duplicated vertex, a bowtie and
+    random star polygons, one of 240 vertices."""
+
+    @staticmethod
+    def _regions():
+        from geomesa_spark.geo.model import MultiPolygon
+        rng = np.random.default_rng(3)
+        polys = [
+            Polygon([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],
+                    holes=[[[3, 3], [6, 3], [6, 6], [3, 6], [3, 3]]]),
+            MultiPolygon([Polygon([[20, 0], [25, 0], [25, 5], [20, 0]]),
+                          Polygon([[30, 0], [35, 5], [30, 5], [30, 0]])]),
+            Polygon([[40, 0], [45, 0], [45, 0], [45, 5], [40, 5],
+                     [40, 0]]),                        # duplicated vertex
+            Polygon([[50, 0], [60, 10], [60, 0], [50, 10], [50, 0]]),
+        ]
+        for _ in range(4):  # stars: vertices at sorted angles
+            cx, cy = rng.uniform(-150, 150), rng.uniform(-60, 60)
+            k = int(rng.integers(6, 13))
+            ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+            rad = rng.uniform(1.0, 6.0, k)
+            polys.append(Polygon(np.column_stack(
+                [cx + rad * np.cos(ang), cy + rad * np.sin(ang)])))
+        ang = np.sort(rng.uniform(0, 2 * np.pi, 240))  # many edges a cell
+        rad = rng.uniform(5.0, 15.0, 240)
+        polys.append(Polygon(np.column_stack(
+            [100.0 + rad * np.cos(ang), 30.0 + rad * np.sin(ang)])))
+        return polys
+
+    @pytest.mark.parametrize("res", [4, 7])
+    def test_broadcast_matches_distributed(self, spark, res):
+        # at res 7 (2.8 x 1.4 degree cells) every region spans many cells,
+        # so each boundary row carries only the edges clipped to its cell
+        from geomesa_spark.geo.model import flatten
+        polys = self._regions()
+        rng = np.random.default_rng(4)
+        pts = []
+        for g in polys:
+            for part in flatten(g):
+                for ring in part.rings():
+                    pts += [tuple(v) for v in ring[:-1]]
+                    pts += [tuple(v) for v in (ring[:-1] + ring[1:]) / 2.0]
+            x0, y0, x1, y1 = g.bounds()
+            pts += list(zip(rng.uniform(x0 - 1, x1 + 1, 150),
+                            rng.uniform(y0 - 1, y1 + 1, 150)))
+        pdf = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+            "id long, lon double, lat double")
+        rdf = spark.createDataFrame(
+            [(i, bytearray(to_wkb(g))) for i, g in enumerate(polys)],
+            "region_id long, geom binary")
+        for pred in ("st_contains", "st_within", "st_covers",
+                     "st_coveredBy", "st_intersects"):
+            bc = spatial_join(pdf, rdf, predicate=pred, res=res,
+                              broadcast_regions=True)
+            assert "EvalPython" not in \
+                bc._jdf.queryExecution().executedPlan().toString()
+            got = {(r.id, r.region_id) for r in bc.collect()}
+            want = {(r.id, r.region_id) for r in spatial_join(
+                pdf, rdf, predicate=pred, res=res).collect()}
+            assert got == want, pred
+            assert got, pred
+
+    def test_non_polygon_part_keeps_pandas_refine(self, spark):
+        """A region set with a non-polygon part takes the pandas refine
+        on the broadcast path too, and agrees with the distributed one."""
+        from geomesa_spark.geo.model import GeometryCollection
+        gc = GeometryCollection([
+            Polygon([[0, 0], [10, 0], [0, 10], [0, 0]]), Point(20.0, 20.0)])
+        rdf = spark.createDataFrame([("G", bytearray(to_wkb(gc)))],
+                                    "region_id string, geom binary")
+        pdf = spark.createDataFrame(
+            [(1, 2.0, 2.0), (2, 5.0, 5.0), (3, 9.0, 9.0)],
+            "id long, lon double, lat double")
+        for pred in ("st_contains", "st_intersects"):
+            bc = spatial_join(pdf, rdf, predicate=pred,
+                              broadcast_regions=True)
+            assert "ArrowEvalPython" in \
+                bc._jdf.queryExecution().executedPlan().toString()
+            got = {(r.id, r.region_id) for r in bc.collect()}
+            want = {(r.id, r.region_id) for r in
+                    spatial_join(pdf, rdf, predicate=pred).collect()}
+            assert got == want, pred
