@@ -415,8 +415,7 @@ def _ivf_oracle_entry() -> dict[str, str]:
     fixtures absent, cache dir read-only — degrade THAT entry to
     rows-only instead of taking down oracle retrieval for every other
     query, and say so on stderr (a silent downgrade hides a red gate)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR") \
-        or _LAST_QUERY_SF_DIR or "/root/testdata/sf0.01"
+    sf_dir = _oracle_sf_dir()
     try:
         return {"ivf_topk": _ivf_oracle_sql(
             _ensure_ivf_oracle_index(sf_dir), _IVF_NPROBE)}
@@ -671,21 +670,21 @@ def q_density_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z2 cell ids computed by the vectorized kernel, aggregated per cell —
-    checked against a bit-by-bit SQL reimplementation of the Morton code."""
-    from geomesa_spark.operators.join import udf_point_cell
+    """Z2 cell ids computed by the native Catalyst bit-op expression
+    (``cells.native.cell_expr``), aggregated per cell — checked against a
+    bit-by-bit SQL reimplementation of the Morton code. The numpy kernel
+    it mirrors (``cells.z2.cell_id``) is held to it by
+    tests/test_cells_native.py."""
+    from geomesa_spark.cells.native import cell_expr
     pts = _events_points(spark, sf_dir)
-    out = pts.withColumn("cell", udf_point_cell("lon", "lat")) \
-             .groupBy("cell").agg(F.count("*").alias("n"))
-    return out
+    return pts.withColumn("cell", cell_expr("lon", "lat")) \
+        .groupBy("cell").agg(F.count("*").alias("n"))
 
 
 def q_bbox_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned bbox scan: cover filter + exact refine. The cell
     column is the NATIVE Catalyst bit-op expression (cells/native.py), not
-    a Python UDF — zero Python-worker round-trip on the hot scan path
-    (q_cell_assignment keeps the pandas kernel on purpose: it is the
-    kernel-vs-SQL-oracle cross-check)."""
+    a Python UDF — zero Python-worker round-trip on the hot scan path."""
     from geomesa_spark.cells import PARTITION_RES
     from geomesa_spark.cells.native import cell_expr
     from geomesa_spark.plans.planner import prune_by_geometry

@@ -9,8 +9,6 @@ base-32 with 5 bits per character.
 
 from __future__ import annotations
 
-import numpy as np
-
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 _B32_INV = {c: i for i, c in enumerate(_BASE32)}
 
@@ -102,10 +100,3 @@ def geohash_expr(lon, lat, prec_bits: int):
                   .bitwiseAND(F.lit(31)) + 1).cast("int"), F.lit(1))
         for c in range(nchars)]
     return F.concat(*chars)
-
-
-def encode_vec(lon, lat, prec_bits: int) -> list[str]:
-    """Batch encode (per-row python on short strings; fine for output cols)."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    return [encode(float(x), float(y), prec_bits) for x, y in zip(lon, lat)]

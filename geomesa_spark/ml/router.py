@@ -52,7 +52,6 @@ fraction keeps shrinking.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -193,12 +192,3 @@ def ann_topk_routed(corpus: DataFrame, queries: DataFrame, k: int, *,
     from geomesa_spark.ml.similarity import cosine_topk
     return cosine_topk(corpus, queries, k, id_col=id_col,
                        vec_col=vec_col, query_id_col=query_id_col)
-
-
-def default_multipliers() -> dict:
-    """The calibrated constants, exposed for tests/docs."""
-    return {"exact_overhead_s": EXACT_OVERHEAD_S,
-            "lsh_overhead_s": LSH_OVERHEAD_S,
-            "ivf_overhead_s": IVF_OVERHEAD_S,
-            "exact_per_row_s": EXACT_PER_ROW_S,
-            "index_per_row_s": INDEX_PER_ROW_S}

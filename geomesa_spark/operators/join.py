@@ -37,10 +37,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
                                StructField, StructType)
 
-from geomesa_spark.cells import PARTITION_RES, cell_bounds, cell_id
+from geomesa_spark.cells import PARTITION_RES, cell_bounds
 from geomesa_spark.geo import io as gio
 from geomesa_spark.geo import predicates as gp
-from geomesa_spark.plans.planner import cell_cover_of_geometry
+from geomesa_spark.plans.planner import cell_cover_classified, local_frame
 
 # predicate -> accepted point locations (I interior, B boundary) for
 # point-vs-region joins; key is predicate(region, point)
@@ -116,65 +116,44 @@ def _flatten(geom):
 
 # ------------------------------------------------------------------ UDFs
 
-@F.pandas_udf(LongType())
-def udf_point_cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(cell_id(lon.to_numpy(dtype=np.float64),
-                             lat.to_numpy(dtype=np.float64), PARTITION_RES))
+def _geometry_cover(g, res: int) -> tuple:
+    """A region's explode row: its classified cover as parallel lists of
+    cells and interior flags (``cell_cover_classified``), and its envelope.
+    A null geometry, or one whose cover is empty (wholly outside the
+    world), gets the reserved cell -1, which only invalid points carry."""
+    if g is None:
+        return [-1], [False], None, None, None, None
+    cells, interior = cell_cover_classified(g, res=res)
+    env = tuple(float(b) for b in g.bounds())
+    if not len(cells):
+        return [-1], [False], *env
+    return cells.tolist(), interior.tolist(), *env
 
 
-def udf_cover_cells(res: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def cover(wkb: pd.Series) -> pd.Series:
-        memo: dict[bytes, list[int]] = {}
-        out = []
+_COVER = StructType([
+    StructField("cells", ArrayType(LongType())),
+    StructField("interior", ArrayType(BooleanType())),
+    *(StructField(b, DoubleType()) for b in ("xmin", "ymin", "xmax", "ymax"))])
+
+
+def udf_cover(res: int):
+    """Per geometry, ``_geometry_cover`` as a ``_COVER`` struct, memoized
+    per distinct WKB within a batch. Callers select the fields they read:
+    the cells to explode, the interior flags (a point joined through an
+    interior cell skips the exact refine) and the envelope (a JVM bbox
+    pre-reject ahead of the refine)."""
+    @F.pandas_udf(_COVER)
+    def cover(wkb: pd.Series) -> pd.DataFrame:
+        memo: dict[bytes | None, tuple] = {}
+        rows = []
         for v in wkb:
-            if v is None:
-                out.append([-1])
-                continue
-            key = bytes(v)
+            key = None if v is None else bytes(v)
             c = memo.get(key)
             if c is None:
-                g = gio.from_wkb(key)
-                cov = cell_cover_of_geometry(g, res=res)
-                c = [-1] if cov is None or len(cov) == 0 else [int(i) for i in cov]
-                memo[key] = c
-            out.append(c)
-        return pd.Series(out)
-    return cover
-
-
-def udf_cover_cells_classified(res: int):
-    """Cover cells tagged interior/boundary (cell_cover_classified): a
-    point joined through an INTERIOR cell is provably in the region's
-    interior, so the exact refine is skipped for it — the reference's
-    contained-range shortcut applied to the join."""
-    from geomesa_spark.plans.planner import cell_cover_classified
-
-    schema = ArrayType(StructType([
-        StructField("cell", LongType()),
-        StructField("interior", BooleanType())]))
-
-    @F.pandas_udf(schema)
-    def cover(wkb: pd.Series) -> pd.Series:
-        memo: dict[bytes, list] = {}
-        out = []
-        for v in wkb:
-            if v is None:
-                out.append([(-1, False)])
-                continue
-            key = bytes(v)
-            c = memo.get(key)
-            if c is None:
-                g = gio.from_wkb(key)
-                cov, interior = cell_cover_classified(g, res=res)
-                if cov is None or len(cov) == 0:
-                    c = [(-1, False)]
-                else:
-                    c = [(int(cell), bool(i))
-                         for cell, i in zip(cov, interior)]
-                memo[key] = c
-            out.append(c)
-        return pd.Series(out)
+                c = memo[key] = _geometry_cover(
+                    None if key is None else gio.from_wkb(key), res)
+            rows.append(c)
+        return pd.DataFrame(rows, columns=_COVER.fieldNames())
     return cover
 
 
@@ -208,43 +187,6 @@ def udf_refine_point(predicate: str):
 _PAIR_PREDICATES = ("st_contains", "st_within", "st_covers", "st_coveredBy",
                     "st_intersects", "st_overlaps", "st_touches",
                     "st_crosses", "st_equals")
-
-
-def udf_cover_cells_bbox(res: int):
-    """Cover cells plus the geometry envelope in one parse (memoized per
-    distinct WKB). The envelope columns let the pair join push a bbox
-    pre-reject into the JVM join condition — candidate pairs that can't
-    satisfy the predicate are dropped inside whole-stage codegen and
-    never cross the Arrow boundary (the in-cell candidate pruning the
-    reference's sweepline gets from its per-cell x-interval index,
-    GeoMesaJoinRelation.sweeplineJoin:41-55)."""
-    schema = StructType([
-        StructField("cells", ArrayType(LongType())),
-        StructField("xmin", DoubleType()), StructField("ymin", DoubleType()),
-        StructField("xmax", DoubleType()), StructField("ymax", DoubleType())])
-
-    @F.pandas_udf(schema)
-    def cover(wkb: pd.Series) -> pd.DataFrame:
-        memo: dict[bytes, tuple] = {}
-        rows = []
-        for v in wkb:
-            if v is None:
-                rows.append(([-1], None, None, None, None))
-                continue
-            key = bytes(v)
-            c = memo.get(key)
-            if c is None:
-                g = gio.from_wkb(key)
-                cov = cell_cover_of_geometry(g, res=res)
-                cells = [-1] if cov is None or len(cov) == 0 \
-                    else [int(i) for i in cov]
-                x0, y0, x1, y1 = g.bounds()
-                c = (cells, float(x0), float(y0), float(x1), float(y1))
-                memo[key] = c
-            rows.append(c)
-        return pd.DataFrame(rows, columns=["cells", "xmin", "ymin",
-                                           "xmax", "ymax"])
-    return cover
 
 
 def _geom_vertices(geom) -> np.ndarray:
@@ -414,12 +356,11 @@ def udf_refine_pairs(predicate: str):
 
 # cross-query cover/envelope/edge memo for the driver-side broadcast
 # explode: region dims are static (the same frame feeds every query of a
-# session), so the per-geometry cover computation (~4 ms each) is a
+# session), so the per-geometry cover computation (~1 ms each) is a
 # plan-cache hit after the first query. Bounded like a plan cache; an
-# entry holds one geometry's cells, envelope and polygon edges (float64
-# arrays, 32 B an edge against the WKB key's 16 B a vertex).
-_DRIVER_COVER_MEMO: dict[tuple[bytes, int],
-                         tuple[list, tuple, list | None]] = {}
+# entry holds one geometry's ``_geometry_cover`` row and polygon edges
+# (float64 arrays, 32 B an edge against the WKB key's 16 B a vertex).
+_DRIVER_COVER_MEMO: dict[tuple[bytes, int], tuple[tuple, list | None]] = {}
 _DRIVER_COVER_MEMO_CAP = 65536
 
 # frame-level memo: when the SAME region DataFrame object is joined
@@ -513,22 +454,23 @@ def _cell_edges(parts: list, x0: float, y0: float, y1: float) -> list:
     return out
 
 
-def _row_edges(parts: list, cover: list, res: int) -> list:
-    """Per ``(cell, interior)`` of a geometry's cover, the ``__parts__``
-    value its exploded row carries: null on an interior cell (no refine),
-    every edge on the reserved cell -1 of a world-spanning region, else
+def _row_edges(parts: list, cells: list, interior: list, res: int) -> list:
+    """Per cell of a geometry's cover, the ``__parts__`` value its
+    exploded row carries: null on an interior cell (no refine), every edge
+    on the reserved cell -1 of a region wholly outside the world, else
     the edges clipped to the cell (``_cell_edges``). A row's edges are a
     subset of the geometry's, so it carries at most ~3x the WKB the row
     already holds, and the refine walks only the edges near its cell."""
-    cells = np.array([c for c, _ in cover])
+    cells = np.array(cells)
     x0s, y0s, _, y1s = cell_bounds(cells, res)
-    world = cells < 0
-    x0s, y0s = np.where(world, -np.inf, x0s), np.where(world, -np.inf, y0s)
-    y1s = np.where(world, np.inf, y1s)
-    return [None if interior else
+    outside = cells < 0
+    x0s = np.where(outside, -np.inf, x0s)
+    y0s = np.where(outside, -np.inf, y0s)
+    y1s = np.where(outside, np.inf, y1s)
+    return [None if inner else
             [[list(map(tuple, r.tolist())) for r in p]
              for p in _cell_edges(parts, x0s[i], y0s[i], y1s[i])]
-            for i, (_, interior) in enumerate(cover)]
+            for i, inner in enumerate(interior)]
 
 
 def _native_refine(predicate: str, lon: str, lat: str) -> Column:
@@ -581,13 +523,10 @@ def _driver_cover_explode(regions: DataFrame, region_geom: str,
     the refine) and, on boundary-cell rows, the geometry's polygon edges
     that can decide a point of the cell (``__parts__``, part -> ring ->
     edge, ``_row_edges``; null on interior-cell rows, which need no
-    refine). Its cells equal the distributed
-    ``udf_cover_cells_classified`` + explode plan's row-for-row.
-    ``native`` is False when some geometry has a non-polygon part: only
-    the pandas refine locates points against those, and every row's
-    ``__parts__`` is then null."""
-    from geomesa_spark.plans.planner import cell_cover_classified, local_frame
-
+    refine). Its cells are the distributed plan's: both explode
+    ``_geometry_cover``. ``native`` is False when some geometry has a
+    non-polygon part: only the pandas refine locates points against
+    those, and every row's ``__parts__`` is then null."""
     frame_memo = _DRIVER_COVER_FRAMES.setdefault(regions, {})
     cached = frame_memo.get((region_geom, res))
     if cached is not None:
@@ -601,26 +540,20 @@ def _driver_cover_explode(regions: DataFrame, region_geom: str,
         key = (bytes(v), res) if v is not None else None
         hit = _DRIVER_COVER_MEMO.get(key) if key is not None else None
         if hit is None:
-            if key is None:
-                c, env, parts = [(-1, False)], (None,) * 4, []
-            else:
-                g = gio.from_wkb(key[0])
-                cov, interior = cell_cover_classified(g, res=res)
-                c = ([(-1, False)] if cov is None or len(cov) == 0 else
-                     [(int(cell), bool(i)) for cell, i in zip(cov, interior)])
-                env = tuple(float(b) for b in g.bounds())
-                parts = _polygon_parts(g)
-                if len(_DRIVER_COVER_MEMO) < _DRIVER_COVER_MEMO_CAP:
-                    _DRIVER_COVER_MEMO[key] = (c, env, parts)
-        else:
-            c, env, parts = hit
-        native = native and parts is not None
-        geoms.append((row, c, env, parts))
+            g = None if key is None else gio.from_wkb(key[0])
+            hit = (_geometry_cover(g, res),
+                   [] if g is None else _polygon_parts(g))
+            if key is not None \
+                    and len(_DRIVER_COVER_MEMO) < _DRIVER_COVER_MEMO_CAP:
+                _DRIVER_COVER_MEMO[key] = hit
+        native = native and hit[1] is not None
+        geoms.append((row, *hit))
     rows = []
-    for row, c, env, parts in geoms:
-        edges = _row_edges(parts, c, res) if native else [None] * len(c)
-        rows += [(*row, cell, interior, *env, e)
-                 for (cell, interior), e in zip(c, edges)]
+    for row, (cells, interior, *env), parts in geoms:
+        edges = _row_edges(parts, cells, interior, res) if native \
+            else [None] * len(cells)
+        rows += [(*row, cell, inner, *env, e)
+                 for cell, inner, e in zip(cells, interior, edges)]
     schema = StructType(list(regions.schema.fields)
                         + [StructField("__cell__", LongType()),
                            StructField("__int__", BooleanType())]
@@ -675,11 +608,11 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         reg, native = _driver_cover_explode(regions, region_geom, res)
     else:
         reg = regions.withColumn(
-            "__cells__", udf_cover_cells_classified(res)(F.col(region_geom))) \
-            .withColumn("__c__", F.explode("__cells__")) \
-            .withColumn("__cell__", F.col("__c__.cell")) \
-            .withColumn("__int__", F.col("__c__.interior")) \
-            .drop("__cells__", "__c__")
+            "__cv__", udf_cover(res)(F.col(region_geom))) \
+            .select("*", F.posexplode("__cv__.cells")
+                    .alias("__i__", "__cell__")) \
+            .withColumn("__int__", F.col("__cv__.interior")[F.col("__i__")]) \
+            .drop("__cv__", "__i__")
     if salt and salt > 1:
         reg = reg.withColumn("__salt__", F.explode(F.array(
             *[F.lit(i) for i in range(salt)])))
@@ -750,21 +683,17 @@ def _pair_candidates(left: DataFrame, right: DataFrame, *,
     """Candidate pairs of the cell equi-join AFTER the JVM envelope
     pre-reject but BEFORE the exact Python refine — exposed so tests can
     assert the exact-predicate workload is ≪ n² on dense cells."""
-    cover = udf_cover_cells_bbox(res)
-    lf = (left.withColumn("__cb__", cover(F.col(left_geom)))
-              .withColumn("__lcell__", F.explode("__cb__.cells"))
-              .withColumn("__lx0__", F.col("__cb__.xmin"))
-              .withColumn("__ly0__", F.col("__cb__.ymin"))
-              .withColumn("__lx1__", F.col("__cb__.xmax"))
-              .withColumn("__ly1__", F.col("__cb__.ymax"))
-              .drop("__cb__"))
-    rf = (right.withColumn("__cb__", cover(F.col(right_geom)))
-               .withColumn("__rcell__", F.explode("__cb__.cells"))
-               .withColumn("__rx0__", F.col("__cb__.xmin"))
-               .withColumn("__ry0__", F.col("__cb__.ymin"))
-               .withColumn("__rx1__", F.col("__cb__.xmax"))
-               .withColumn("__ry1__", F.col("__cb__.ymax"))
-               .drop("__cb__"))
+    cover = udf_cover(res)
+
+    def explode(df: DataFrame, geom: str, s: str) -> DataFrame:
+        return df.withColumn("__cv__", cover(F.col(geom))).select(
+            "*", F.explode("__cv__.cells").alias(f"__{s}cell__"),
+            *(F.col(f"__cv__.{b}").alias(f"__{s}{a}__") for a, b in
+              (("x0", "xmin"), ("y0", "ymin"), ("x1", "xmax"),
+               ("y1", "ymax")))).drop("__cv__")
+
+    lf = explode(left, left_geom, "l")
+    rf = explode(right, right_geom, "r")
     if broadcast_right:
         rf = F.broadcast(rf)
     cond = (F.col("__lcell__") == F.col("__rcell__")) \

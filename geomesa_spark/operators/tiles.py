@@ -25,19 +25,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType
 
-from geomesa_spark.cells import PARTITION_RES, cell_bounds, cell_id
+from geomesa_spark.cells import PARTITION_RES, cell_bounds
 from geomesa_spark.raster.codec import decode_image, mean_pool
-
-
-def udf_cell(res: int):
-    """Factory: (lon, lat) -> cell id at the given resolution."""
-    @F.pandas_udf(LongType())
-    def cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_id(lon.to_numpy(dtype=np.float64),
-                                 lat.to_numpy(dtype=np.float64), res))
-    return cell
 
 
 def assign_tiles(df: DataFrame, *, lon: str = "lon", lat: str = "lat",
@@ -51,11 +41,12 @@ def assign_tiles(df: DataFrame, *, lon: str = "lon", lat: str = "lat",
 def assign_tiles_footprint(df: DataFrame, *, wkb_col: str = "geom",
                            res: int = PARTITION_RES,
                            tile_col: str = "tile") -> DataFrame:
-    """Footprint path: explode into every intersecting tile (duplication
+    """Footprint path: explode into every tile the footprint's classified
+    cover holds, the whole grid for a world-spanning one (duplication
     semantics of gridIdMapper; consumers dedupe on (id, tile) pairs)."""
-    from geomesa_spark.operators.join import udf_cover_cells
-    return df.withColumn(tile_col,
-                         F.explode(udf_cover_cells(res)(F.col(wkb_col))))
+    from geomesa_spark.operators.join import udf_cover
+    return df.withColumn(tile_col, F.explode(
+        udf_cover(res)(F.col(wkb_col)).getField("cells")))
 
 
 def image_features(images: DataFrame) -> DataFrame:

@@ -9,11 +9,18 @@ parquet partition pruning handles natively. The exact predicate then refines
 the over-selecting cover downstream (strict-bbox semantics,
 Z2IndexKeySpace.useFullFilter:126-138).
 
-Short-circuits mirrored from the reference (Z2IndexKeySpace.scala:84-87,
+One cover serves every caller (``cell_cover_classified``): the geometry's
+segments, extracted once, classify the cells of its bbox cover with one
+vectorized edge test, no per-cell polygon test. A cell is kept when a
+segment touches it or its centre is interior, and flagged interior when
+no segment touches it and its centre is. Joins and tile footprints
+explode the whole classified cover. Filters take its cells behind the
+short-circuits mirrored from the reference (Z2IndexKeySpace.scala:84-87,
 FilterHelper.isFilterWholeWorld:44-51):
 - query disjoint from the world -> empty scan,
 - whole-world query -> no partition filter at all,
-- cover exceeding the range budget -> coarsen, never fail the query.
+- cover exceeding the range budget -> coarsen, and past 4x the budget
+  no partition filter; never fail the query.
 """
 
 from __future__ import annotations
@@ -22,10 +29,9 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
 
-from geomesa_spark.cells import PARTITION_RES, bbox_cover, cell_bounds
-from geomesa_spark.geo.model import Geometry, Polygon, flatten
-from geomesa_spark.geo.predicates import disjoint as geo_disjoint
-from geomesa_spark.geo.predicates import intersects as geo_intersects
+from geomesa_spark.cells import (PARTITION_RES, bbox_cover, cell_bounds,
+                                 z_decode)
+from geomesa_spark.geo.model import Geometry, LineString, Polygon, flatten
 
 _WORLD_BOUNDS = (-180.0, -90.0, 180.0, 90.0)
 DEFAULT_MAX_COVER = 4096  # range budget, analog of ScanRangesTarget
@@ -61,127 +67,150 @@ def local_frame(spark, rows: list, schema: StructType) -> DataFrame:
 
 
 def cell_cover_of_geometry(geom: Geometry, res: int = PARTITION_RES,
-                           max_cells: int = DEFAULT_MAX_COVER,
-                           exact: bool = True) -> np.ndarray | None:
-    """Cells at ``res`` overlapping ``geom``; None means "whole world, do
-    not filter". Over-selects, never under-selects.
+                           max_cells: int = DEFAULT_MAX_COVER
+                           ) -> np.ndarray | None:
+    """Cells at ``res`` whose closed rectangle meets ``geom``, as a
+    partition filter: the cells of ``cell_cover_classified`` behind the
+    filter short-circuits. None means "do not filter": a whole-world
+    geometry, or a cover past the range budget. Over-selects, never
+    under-selects.
 
-    ``exact``: drop cover cells whose rectangle does not intersect the
-    geometry (tighter than bbox for polygons — the XZ/polygon-decomposition
-    trick of the reference, GeometryUtils.bounds + Z2IndexKeySpace:89-95).
+    Budget: when the bbox cover at ``res`` exceeds ``max_cells``, the bbox
+    is coarsened until it fits, and the query is pruned only if those
+    coarse cells re-expanded to ``res`` stay within one coarsening step of
+    slack (4x): past that, a six-figure ``IN`` list costs more than a scan
+    plus the exact refine (the ScanRangesTarget budget).
     """
-    if geom is None or geom.is_empty():
+    if geom is None or geom.is_empty() or not np.isfinite(geom.bounds()[0]):
         return np.empty(0, dtype=np.int64)  # disjoint short-circuit
     x0, y0, x1, y1 = geom.bounds()
-    if not np.isfinite(x0):
-        return np.empty(0, dtype=np.int64)
     if (x0 <= _WORLD_BOUNDS[0] and y0 <= _WORLD_BOUNDS[1]
             and x1 >= _WORLD_BOUNDS[2] and y1 >= _WORLD_BOUNDS[3]):
         return None  # whole-world: scan everything
     use_res = res
     while True:
         try:
-            cover = bbox_cover(x0, y0, x1, y1, res=use_res, max_cells=max_cells)
+            coarse = bbox_cover(x0, y0, x1, y1, res=use_res,
+                                max_cells=max_cells)
             break
         except ValueError:
             use_res -= 1  # coarsen instead of failing (budget semantics)
             if use_res < 0:
                 return None
-    if use_res != res:
-        # caller's partition column is at ``res``; recompute at res from
-        # the coarse cells' bounds (still a valid over-selection). The
-        # re-expansion is by construction >= the cover the budget just
-        # rejected, so it must honor the budget too: past one coarsening
-        # step of slack (4x), a six-figure isin literal list costs more
-        # than scanning + exact refine — return None (no prune) instead
-        # of defeating the ScanRangesTarget budget the ValueError enforces.
-        if len(cover) << (2 * (res - use_res)) > 4 * max_cells:
-            return None
-        lo0, la0, lo1, la1 = cell_bounds(cover, use_res)
-        cover = np.unique(np.concatenate([
-            bbox_cover(a, b, c, d, res=res, max_cells=1 << 31)
-            for a, b, c, d in zip(lo0, la0, lo1, la1)]))
-    if exact and len(cover) > 1:
-        keep = []
-        for c in cover.tolist():
-            cx0, cy0, cx1, cy1 = (float(v[0]) for v in cell_bounds(np.asarray([c]), res))
-            cellpoly = Polygon([[cx0, cy0], [cx1, cy0], [cx1, cy1], [cx0, cy1],
-                                [cx0, cy0]])
-            if geo_intersects(cellpoly, geom):
-                keep.append(c)
-        cover = np.asarray(keep, dtype=np.int64)
-    return cover
+    if len(coarse) << (2 * (res - use_res)) > 4 * max_cells:
+        return None
+    return cell_cover_classified(geom, res=res)[0]
 
 
-def _polygon_edges(geom: Geometry):
-    """All ring edges of every polygon part as flat arrays, or None if the
-    geometry has any non-polygon part (callers fall back conservative)."""
-    axs, ays, bxs, bys = [], [], [], []
+# cell-edge pairs (or cell centres x one edge chunk) evaluated at once
+_BLOCK = 1 << 20
+
+
+def _segments(geom: Geometry) -> tuple[np.ndarray, list]:
+    """Every segment of ``geom`` as rows (ax, ay, bx, by), and its polygon
+    parts. Ring and line edges come from ``_ring_edges``, which drops
+    zero-length edges; a point, or a part whose edges are all zero-length,
+    gives a zero-length segment at its first vertex."""
+    from geomesa_spark.operators.join import _ring_edges
+
+    segs, polys = [np.zeros((0, 4))], []
     for part in flatten(geom):
-        if not isinstance(part, Polygon):
-            return None
         if part.is_empty():
             continue
-        for ring in part.rings():
-            axs.append(ring[:-1, 0]); ays.append(ring[:-1, 1])
-            bxs.append(ring[1:, 0]); bys.append(ring[1:, 1])
-    if not axs:
-        return None
-    return (np.concatenate(axs), np.concatenate(ays),
-            np.concatenate(bxs), np.concatenate(bys))
+        if isinstance(part, Polygon):
+            polys.append(part)
+            chains = part.rings()
+        elif isinstance(part, LineString):
+            chains = [part.coords]
+        else:
+            chains = [np.array([[part.x, part.y]])]
+        edges = [e for e in map(_ring_edges, chains) if len(e)]
+        segs += edges or [np.tile(chains[0][0], 2)[None, :]]
+    return np.concatenate(segs), polys
 
 
-def _any_edge_hits_rect(edges, rx0: float, ry0: float,
-                        rx1: float, ry1: float) -> bool:
-    """True if any edge segment touches the closed rectangle (exact:
-    bbox-overlap + corner side test — no corner strictly one side)."""
-    ax, ay, bx, by = edges
-    ov = ((np.maximum(ax, bx) >= rx0) & (np.minimum(ax, bx) <= rx1)
-          & (np.maximum(ay, by) >= ry0) & (np.minimum(ay, by) <= ry1))
-    if not ov.any():
-        return False
-    ax, ay, bx, by = ax[ov], ay[ov], bx[ov], by[ov]
+def _touches(rects: tuple, segs: np.ndarray) -> np.ndarray:
+    """Per rectangle (x0s, y0s, x1s, y1s), whether some segment touches
+    it, closed: the segment's bbox meets it and its four corners are not
+    all strictly on one side of the segment's line."""
+    x0s, y0s, x1s, y1s = (np.asarray(v, dtype=np.float64)[:, None]
+                          for v in rects)
+    ax, ay, bx, by = (c[None, :] for c in segs.T)
     dx, dy = bx - ax, by - ay
-    allpos = np.ones(len(ax), dtype=bool)
-    allneg = np.ones(len(ax), dtype=bool)
-    for cx, cy in ((rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1)):
-        cr = dx * (cy - ay) - dy * (cx - ax)
-        allpos &= cr > 0
-        allneg &= cr < 0
-    return bool((~(allpos | allneg)).any())
+    lox, hix = np.minimum(ax, bx), np.maximum(ax, bx)
+    loy, hiy = np.minimum(ay, by), np.maximum(ay, by)
+    out = np.zeros(len(x0s), dtype=bool)
+    step = max(1, _BLOCK // max(len(segs), 1))
+    for s in range(0, len(x0s), step):
+        rx0, ry0 = x0s[s:s + step], y0s[s:s + step]
+        rx1, ry1 = x1s[s:s + step], y1s[s:s + step]
+        hit = (hix >= rx0) & (lox <= rx1) & (hiy >= ry0) & (loy <= ry1)
+        pos, neg = hit.copy(), hit.copy()
+        for cx, cy in ((rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1)):
+            cr = dx * (cy - ay) - dy * (cx - ax)
+            pos &= cr > 0
+            neg &= cr < 0
+        out[s:s + step] = (hit & ~pos & ~neg).any(axis=1)
+    return out
 
 
-def cell_cover_classified(geom: Geometry, res: int = PARTITION_RES,
-                          max_cells: int = DEFAULT_MAX_COVER
-                          ) -> tuple[np.ndarray | None, np.ndarray | None]:
-    """Cover cells split into INTERIOR (cell rectangle strictly inside the
-    geometry's interior — every point in it locates 'I', no exact refine
-    needed) vs boundary cells. The reference's contained-vs-intersecting
-    range distinction (Z2IndexKeySpace.getRangeBytes contained ranges /
-    XZ query windows), which lets scans skip per-row predicate evaluation
-    for fully-covered ranges.
+def cell_cover_classified(geom: Geometry, res: int = PARTITION_RES
+                          ) -> tuple[np.ndarray, np.ndarray]:
+    """The cells at ``res`` whose closed rectangle meets ``geom``, sorted,
+    and which of them are INTERIOR: every point of the closed cell locates
+    'I', so a point joined through one needs no exact refine (the
+    reference's contained-vs-overlapping ranges, Z2IndexKeySpace.
+    getRangeBytes). No budget and no whole-world short-circuit: a
+    world-spanning geometry gets the whole grid.
 
-    Returns (cells, interior_mask); interior_mask is None when cells is
-    None (whole world) and all-False when the geometry has non-polygon
-    parts (conservative)."""
-    cover = cell_cover_of_geometry(geom, res=res, max_cells=max_cells)
-    if cover is None or len(cover) == 0:
-        return cover, None if cover is None else np.zeros(0, dtype=bool)
-    interior = np.zeros(len(cover), dtype=bool)
-    edges = _polygon_edges(geom)
-    if edges is None:
-        return cover, interior
-    x0s, y0s, x1s, y1s = cell_bounds(cover, res)
-    from geomesa_spark.operators.join import locate_points_in_geometry
-    loc = locate_points_in_geometry(
-        (np.asarray(x0s, dtype=np.float64) + np.asarray(x1s)) / 2.0,
-        (np.asarray(y0s, dtype=np.float64) + np.asarray(y1s)) / 2.0, geom)
-    for i in range(len(cover)):
-        if loc[i] == 1 and not _any_edge_hits_rect(
-                edges, float(x0s[i]), float(y0s[i]),
-                float(x1s[i]), float(y1s[i])):
-            interior[i] = True
-    return cover, interior
+    Edges classify the bbox cover directly, as Raptor's scanline
+    classifies raster cells: a cell is kept iff some segment of ``geom``
+    touches it (``_touches``, against the segments whose y-range meets
+    the cell's row) or its centre locates interior to a polygon part. A
+    run of adjacent cells in a row that no segment touches lies wholly on
+    one side of every ring, so one centre locates the whole run. A cell
+    is interior iff its centre is interior and no segment touches it, and
+    only when every part is a polygon (a line or point part has no
+    interior to vouch for)."""
+    if geom is None or geom.is_empty() or not np.isfinite(geom.bounds()[0]):
+        return np.empty(0, dtype=np.int64), np.zeros(0, dtype=bool)
+    cells = bbox_cover(*geom.bounds(), res=res, max_cells=1 << 62)
+    bx, by = z_decode(cells)
+    order = np.lexsort((bx, by))  # row-major: a row's cells are adjacent
+    cells, by = cells[order], by[order]
+    x0s, y0s, x1s, y1s = cell_bounds(cells, res)
+    segs, polys = _segments(geom)
+    lo_y = np.minimum(segs[:, 1], segs[:, 3])
+    hi_y = np.maximum(segs[:, 1], segs[:, 3])
+    touched = np.zeros(len(cells), dtype=bool)
+    rows = np.flatnonzero(np.r_[True, by[1:] != by[:-1]])
+    for a, b in zip(rows, np.r_[rows[1:], len(cells)]):
+        band = segs[(hi_y >= y0s[a]) & (lo_y <= y1s[a])]
+        if len(band):
+            touched[a:b] = _touches(
+                (x0s[a:b], y0s[a:b], x1s[a:b], y1s[a:b]), band)
+    # a run of untouched cells starts where the cell to its left is
+    # touched or in another row
+    free = ~touched
+    first = free & ~np.r_[False, free[:-1] & (by[1:] == by[:-1])]
+    inside = np.zeros(len(cells), dtype=bool)
+    if polys and first.any():
+        from geomesa_spark.operators.join import locate_points_in_geometry
+        heads = np.flatnonzero(first)
+        cx = (x0s[heads] + x1s[heads]) / 2.0
+        cy = (y0s[heads] + y1s[heads]) / 2.0
+        step = max(1, _BLOCK // 512)  # the kernel's edge chunk
+        head_in = np.zeros(len(heads), dtype=bool)
+        for s in range(0, len(heads), step):
+            head_in[s:s + step] = np.logical_or.reduce(
+                [locate_points_in_geometry(cx[s:s + step], cy[s:s + step],
+                                           p) == 1 for p in polys])
+        inside[free] = head_in[np.cumsum(first)[free] - 1]
+    keep = np.flatnonzero(touched | inside)
+    keep = keep[np.argsort(cells[keep])]
+    if not all(isinstance(p, Polygon) for p in flatten(geom)):
+        inside[:] = False
+    return cells[keep], inside[keep]
 
 
 def prune_by_geometry(df: DataFrame, geom: Geometry, cell_col: str = "cell_prefix",

@@ -179,6 +179,70 @@ class TestClassifiedCover:
             ys = np.concatenate([ys, [y0[i], y0[i], y1[i], y1[i]]])
             assert (locate_points_in_geometry(xs, ys, poly) == 1).all()
 
+    @staticmethod
+    def _inputs():
+        import numpy as np
+
+        from geomesa_spark.geo.model import (LineString, MultiPolygon, Point,
+                                             Polygon)
+        rng = np.random.default_rng(5)
+        geoms = []
+        for _ in range(5):  # random stars: vertices at sorted angles
+            cx, cy = rng.uniform(-150, 150), rng.uniform(-60, 60)
+            k = int(rng.integers(5, 40))
+            ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+            rad = rng.uniform(1.0, 25.0, k)
+            geoms.append(Polygon(np.column_stack(
+                [cx + rad * np.cos(ang), cy + rad * np.sin(ang)])))
+        return geoms + [
+            Polygon([[-40, -20], [40, -20], [40, 30], [-40, 30], [-40, -20]],
+                    holes=[[[-10, -5], [15, -5], [15, 12], [-10, 12],
+                            [-10, -5]]]),
+            MultiPolygon([Polygon([[60, 0], [90, 0], [90, 25], [60, 0]]),
+                          Polygon([[95, 5], [120, 30], [95, 30], [95, 5]])]),
+            Polygon([[-120, 0], [-90, 30], [-90, 0], [-120, 30],
+                     [-120, 0]]),                              # bowtie
+            # vertices on cell corners at res 4 and 5
+            Polygon([[0, 0], [22.5, 0], [33.75, 11.25], [0, 22.5], [0, 0]]),
+            # runs off the world's east edge: rows end in interior cells
+            Polygon([[-100, 0], [200, 0], [200, 40], [-20, 40], [-100, 0]]),
+            LineString([[-100, -50], [-60, 10], [-20, -30]]),
+            Point(100.0, 20.0),
+        ]
+
+    @pytest.mark.parametrize("res", [4, 5])
+    def test_cover_between_de9im_and_bbox(self, res):
+        """The edge-test cover holds every cell the DE-9IM predicate says
+        the geometry meets, and nothing outside the bbox cover; every
+        interior cell is all-'I' at random samples and its corners."""
+        import numpy as np
+
+        from geomesa_spark.cells import bbox_cover
+        from geomesa_spark.cells.z2 import cell_bounds
+        from geomesa_spark.geo.model import Polygon
+        from geomesa_spark.geo.predicates import intersects
+        from geomesa_spark.operators.join import locate_points_in_geometry
+        from geomesa_spark.plans.planner import cell_cover_classified
+
+        rng = np.random.default_rng(7)
+        for geom in self._inputs():
+            cells, interior = cell_cover_classified(geom, res=res)
+            box = bbox_cover(*geom.bounds(), res=res)
+            x0, y0, x1, y1 = cell_bounds(box, res)
+            de9im = {int(c) for c, a, b, cc, d in zip(box, x0, y0, x1, y1)
+                     if intersects(Polygon([[a, b], [cc, b], [cc, d],
+                                            [a, d], [a, b]]), geom)}
+            got = set(cells.tolist())
+            assert de9im <= got, (geom, sorted(de9im - got))
+            assert got <= set(box.tolist()), geom
+            x0, y0, x1, y1 = cell_bounds(cells, res)
+            for i in np.flatnonzero(interior):
+                xs = np.concatenate([rng.uniform(x0[i], x1[i], 50),
+                                     [x0[i], x1[i], x0[i], x1[i]]])
+                ys = np.concatenate([rng.uniform(y0[i], y1[i], 50),
+                                     [y0[i], y0[i], y1[i], y1[i]]])
+                assert (locate_points_in_geometry(xs, ys, geom) == 1).all()
+
     def test_boundary_point_via_interior_shortcut_join(self, spark):
         from geomesa_spark.geo.io import to_wkb
         from geomesa_spark.geo.model import Polygon

@@ -427,3 +427,64 @@ class TestNativeRefineParity:
             want = {(r.id, r.region_id) for r in
                     spatial_join(pdf, rdf, predicate=pred).collect()}
             assert got == want, pred
+
+
+class TestWorldSpanningRegions:
+    """A region whose cover is the whole grid, or larger than a filter's
+    cell budget, joins every valid point inside it: an explode takes the
+    whole classified cover, never the filter's "do not filter" answer."""
+
+    WORLD = "POLYGON((-180 -90, 180 -90, 180 90, -180 90, -180 -90))"
+    HALF = "POLYGON((-179 -89, 1 -89, 1 89, -179 89, -179 -89))"
+
+    @staticmethod
+    def _points():
+        rng = np.random.default_rng(11)
+        xy = list(zip(rng.uniform(-180, 180, 60), rng.uniform(-90, 90, 60)))
+        xy += [(0.0, 0.0), (1.0, 0.0), (-179.0, 5.0), (180.0, 0.0),
+               (-180.0, -90.0), (200.0, 0.0), (float("nan"), 0.0)]
+        return [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+
+    @pytest.mark.parametrize("res", [4, 8])
+    @pytest.mark.parametrize("wkt", [WORLD, HALF])
+    def test_every_valid_point_joins(self, spark, wkt, res):
+        from geomesa_spark.geo import from_wkt
+        geom = from_wkt(wkt)
+        x0, y0, x1, y1 = geom.bounds()
+        pts = self._points()
+        pdf = spark.createDataFrame(pts, "id long, lon double, lat double")
+        rdf = spark.createDataFrame([(1, bytearray(to_wkb(geom)))],
+                                    "region_id long, geom binary")
+        for pred in ("st_contains", "st_intersects"):
+            if pred == "st_contains":
+                want = {i for i, x, y in pts
+                        if x0 < x < x1 and y0 < y < y1}
+            else:
+                want = {i for i, x, y in pts
+                        if x0 <= x <= x1 and y0 <= y <= y1}
+            assert len(want) > 20
+            for broadcast in (True, False):
+                got = {r.id for r in spatial_join(
+                    pdf, rdf, predicate=pred, res=res,
+                    broadcast_regions=broadcast).collect()}
+                assert got == want, (pred, broadcast)
+
+    def test_pairs_and_footprint(self, spark):
+        from pyspark.sql import functions as F
+
+        from geomesa_spark.geo import from_wkt
+        from geomesa_spark.operators.tiles import assign_tiles_footprint
+        world = bytearray(to_wkb(from_wkt(self.WORLD)))
+        small = bytearray(to_wkb(box_poly(10.0, 10.0, 12.0, 11.0)))
+        left = spark.createDataFrame([(1, world)], "left_id long, geom binary")
+        right = spark.createDataFrame([(2, small)],
+                                      "right_id long, geom_r binary")
+        for pred in ("st_intersects", "st_contains"):
+            got = [(r.left_id, r.right_id) for r in
+                   spatial_join_pairs(left, right, predicate=pred).collect()]
+            assert got == [(1, 2)], pred
+        for res in (4, 8):
+            tiles = assign_tiles_footprint(left, res=res).agg(
+                F.countDistinct("tile").alias("n"),
+                F.min("tile").alias("lo")).first()
+            assert (tiles.n, tiles.lo) == (4 ** res, 0)

@@ -9,7 +9,9 @@ points are uniform in [-25, 25]^2 (seeded), so nearly every candidate
 sits in a boundary cell and goes through the refine. Each measurement is
 build + noop write of ``spatial_join(..., broadcast_regions=True)``; the
 first run (cover computation, warm-up) is dropped and the median of the
-rest printed, with the row count, as one JSON line.
+rest printed, with the row count, as one JSON line. Beside each wall,
+``cover_ms`` is the driver cover that first run computes for the star
+(``operators.join._geometry_cover``, the one memo miss), timed alone.
 
 Usage: python tools/bench_join_vertices.py [--vertices 16,1000,10000]
            [--points 300000] [--reps 5]
@@ -49,8 +51,9 @@ def main() -> None:
     import pandas as pd
     from pyspark.sql import SparkSession
 
+    from geomesa_spark.cells import PARTITION_RES
     from geomesa_spark.geo import to_wkb
-    from geomesa_spark.operators.join import spatial_join
+    from geomesa_spark.operators.join import _geometry_cover, spatial_join
 
     spark = (SparkSession.builder.master("local[4]")
              .config("spark.sql.shuffle.partitions", "8")
@@ -67,9 +70,12 @@ def main() -> None:
                      ).to_parquet(path)
         pts = spark.read.parquet(path)
         for n in (int(v) for v in args.vertices.split(",")):
+            g = star(n)
+            t0 = time.perf_counter()
+            _geometry_cover(g, PARTITION_RES)
+            cover_ms = (time.perf_counter() - t0) * 1000
             regions = spark.createDataFrame(
-                [(1, bytearray(to_wkb(star(n))))],
-                "region_id long, geom binary")
+                [(1, bytearray(to_wkb(g)))], "region_id long, geom binary")
             ts = []
             for i in range(args.reps + 1):
                 t0 = time.perf_counter()
@@ -79,7 +85,7 @@ def main() -> None:
                 if i:
                     ts.append(time.perf_counter() - t0)
             out[n] = {"s": round(statistics.median(ts), 3),
-                      "rows": df.count()}
+                      "cover_ms": round(cover_ms, 1), "rows": df.count()}
     print(json.dumps({"points": args.points, "vertices": out}))
     spark.stop()
 
