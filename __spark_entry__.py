@@ -1,9 +1,21 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship spatial-join on sf0.001.
-``queries()`` exposes one callable per implemented operator (SURVEY.md §2);
-``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for each, run on the
-same parquet tables at sf0.01 by the driver's correctness gate.
+Each query is registered once, by ``@query(name, oracle=...)`` on its
+``q_*`` function: the name, the Spark plan and its DuckDB twin (the SQL,
+or a function of ``sf_dir`` returning it, for twins that read a stored
+index) sit together. Both contract maps derive from that registry:
+
+* ``queries()`` maps name -> ``(spark, sf_dir) -> DataFrame``, least
+  recently certified first: a query sorts by the last ``CORRECTNESS_r*``
+  round that certified it (rows, schema and hash all matched), never
+  certified first, ties in registration order. The driver value-checks
+  only the first 50 entries, so the window moves to what it saw least.
+* ``oracle_sql(sf_dir)`` maps name -> the twin's SQL, run on the same
+  parquet tables (sf0.01 by default, the driver's gate).
+
+``geomesa_spark.oracle.mismatch`` is the one comparison of a query with
+its twin (column names, type families, then sorted values).
 
 Spatial columns are derived deterministically from ``events.event_id`` with
 integer arithmetic exact in both engines:
@@ -16,7 +28,13 @@ into the oracle SQL as a VALUES list.
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import glob
+import json
+import logging
 import os
+import re
 import sys
 import weakref
 from collections.abc import Callable
@@ -27,6 +45,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+_log = logging.getLogger(__name__)
+
 EARTH_R = 6371008.7714
 N_REGIONS = 100
 KNN_K = 10
@@ -35,6 +55,83 @@ KNN_QUERIES = [
     ("q-3", -179.9, 10.0), ("q-4", 20.0, 89.5), ("q-5", -60.0, -80.0),
     ("q-6", -122.4, 37.8), ("q-7", 151.2, -33.9),
 ]
+
+QueryFn = Callable[[SparkSession, str], DataFrame]
+# name -> (q_* function, twin SQL or a function of sf_dir returning it)
+_QUERIES: dict[str, tuple[QueryFn, str | Callable[[str], str]]] = {}
+
+
+def query(name: str, oracle: str | Callable[[str], str]):
+    """Register the decorated ``q_*`` function as ``name`` with its twin."""
+    def register(fn: QueryFn) -> QueryFn:
+        if name in _QUERIES:
+            raise ValueError(f"query {name!r} registered twice")
+        _QUERIES[name] = (fn, oracle)
+        return fn
+    return register
+
+
+def _last_certified() -> dict[str, int]:
+    """Query name -> the last CORRECTNESS_r<N>.json round N in which the
+    driver certified it (rows_match, schema_match and hash_match true)."""
+    last: dict[str, int] = {}
+    here = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if not m:
+            continue
+        with open(path) as f:
+            record = json.load(f)
+        for name, r in record.items():
+            if isinstance(r, dict) and all(
+                    r.get(k) is True
+                    for k in ("rows_match", "schema_match", "hash_match")):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
+
+
+def queries() -> dict[str, QueryFn]:
+    last = _last_certified()
+    # sorted() is stable: ties keep registration order
+    return {name: _shipping(_QUERIES[name][0])
+            for name in sorted(_QUERIES, key=lambda n: last.get(n, 0))}
+
+
+def oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
+    """Each query's twin SQL over the tables of ``sf_dir``. A twin that
+    cannot be built (an index oracle whose fixtures are absent) is logged
+    and left out, and the harness counts that query as failed."""
+    out = {}
+    for name, (_, oracle) in _QUERIES.items():
+        try:
+            out[name] = oracle(sf_dir) if callable(oracle) else oracle
+        except Exception:
+            _log.exception("oracle for %s at %s could not be built",
+                           name, sf_dir)
+    return out
+
+
+@contextlib.contextmanager
+def _utc(spark: SparkSession):
+    """The session zone is UTC inside the block, then restored, so the
+    shared session is not order-dependent. A plan built inside must be
+    analyzed inside (``out.schema``): ResolveTimeZone captures the
+    session zone into its timestamp expressions."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def _shipping(fn: QueryFn) -> QueryFn:
+    @functools.wraps(fn)
+    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _ensure_workers(spark)
+        return fn(spark, sf_dir)
+    return wrapped
+
 
 _REGISTERED: set[str] = set()
 
@@ -114,18 +211,24 @@ def _events_points_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
                      *lonlat_cols())
 
 
-def _regions() -> list[tuple[str, float, float, float, float]]:
-    rng = np.random.default_rng(0)
+def _boxes(seed: int, half_w: float, half_h: float
+           ) -> list[tuple[str, float, float, float, float]]:
+    rng = np.random.default_rng(seed)
     out = []
     for j in range(N_REGIONS):
         cx = rng.uniform(-180, 180)
         cy = rng.uniform(-90, 90)
-        hw = 1.5 * rng.uniform()
-        hh = 0.5 * rng.uniform()
+        hw = half_w * rng.uniform()
+        hh = half_h * rng.uniform()
         out.append((str(j + 1), float(cx - hw), float(cy - hh),
                     float(cx + hw), float(cy + hh)))
     return out
 
+
+_REGIONS = _boxes(0, 1.5, 0.5)
+# denser/bigger boxes so the polygon-polygon self-join has non-empty
+# output to value-check
+_WIDE_REGIONS = _boxes(1, 8.0, 4.0)
 
 # dim frames are cached PER SESSION (weak keys: a stopped session frees
 # them): rebuilding the local relation every query call both pays a
@@ -135,71 +238,61 @@ _DIM_FRAMES: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
     weakref.WeakKeyDictionary()
 
 
-def _session_dim(spark: SparkSession, key: str,
-                 build: Callable[[], DataFrame]) -> DataFrame:
+def _boxes_df(spark: SparkSession, key: str,
+              boxes: list[tuple[str, float, float, float, float]]
+              ) -> DataFrame:
     memo = _DIM_FRAMES.setdefault(spark, {})
-    df = memo.get(key)
-    if df is None:
-        df = memo[key] = build()
-    return df
+    if key not in memo:
+        from geomesa_spark.geo import Polygon, to_wkb
+        rows = [(rid, bytearray(to_wkb(Polygon(
+            [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]))))
+            for (rid, x0, y0, x1, y1) in boxes]
+        memo[key] = spark.createDataFrame(rows,
+                                          "region_id string, geom binary")
+    return memo[key]
 
 
 def _regions_df(spark: SparkSession) -> DataFrame:
-    from geomesa_spark.geo import Polygon, to_wkb
-
-    def build() -> DataFrame:
-        rows = [(rid, bytearray(to_wkb(Polygon(
-            [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]))))
-            for (rid, x0, y0, x1, y1) in _regions()]
-        return spark.createDataFrame(rows, "region_id string, geom binary")
-
-    return _session_dim(spark, "regions", build)
+    return _boxes_df(spark, "regions", _REGIONS)
 
 
-def _regions_values_sql() -> str:
+def _boxes_sql(boxes: list[tuple[str, float, float, float, float]],
+               alias: str = "r") -> str:
     rows = ", ".join(
         f"('{rid}', {x0!r}, {y0!r}, {x1!r}, {y1!r})"
-        for (rid, x0, y0, x1, y1) in _regions())
-    return f"(VALUES {rows}) AS r(region_id, x0, y0, x1, y1)"
+        for (rid, x0, y0, x1, y1) in boxes)
+    return f"(VALUES {rows}) AS {alias}(region_id, x0, y0, x1, y1)"
 
 
-def _wide_regions() -> list[tuple[str, float, float, float, float]]:
-    """Denser/bigger boxes (seed 1) so the polygon-polygon self-join has
-    non-empty output to value-check."""
-    rng = np.random.default_rng(1)
-    out = []
-    for j in range(N_REGIONS):
-        cx = rng.uniform(-180, 180)
-        cy = rng.uniform(-90, 90)
-        hw = 8.0 * rng.uniform()
-        hh = 4.0 * rng.uniform()
-        out.append((str(j + 1), float(cx - hw), float(cy - hh),
-                    float(cx + hw), float(cy + hh)))
-    return out
-
-
-def _wide_regions_df(spark: SparkSession) -> DataFrame:
-    from geomesa_spark.geo import Polygon, to_wkb
-
-    def build() -> DataFrame:
-        rows = [(rid, bytearray(to_wkb(Polygon(
-            [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]))))
-            for (rid, x0, y0, x1, y1) in _wide_regions()]
-        return spark.createDataFrame(rows, "region_id string, geom binary")
-
-    return _session_dim(spark, "wide_regions", build)
-
-
-def _wide_regions_values_sql() -> str:
-    rows = ", ".join(
-        f"('{rid}', {x0!r}, {y0!r}, {x1!r}, {y1!r})"
-        for (rid, x0, y0, x1, y1) in _wide_regions())
-    return f"(VALUES {rows}) AS r(region_id, x0, y0, x1, y1)"
+_REGIONS_SQL = _boxes_sql(_REGIONS)
 
 
 _POINTS_SQL = ("(SELECT event_id, event_type, value, "
                "(event_id * 7919 % 36000) / 100.0 - 180.0 AS lon, "
                "(event_id * 104729 % 18000) / 100.0 - 90.0 AS lat FROM events)")
+
+
+def _haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
+    return (f"2 * {EARTH_R!r} * asin(least(1.0, sqrt("
+            f"sin(radians(({lat2}) - ({lat1})) / 2) * sin(radians(({lat2}) - ({lat1})) / 2)"
+            f" + cos(radians({lat1})) * cos(radians({lat2}))"
+            f" * sin(radians(({lon2}) - ({lon1})) / 2) * sin(radians(({lon2}) - ({lon1})) / 2))))")
+
+
+_HAV_SQL = _haversine_sql("p.lon", "p.lat", "q.qlon", "q.qlat")
+_HAV_PARIS_SQL = _haversine_sql("lon", "lat", "2.35", "48.85")
+
+
+def _z2_sql(res: int) -> str:
+    """Morton interleave of res-bit bins as a DuckDB expression."""
+    n = 1 << res
+    xbin = f"least(CAST(floor((lon + 180.0) / 360.0 * {n}) AS BIGINT), {n - 1})"
+    ybin = f"least(CAST(floor((lat + 90.0) / 180.0 * {n}) AS BIGINT), {n - 1})"
+    terms = []
+    for i in range(res):
+        terms.append(f"((({xbin}) >> {i}) & 1) << {2 * i}")
+        terms.append(f"((({ybin}) >> {i}) & 1) << {2 * i + 1}")
+    return " | ".join(f"({t})" for t in terms)
 
 
 # ----------------------------------------- persisted write-time indexes
@@ -265,9 +358,7 @@ def _events_xz3_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geomesa_spark.operators.xz3_query import with_xz3
 
     def build(p: str) -> None:
-        prev_tz = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        try:
+        with _utc(spark):
             boxes = _events_boxes(spark, sf_dir).join(
                 spark.read.parquet(f"{sf_dir}/events.parquet")
                 .select("event_id", "ts"), "event_id") \
@@ -277,8 +368,6 @@ def _events_xz3_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             idx = with_xz3(boxes)
             (idx.repartition("epoch").sortWithinPartitions("xz3")
                 .write.partitionBy("epoch").mode("overwrite").parquet(p))
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
     return spark.read.parquet(_ensure_table(_idx_path("xz3", sf_dir),
                                             build))
@@ -396,37 +485,11 @@ def _ensure_ivf_oracle_index(sf_dir: str) -> str:
     the Spark query first. Returns the index path."""
     from geomesa_spark.ml.ivf import (_IVF_CENTROID_FILE, _IVF_META_FILE,
                                       build_ivf_index_local)
-    path = _idx_path("ivf1", sf_dir)
-    ready = all(os.path.exists(os.path.join(path, f)) for f in
-                ("_SUCCESS", _IVF_META_FILE, _IVF_CENTROID_FILE))
-    if not ready:
-        build_ivf_index_local(f"{sf_dir}/embeddings.parquet", path,
-                              list_partitions=16)
-    return path
-
-
-def _ivf_oracle_entry() -> dict[str, str]:
-    """ivf_topk is the ONE oracle coupled to the environment (it reads
-    the stored index from disk rather than the registered views). The
-    SF dir resolves, in order: SPARK_GRAFT_ORACLE_SF_DIR, the sf_dir
-    the Spark queries last ran on this process (recorded by _wrap, so a
-    driver gating at a non-default SF gets an index over the SAME
-    data), the sf0.01 default. If the index can't be materialized —
-    fixtures absent, cache dir read-only — degrade THAT entry to
-    rows-only instead of taking down oracle retrieval for every other
-    query, and say so on stderr (a silent downgrade hides a red gate)."""
-    sf_dir = _oracle_sf_dir()
-    try:
-        return {"ivf_topk": _ivf_oracle_sql(
-            _ensure_ivf_oracle_index(sf_dir), _IVF_NPROBE)}
-    except Exception as e:
-        import sys
-        import traceback
-        print(f"[geomesa_spark] WARNING: ivf_topk oracle degraded to "
-              f"rows-only — index materialization at {sf_dir} failed: "
-              f"{e!r}", file=sys.stderr)
-        traceback.print_exc()
-        return {}
+    return _ensure_table(
+        _idx_path("ivf1", sf_dir),
+        lambda p: build_ivf_index_local(f"{sf_dir}/embeddings.parquet", p,
+                                        list_partitions=16),
+        (_IVF_META_FILE, _IVF_CENTROID_FILE))
 
 
 _LSH_PROBES_FILE = "_lsh_probes_q50_mp2.parquet"
@@ -439,8 +502,6 @@ def _parquet_num_rows(path: str) -> int:
     ``pq.read_metadata`` alone rejects. A directory without top-level
     ``*.parquet`` files (a hive-partitioned or nested layout) raises
     rather than counting 0 rows."""
-    import glob
-
     import pyarrow.parquet as pq
     if os.path.isdir(path):
         files = glob.glob(os.path.join(path, "*.parquet"))
@@ -467,18 +528,24 @@ def _ensure_lsh_oracle_index(sf_dir: str) -> tuple[str, dict]:
                                              compute_probe_rows,
                                              default_n_planes,
                                              read_lsh_meta)
-    path = _idx_path("lsh4", sf_dir)
     emb_pq = f"{sf_dir}/embeddings.parquet"
-    ready = all(os.path.exists(os.path.join(path, f)) for f in
-                ("_SUCCESS", _LSH_META_FILE))
-    if not ready:
-        n = _parquet_num_rows(emb_pq)
-        build_lsh_index_local(emb_pq, path,
-                              n_planes=default_n_planes(n),
-                              n_tables=8, bucket_partitions=16)
+    path = _ensure_table(
+        _idx_path("lsh4", sf_dir),
+        lambda p: build_lsh_index_local(
+            emb_pq, p, n_planes=default_n_planes(_parquet_num_rows(emb_pq)),
+            n_tables=8, bucket_partitions=16),
+        (_LSH_META_FILE,))
     meta = read_lsh_meta(path)
+    # the sidecar records the index geometry its probes were computed
+    # from; under any other geometry (an in-place rebuild that kept the
+    # underscore files) it is rewritten, never reused
+    geometry = json.dumps({k: meta[k] for k in
+                           ("n_planes", "n_tables", "dim", "seed")},
+                          sort_keys=True).encode()
     probes_path = os.path.join(path, _LSH_PROBES_FILE)
-    if not os.path.exists(probes_path):
+    if not os.path.exists(probes_path) or (
+            pq.read_schema(probes_path).metadata or {}).get(
+                b"lsh_geometry") != geometry:
         tbl = pq.read_table(emb_pq, columns=["vec_id", "embedding"])
         ids = tbl["vec_id"].to_numpy()
         sel = ids % 50 == 0
@@ -495,7 +562,7 @@ def _ensure_lsh_oracle_index(sf_dir: str) -> tuple[str, dict]:
         pq.write_table(pa.table({
             "query_id": pa.array([q for q, _ in rows]),
             "bk": pa.array([b for _, b in rows], pa.int64()),
-        }), probes_path)
+        }, metadata={"lsh_geometry": geometry}), probes_path)
     return path, meta
 
 
@@ -552,62 +619,6 @@ _EXACT_ANN_SQL = """
     WHERE rank <= 10 ORDER BY query_id, rank"""
 
 
-def _oracle_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR") \
-        or _LAST_QUERY_SF_DIR or "/root/testdata/sf0.01"
-
-
-def _lsh_oracle_entry() -> dict[str, str]:
-    """Index-reading oracle for lsh_topk (same environment-coupling and
-    degrade-to-rows-only discipline as ``_ivf_oracle_entry``)."""
-    sf_dir = _oracle_sf_dir()
-    try:
-        path, _ = _ensure_lsh_oracle_index(sf_dir)
-        return {"lsh_topk": _lsh_oracle_sql(path)}
-    except Exception as e:
-        import sys
-        import traceback
-        print(f"[geomesa_spark] WARNING: lsh_topk oracle degraded to "
-              f"rows-only — index materialization at {sf_dir} failed: "
-              f"{e!r}", file=sys.stderr)
-        traceback.print_exc()
-        return {}
-
-
-def _ann_routed_oracle_entry() -> dict[str, str]:
-    """Router-aware oracle for ann_routed: replicate the cost decision
-    (`ml/router.py:decide_ann` — pure arithmetic over corpus/query
-    counts + the index sidecars, the same inputs ``q_ann_routed``
-    passes) and emit the SQL twin of WHICHEVER path the engine will
-    take: the exact cross-join at gate scale, the index-reading twin
-    when the router switches to a stored index (>=50k vectors). This
-    replaces the static exact twin whose green range ended at the
-    router's documented crossover."""
-    from geomesa_spark.ml.ivf import read_ivf_meta
-    from geomesa_spark.ml.router import decide_ann
-    sf_dir = _oracle_sf_dir()
-    try:
-        n = _parquet_num_rows(f"{sf_dir}/embeddings.parquet")
-        lsh_path, lsh_meta = _ensure_lsh_oracle_index(sf_dir)
-        ivf_path = _ensure_ivf_oracle_index(sf_dir)
-        s = decide_ann(n, (n + 49) // 50, lsh_meta=lsh_meta,
-                       ivf_meta=read_ivf_meta(ivf_path),
-                       multiprobe=2, nprobe=_IVF_NPROBE)
-        if s.kind == "lsh":
-            return {"ann_routed": _lsh_oracle_sql(lsh_path)}
-        if s.kind == "ivf":
-            return {"ann_routed": _ivf_oracle_sql(ivf_path, _IVF_NPROBE)}
-        return {"ann_routed": _EXACT_ANN_SQL}
-    except Exception as e:
-        import sys
-        import traceback
-        print(f"[geomesa_spark] WARNING: ann_routed oracle degraded to "
-              f"rows-only — routing twin at {sf_dir} failed: {e!r}",
-              file=sys.stderr)
-        traceback.print_exc()
-        return {}
-
-
 def _events_id_index(spark: SparkSession, sf_dir: str) -> str:
     """Key-ordered id index over the events points (IdIndex parity):
     the full record range-partitioned + sorted by event_id, so
@@ -625,6 +636,7 @@ def _events_id_index(spark: SparkSession, sf_dir: str) -> str:
 def warm_index_tables(spark: SparkSession, sf_dir: str) -> None:
     """Materialize every persisted index table (ingest-time work) so
     query timings measure the query path, not one-time ingest."""
+    _ensure_workers(spark)
     for fn in (_events_xz2_table, _events_xz3_table, _events_s2_table,
                _lsh_index_table, _ivf_index_table, _events_id_index):
         fn(spark, sf_dir)
@@ -632,6 +644,11 @@ def warm_index_tables(spark: SparkSession, sf_dir: str) -> None:
 
 # ------------------------------------------------------------- queries
 
+@query("spatial_join_contains", oracle=f"""
+            SELECT p.event_id, r.region_id
+            FROM {_POINTS_SQL} p JOIN {_REGIONS_SQL}
+              ON p.lon > r.x0 AND p.lon < r.x1 AND p.lat > r.y0 AND p.lat < r.y1
+            ORDER BY p.event_id, r.region_id""")
 def q_spatial_join_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geomesa_spark.operators.join import spatial_join
     pts = _events_points(spark, sf_dir)
@@ -640,6 +657,11 @@ def q_spatial_join_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "region_id")
 
 
+@query("spatial_join_intersects", oracle=f"""
+            SELECT r.region_id, count(*) AS n_points
+            FROM {_POINTS_SQL} p JOIN {_REGIONS_SQL}
+              ON p.lon >= r.x0 AND p.lon <= r.x1 AND p.lat >= r.y0 AND p.lat <= r.y1
+            GROUP BY r.region_id ORDER BY r.region_id""")
 def q_spatial_join_intersects(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geomesa_spark.operators.join import spatial_join
     pts = _events_points(spark, sf_dir)
@@ -648,6 +670,20 @@ def q_spatial_join_intersects(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("region_id").agg(F.count("*").alias("n_points"))
 
 
+def _knn_values_sql() -> str:
+    rows = ", ".join(f"('{qid}', {qlon!r}, {qlat!r})"
+                     for (qid, qlon, qlat) in KNN_QUERIES)
+    return f"(VALUES {rows}) AS q(query_id, qlon, qlat)"
+
+
+@query("knn", oracle=f"""
+            SELECT query_id, rank, event_id, dist_m FROM (
+              SELECT q.query_id,
+                     row_number() OVER (PARTITION BY q.query_id ORDER BY {_HAV_SQL}, p.event_id) AS rank,
+                     p.event_id,
+                     round({_HAV_SQL}, 0) AS dist_m
+              FROM {_POINTS_SQL} p CROSS JOIN {_knn_values_sql()}
+            ) WHERE rank <= {KNN_K} ORDER BY query_id, rank""")
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geomesa_spark.operators.knn import knn_join
     pts = _events_points(spark, sf_dir)
@@ -657,6 +693,15 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("dist_m"), 0).alias("dist_m"))
 
 
+@query("density_grid", oracle=f"""
+            SELECT col, row,
+                   CAST(-180.0 + (col + 0.5) * 5.0 AS DOUBLE) AS x,
+                   CAST(-90.0 + (row + 0.5) * 5.0 AS DOUBLE) AS y,
+                   count(*) AS weight
+            FROM (SELECT least(CAST(floor((lon - -180.0) / 5.0) AS BIGINT), 71) AS col,
+                         least(CAST(floor((lat - -90.0) / 5.0) AS BIGINT), 35) AS row
+                  FROM {_POINTS_SQL})
+            GROUP BY col, row ORDER BY col, row""")
 def q_density_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geomesa_spark.operators.density import density
     pts = _events_points(spark, sf_dir)
@@ -669,6 +714,9 @@ def q_density_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("weight").cast("long").alias("weight"))
 
 
+@query("cell_assignment", oracle=f"""
+            SELECT ({_z2_sql(4)}) AS cell, count(*) AS n
+            FROM {_POINTS_SQL} GROUP BY 1 ORDER BY cell""")
 def q_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z2 cell ids computed by the native Catalyst bit-op expression
     (``cells.native.cell_expr``), aggregated per cell — checked against a
@@ -681,6 +729,10 @@ def q_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cell").agg(F.count("*").alias("n"))
 
 
+@query("bbox_query", oracle=f"""
+            SELECT event_id FROM {_POINTS_SQL}
+            WHERE lon >= -30 AND lon <= 40 AND lat >= -20 AND lat <= 35
+            ORDER BY event_id""")
 def q_bbox_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruned bbox scan: cover filter + exact refine. The cell
     column is the NATIVE Catalyst bit-op expression (cells/native.py), not
@@ -698,6 +750,9 @@ def q_bbox_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id")
 
 
+@query("distance_filter", oracle=f"""
+            SELECT event_id, round({_HAV_PARIS_SQL}, 0) AS dist_m
+            FROM {_POINTS_SQL} WHERE {_HAV_PARIS_SQL} <= 1000000.0 ORDER BY event_id""")
 def q_distance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st_distanceSphere predicate: events within 1000 km of a point."""
     _ensure_functions(spark)
@@ -712,6 +767,23 @@ def q_distance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         """)
 
 
+@query("geohash_agg", oracle=f"""
+            WITH b AS (
+              SELECT least(CAST(floor((lon + 180.0) / 360.0 * 32) AS
+                       BIGINT), 31) AS xb,
+                     least(CAST(floor((lat + 90.0) / 180.0 * 32) AS
+                       BIGINT), 31) AS yb
+              FROM {_POINTS_SQL}),
+            v AS (SELECT ({" | ".join(
+                f"(((xb >> {4 - i}) & 1) << {9 - 2 * i}) | "
+                f"(((yb >> {4 - i}) & 1) << {8 - 2 * i})"
+                for i in range(5))}) AS val FROM b)
+            SELECT substr('0123456789bcdefghjkmnpqrstuvwxyz',
+                          CAST((val >> 5) AS INT) + 1, 1)
+                   || substr('0123456789bcdefghjkmnpqrstuvwxyz',
+                             CAST((val & 31) AS INT) + 1, 1) AS gh,
+                   count(*) AS n
+            FROM v GROUP BY 1 ORDER BY gh""")
 def q_geohash_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """st_geoHash binning (10-bit = 2-char geohash) with counts — the
     NATIVE Catalyst bit-interleave expression (geohash_expr), pure
@@ -723,6 +795,12 @@ def q_geohash_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n")))
 
 
+@query("stats_minmax", oracle=f"""
+            SELECT count(*) AS cnt,
+                   round(min(lon), 6) AS min_lon, round(max(lon), 6) AS max_lon,
+                   round(min(lat), 6) AS min_lat, round(max(lat), 6) AS max_lat,
+                   count(DISTINCT event_type) AS n_types
+            FROM {_POINTS_SQL}""")
 def q_stats_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinMax + Count + cardinality stats (StatsScan semantics)."""
     pts = _events_points(spark, sf_dir)
@@ -735,12 +813,20 @@ def q_stats_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("event_type").alias("n_types"))
 
 
+@query("unique_values", oracle="""
+            SELECT event_type, count(*) AS n FROM events
+            GROUP BY event_type ORDER BY event_type""")
 def q_unique_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UniqueProcess: distinct attribute values with counts, sorted."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return ev.groupBy("event_type").agg(F.count("*").alias("n"))
 
 
+@query("sampling", oracle="""
+            SELECT event_id, user_id FROM (
+              SELECT event_id, user_id,
+                     row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
+              FROM events) WHERE rn % 10 = 1 ORDER BY event_id""")
 def q_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 1-in-10 sampling per track key (SamplingIterator
     semantics: keep every nth feature per key)."""
@@ -752,6 +838,12 @@ def q_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("event_id", "user_id")
 
 
+@query("topk_per_key", oracle="""
+            SELECT event_type, rank, event_id, value FROM (
+              SELECT event_type, event_id, value,
+                     row_number() OVER (PARTITION BY event_type
+                                        ORDER BY value DESC, event_id) AS rank
+              FROM events) WHERE rank <= 3 ORDER BY event_type, rank""")
 def q_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 events by value per event_type (TopK stat / window rank)."""
     from pyspark.sql import Window
@@ -762,6 +854,11 @@ def q_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("event_type", "rank", "event_id", "value")
 
 
+@query("histogram", oracle="""
+            SELECT least(CAST(floor(value / 25.0) AS BIGINT), 39) AS bin,
+                   count(*) AS n
+            FROM events WHERE value >= 0 AND value <= 1000
+            GROUP BY 1 ORDER BY bin""")
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-bin range histogram (Histogram stat: min/max/bins)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -771,6 +868,16 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
              .groupBy(bin_expr.alias("bin")).agg(F.count("*").alias("n"))
 
 
+@query("tpch_pricing_summary", oracle="""
+            SELECT l_returnflag, l_linestatus,
+                   round(sum(l_quantity), 2) AS sum_qty,
+                   round(sum(l_extendedprice), 2) AS sum_base_price,
+                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+                   round(avg(l_quantity), 6) AS avg_qty,
+                   count(*) AS count_order
+            FROM lineitem WHERE l_shipdate <= '1998-09-02'
+            GROUP BY l_returnflag, l_linestatus
+            ORDER BY l_returnflag, l_linestatus""")
 def q_tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style aggregation (relational parity of the engine)."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -784,6 +891,12 @@ def q_tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count("*").alias("count_order")))
 
 
+@query("join_pushdown", oracle="""
+            SELECT c_mktsegment, count(*) AS n_orders,
+                   round(sum(o_totalprice), 2) AS revenue
+            FROM orders JOIN customer ON o_custkey = c_custkey
+            WHERE o_totalprice > 100000.0
+            GROUP BY c_mktsegment ORDER BY c_mktsegment""")
 def q_join_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribute equi-join with filter pushdown (JoinProcess analog)."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -804,6 +917,13 @@ TUBE_TRACK = [("2024-01-03 00:00:00", 10.0, 20.0),
 TUBE_RADIUS, TUBE_DT = 1_000_000.0, 21_600.0
 
 
+@query("proximity", oracle=f"""
+            SELECT q.query_id, p.event_id, round({_HAV_SQL}, 0) AS dist_m
+            FROM {_POINTS_SQL} p CROSS JOIN (VALUES {", ".join(
+                f"('{q}', {x!r}, {y!r})" for (q, x, y) in PROX_QUERIES)})
+                 AS q(query_id, qlon, qlat)
+            WHERE {_HAV_SQL} <= {PROX_RADIUS!r}
+            ORDER BY query_id, event_id""")
 def q_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ProximitySearchProcess: events within 800 km of each query point."""
     from geomesa_spark.operators.proximity import proximity_join
@@ -813,6 +933,18 @@ def q_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.round("dist_m", 0).alias("dist_m"))
 
 
+@query("tube_select", oracle=f"""
+            WITH p AS (SELECT e.event_id, e.ts, d.lon, d.lat
+                       FROM events e JOIN {_POINTS_SQL} d ON e.event_id = d.event_id)
+            SELECT p.event_id, round(min({_haversine_sql(
+                "p.lon", "p.lat", "t.qlon", "t.qlat")}), 0) AS dist_m
+            FROM p CROSS JOIN (VALUES {", ".join(
+                f"(TIMESTAMP '{t}', {x!r}, {y!r})"
+                for (t, x, y) in TUBE_TRACK)}) AS t(qts, qlon, qlat)
+            WHERE {_haversine_sql("p.lon", "p.lat", "t.qlon", "t.qlat")}
+                    <= {TUBE_RADIUS!r}
+              AND abs(epoch(p.ts) - epoch(t.qts)) <= {TUBE_DT!r}
+            GROUP BY p.event_id ORDER BY p.event_id""")
 def q_tube_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TubeSelectProcess: events within 1000 km AND 6 h of a track."""
     from geomesa_spark.operators.proximity import tube_select
@@ -823,16 +955,31 @@ def q_tube_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", F.round("dist_m", 0).alias("dist_m"))
 
 
+@query("z3_heatmap", oracle=f"""
+            WITH p AS (SELECT e.ts, d.lon, d.lat
+                       FROM events e JOIN {_POINTS_SQL} d ON e.event_id = d.event_id),
+            b AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS sec, lon, lat
+                  FROM p),
+            c AS (SELECT CAST(floor(sec / 604800) AS BIGINT) AS epoch,
+                    least(CAST(floor((lon + 180.0) / 360.0 * 16) AS BIGINT),
+                          15) AS xb,
+                    least(CAST(floor((lat + 90.0) / 180.0 * 16) AS BIGINT),
+                          15) AS yb,
+                    least(CAST(floor((sec - CAST(floor(sec / 604800) AS
+                          BIGINT) * 604800) / 604800.0 * 16) AS BIGINT),
+                          15) AS tb
+                  FROM b)
+            SELECT epoch, ({" | ".join(
+                f"(((xb >> {i}) & 1) << {3 * i}) | "
+                f"(((yb >> {i}) & 1) << {3 * i + 1}) | "
+                f"(((tb >> {i}) & 1) << {3 * i + 2})" for i in range(4))})
+                   AS z3, count(*) AS n
+            FROM c GROUP BY 1, 2 ORDER BY epoch, z3""")
 def q_z3_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z3Histogram: counts keyed by (epoch week, 4-bit/dim z3 cell) — the
     spatio-temporal heatmap, all native Catalyst bit math."""
     from geomesa_spark.cells.z3 import z3_expr
-    # UTC only while this plan is ANALYZED (ResolveTimeZone captures the
-    # session zone into the timestamp expressions); restore afterwards so
-    # the shared session is not order-dependent for later queries
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with _utc(spark):
         pts = _events_points_ts(spark, sf_dir).select("event_id", "ts",
                                                       "lon", "lat")
         k = z3_expr("lon", "lat", "ts", prefix_res=4)
@@ -841,11 +988,15 @@ def q_z3_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("k.z3").alias("z3"))
                .agg(F.count("*").alias("n")))
         out.schema  # force analysis while UTC is active
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    return out
 
 
+# XZ2 prune+refine == plain bbox-intersect over the derived boxes
+@query("xz2_bbox", oracle=f"""
+            SELECT event_id FROM {_POINTS_SQL}
+            WHERE lon - 0.5 <= 40.0 AND lon + 0.5 >= -30.0
+              AND lat - 0.25 <= 35.0 AND lat + 0.25 >= -20.0
+            ORDER BY event_id""")
 def q_xz2_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XZ2 range query over EXTENDED geometries (no time): each event
     becomes a 1.0 x 0.5 degree box indexed by its XZ2 sequence code; the
@@ -857,6 +1008,12 @@ def q_xz2_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id")
 
 
+# S2 cover-prune + exact refine == the plain bbox predicate
+@query("s2_bbox_query", oracle=f"""
+            SELECT event_id FROM {_POINTS_SQL}
+            WHERE lon >= 60.0 AND lon <= 150.0
+              AND lat >= 55.0 AND lat <= 75.0
+            ORDER BY event_id""")
 def q_s2_bbox_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 cell mode (S2SFC parity): assign level-6 S2 cell ids (cube-face
     Hilbert curve), prune a high-latitude bbox query with the S2 cover,
@@ -880,6 +1037,20 @@ def q_s2_bbox_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id"))
 
 
+# mixed AND/OR of bbox + interval + attribute == plain predicate
+# (bbox "intersects" is boundary-inclusive, "contains" strict)
+@query("mixed_filter", oracle=f"""
+            SELECT e.event_id
+            FROM events e JOIN {_POINTS_SQL} d ON e.event_id = d.event_id
+            WHERE (d.lon >= -30.0 AND d.lon <= 40.0
+                   AND d.lat >= -20.0 AND d.lat <= 35.0
+                   AND epoch(e.ts) >= 1704672000.0
+                   AND epoch(e.ts) <= 1705276800.0
+                   AND e.event_type = 'click')
+               OR (d.lon > 100.0 AND d.lon < 140.0
+                   AND d.lat > 0.0 AND d.lat < 50.0
+                   AND e.value > 300.0)
+            ORDER BY e.event_id""")
 def q_mixed_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixed-filter planning (FilterHelper/FilterSplitter semantics): an
     OR of two conjunctions mixing bbox, time interval, and attribute
@@ -889,9 +1060,7 @@ def q_mixed_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geomesa_spark.cells.native import cell_expr
     from geomesa_spark.plans.filters import (Attr, Time, and_, bbox, or_,
                                              plan_query)
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with _utc(spark):
         pts = _events_points_ts(spark, sf_dir) \
             .withColumn("cell_prefix", cell_expr("lon", "lat"))
         f = or_(
@@ -902,11 +1071,20 @@ def q_mixed_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                  Attr("value", ">", 300.0)))
         out = plan_query(pts, f).select("event_id")
         out.schema  # force analysis while UTC is active
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    return out
 
 
+# XZ3 prune+refine must equal the plain bbox-intersect +
+# interval-overlap predicate (events as 1.0 x 0.5 deg boxes alive
+# for 4 hours; window 2024-01-08..15 UTC crosses a week boundary)
+@query("xz3_bbox_time", oracle=f"""
+            SELECT e.event_id
+            FROM events e JOIN {_POINTS_SQL} d ON e.event_id = d.event_id
+            WHERE d.lon - 0.5 <= 40.0 AND d.lon + 0.5 >= -30.0
+              AND d.lat - 0.25 <= 35.0 AND d.lat + 0.25 >= -20.0
+              AND epoch(e.ts) <= 1705276800.0
+              AND epoch(e.ts + INTERVAL 4 HOUR) >= 1704672000.0
+            ORDER BY e.event_id""")
 def q_xz3_bbox_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XZ3 spatio-temporal range query over EXTENDED geometries: each
     event becomes a 1.0 x 0.5 degree box living for 4 hours; the query is
@@ -914,9 +1092,7 @@ def q_xz3_bbox_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     sargable (epoch, xz3) range predicate; refine = exact bbox-intersect
     + interval-overlap (cover may over-select, never under-select)."""
     from geomesa_spark.operators.xz3_query import xz3_query
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with _utc(spark):
         indexed = _events_xz3_table(spark, sf_dir)  # stored (epoch, xz3)
         t0_s = 1704672000.0  # 2024-01-08T00:00:00Z
         t1_s = 1705276800.0  # 2024-01-15T00:00:00Z
@@ -924,13 +1100,125 @@ def q_xz3_bbox_time(spark: SparkSession, sf_dir: str) -> DataFrame:
                         id_col="event_id")
         out = out.select("event_id")
         out.schema  # force analysis while UTC is active
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    return out
 
 
 # ---------------------------------------------- training-data pipeline ops
 
+_TOKS_SQL = ("(SELECT doc_id, text, length(text) AS nc, "
+             "regexp_split_to_array(lower(trim(text)), '\\s+') AS toks "
+             "FROM documents)")
+
+_SHINGLES_SQL = f"""
+    (SELECT doc_id,
+            CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(
+                   generate_series(1, len(toks) - 2),
+                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
+                 ELSE [list_reduce(toks, (x, y) -> x || ' ' || y)] END AS sh
+     FROM {_TOKS_SQL})"""
+
+
+def _jaccard_pairs_sql(threshold: float, cap: int | None = None) -> str:
+    # `cap` mirrors q_ngram_dedup_pairs' audit-sample bound (no-op at the
+    # <= sf0.1 gates). The minhash oracle must stay UNCAPPED: its Spark
+    # side runs over the full corpus.
+    cap_sql = f"WHERE doc_id < {cap}" if cap is not None else ""
+    return f"""
+        WITH e AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS s
+                   FROM {_SHINGLES_SQL}
+                   {cap_sql})
+        SELECT a, b, jaccard FROM (
+          SELECT ea.doc_id AS a, eb.doc_id AS b,
+                 round(count(*) / CAST(ea.n + eb.n - count(*) AS DOUBLE),
+                       6) AS jaccard
+          FROM e ea JOIN e eb ON ea.s = eb.s AND ea.doc_id < eb.doc_id
+          GROUP BY ea.doc_id, eb.doc_id, ea.n, eb.n)
+        WHERE jaccard >= {threshold} ORDER BY a, b"""
+
+
+def _char_hash_sql(expr: str, mult: int) -> str:
+    """DuckDB replica of text.analysis.char_hash_expr (bit-exact)."""
+    return (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
+            f"list_transform(string_split({expr}, ''), "
+            f"c -> CAST(ascii(c) AS BIGINT))), "
+            f"(a, h) -> (a * {mult} + h) % 2147483647)")
+
+
+def _simhash_sql() -> str:
+    from geomesa_spark.text.dedup import (SIMHASH_A2 as _SH_A2,
+                                          SIMHASH_A3 as _SH_A3,
+                                          SIMHASH_B2 as _SH_B2,
+                                          SIMHASH_B3 as _SH_B3,
+                                          _simhash_bit_source)
+    srcs = [_simhash_bit_source(b) for b in range(64)]
+    sums = ", ".join(
+        f"sum(CASE WHEN ((h{idx} >> {pos}) & 1) = 1 "
+        f"THEN 1 ELSE -1 END) AS s{b}"
+        for b, (idx, pos) in enumerate(srcs))
+    bits = " + ".join(
+        f"(CASE WHEN s{b} > 0 THEN "
+        + (f"CAST(-9223372036854775808 AS BIGINT)" if b == 63
+           else f"CAST({1 << b} AS BIGINT)")
+        + " ELSE 0 END)" for b in range(64))
+    return f"""
+        WITH tok AS (
+          SELECT doc_id,
+                 unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+                   AS t
+          FROM documents),
+        h0 AS (SELECT doc_id, {_char_hash_sql('t', 31)} AS h1 FROM tok),
+        h AS (SELECT doc_id, h1,
+                     (h1 * {_SH_A2} + {_SH_B2}) % 2147483647 AS h2,
+                     (h1 * {_SH_A3} + {_SH_B3}) % 2147483647 AS h3
+              FROM h0),
+        s AS (SELECT doc_id, {sums} FROM h GROUP BY doc_id),
+        sig AS (SELECT doc_id, CAST({bits} AS BIGINT) AS sim FROM s)
+        SELECT a.doc_id AS a, b.doc_id AS b,
+               CAST(bit_count(xor(a.sim, b.sim)) AS INT) AS hamming
+        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.sim, b.sim)) <= 3
+        ORDER BY a, b"""
+
+
+# pii_scrub: DuckDB regexp_replace needs the 'g' flag for
+# global replacement (Spark replaces all matches by default);
+# the patterns are the shared Java-regex/RE2 subset from
+# text/analysis.py (no \b, no lookaround, no backreferences)
+@query("pii_scrub", oracle="""
+            WITH aug AS (
+              SELECT doc_id,
+                     CASE WHEN doc_id % 3 = 0 THEN
+                       text || ' contact user' || doc_id
+                            || '@mail.example.com from 10.'
+                            || (doc_id % 256) || '.0.' || (doc_id % 100)
+                            || ' acct ' || (doc_id * 1234567 + 100000000)
+                     ELSE text END AS t
+              FROM documents),
+            s1 AS (
+              SELECT doc_id,
+                     len(regexp_extract_all(t,
+                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
+                       AS n_emails,
+                     regexp_replace(t,
+                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
+                       '<EMAIL>', 'g') AS t1
+              FROM aug),
+            s2 AS (
+              SELECT doc_id, n_emails,
+                     len(regexp_extract_all(t1,
+                       '\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}'))
+                       AS n_ips,
+                     regexp_replace(t1,
+                       '\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}',
+                       '<IP>', 'g') AS t2
+              FROM s1),
+            s3 AS (
+              SELECT doc_id, n_emails, n_ips,
+                     len(regexp_extract_all(t2, '\\d{9,}')) AS n_idnums,
+                     regexp_replace(t2, '\\d{9,}', '<ID>', 'g') AS masked
+              FROM s2)
+            SELECT doc_id, n_emails, n_ips, n_idnums, masked
+            FROM s3 ORDER BY doc_id""")
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction pass (emails / IPv4 / long id-runs masked + counted,
     staged so counts equal replacements). The fixture corpus contains no
@@ -954,6 +1242,25 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "n_emails", "n_ips", "n_idnums", "masked")
 
 
+@query("url_host_stats", oracle="""
+            WITH aug AS (
+              SELECT doc_id,
+                     CASE WHEN doc_id % 4 = 0 THEN
+                       text || ' see https://site' || (doc_id % 50)
+                            || '.example.org/p/' || doc_id
+                            || ' and http://cdn.example.net/x'
+                            || (doc_id % 7)
+                     ELSE text END AS t
+              FROM documents),
+            urls AS (
+              SELECT doc_id, unnest(regexp_extract_all(t,
+                'https?://[A-Za-z0-9.-]+(/[A-Za-z0-9./_-]*)?')) AS url
+              FROM aug)
+            SELECT regexp_extract(url, 'https?://([A-Za-z0-9.-]+)', 1)
+                     AS host,
+                   count(*) AS n_urls,
+                   count(DISTINCT doc_id) AS n_docs
+            FROM urls GROUP BY 1 ORDER BY host""")
 def q_url_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host URL frequency (the corpus domain-mixing profile). The
     fixture has no URLs, so every fourth document is deterministically
@@ -980,6 +1287,20 @@ CONTAM_BENCH_MOD = 97
 CONTAM_FLAG_RATIO = 0.05
 
 
+@query("contamination_check", oracle=f"""
+            WITH s AS (SELECT * FROM {_SHINGLES_SQL}),
+            bench AS (SELECT DISTINCT unnest(sh) AS sg FROM s
+                      WHERE doc_id % {CONTAM_BENCH_MOD} = 0),
+            corp AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS sg
+                     FROM s WHERE doc_id % {CONTAM_BENCH_MOD} <> 0)
+            SELECT doc_id,
+                   count(*) AS n_shared,
+                   CAST(n AS BIGINT) AS n_shingles,
+                   round(count(*) / CAST(n AS DOUBLE), 6) AS ratio,
+                   round(count(*) / CAST(n AS DOUBLE), 6)
+                     >= {CONTAM_FLAG_RATIO!r} AS flagged
+            FROM corp JOIN bench USING (sg)
+            GROUP BY doc_id, n ORDER BY doc_id""")
 def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: per corpus doc, distinct 3-gram shingles
     shared with the benchmark set (docs with doc_id % 97 == 0), ratio and
@@ -1002,6 +1323,14 @@ SAMPLE_RATES = {"en": 0.25, "zh": 0.5, "de": 0.8, "es": 0.8, "fr": 0.8}
 SAMPLE_DEFAULT_RATE = 0.1
 
 
+@query("stratified_sample", oracle=f"""
+            SELECT doc_id, lang, source FROM documents
+            WHERE (doc_id * 2654435761) % 4294967296 <
+              CASE lang {" ".join(
+                  f"WHEN '{k}' THEN {int(v * (1 << 32))}"
+                  for k, v in SAMPLE_RATES.items())}
+              ELSE {int(SAMPLE_DEFAULT_RATE * (1 << 32))} END
+            ORDER BY doc_id""")
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language corpus rebalancing: keep each document
     with its language's rate, decided by a pure hash of doc_id (no RNG
@@ -1021,6 +1350,26 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHARD_TOKENS = 4096
 
 
+# shard_pack's oracle IS the naive unpartitioned running-sum
+# window the Spark operator refuses to run (single-partition at
+# scale) — DuckDB is welcome to it at gate size, and the compare
+# proves the distributed two-level scan is bit-identical to it.
+@query("shard_pack", oracle=f"""
+            WITH t AS (
+              SELECT doc_id,
+                     CAST(len(regexp_split_to_array(lower(trim(text)),
+                                                    '\\s+')) AS BIGINT)
+                       AS n_tokens
+              FROM documents),
+            c AS (
+              SELECT doc_id, n_tokens,
+                     CAST(sum(n_tokens) OVER (ORDER BY doc_id) AS BIGINT)
+                       - n_tokens AS global_start
+              FROM t)
+            SELECT doc_id, n_tokens, global_start,
+                   global_start // {SHARD_TOKENS} AS shard_id,
+                   global_start % {SHARD_TOKENS} AS shard_offset
+            FROM c ORDER BY doc_id""")
 def q_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-shard layout: each document's shard id and offset under a
     4096-token budget in doc_id order. Semantically one global running
@@ -1038,6 +1387,30 @@ def q_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "global_start", "shard_id", "shard_offset")
 
 
+@query("text_quality", oracle=f"""
+            WITH u AS (
+              SELECT doc_id, nc, len(toks) AS nt, list_distinct(toks) AS dt,
+                     nc - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
+                       AS np
+              FROM {_TOKS_SQL}),
+            v AS (
+              SELECT doc_id, nc, nt,
+                     CASE WHEN nc > 0 THEN np / CAST(nc AS DOUBLE)
+                          ELSE 0.0 END AS pr,
+                     CASE WHEN nt > 0 THEN
+                       len(list_intersect(dt, ['the','and','of','to','a','is']))
+                         / CAST(len(dt) AS DOUBLE) ELSE 0.0 END AS sr
+              FROM u)
+            SELECT doc_id, nc AS q_chars, nt AS q_tokens,
+                   round(CASE WHEN nt > 0 THEN (nc - (nt - 1))
+                         / CAST(nt AS DOUBLE) ELSE 0.0 END, 6)
+                     AS q_avg_token_len,
+                   round(pr, 6) AS q_punct_ratio,
+                   round(sr, 6) AS q_stopword_ratio,
+                   round(least(nt / 64.0, 1.0) * 0.4
+                         + (1.0 - least(pr * 4.0, 1.0)) * 0.3
+                         + least(sr * 5.0, 1.0) * 0.3, 6) AS q_score
+            FROM v ORDER BY doc_id""")
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length/punct/stopword features per document."""
     from geomesa_spark.text.analysis import quality_features
@@ -1047,6 +1420,29 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_punct_ratio", "q_stopword_ratio", "q_score")
 
 
+def _markers_sql(lang: str) -> str:
+    from geomesa_spark.text.analysis import LANG_MARKERS
+    return "[" + ", ".join(f"'{m}'" for m in LANG_MARKERS[lang]) + "]"
+
+
+@query("lang_id", oracle=f"""
+            WITH h AS (
+              SELECT doc_id,
+                     len(list_intersect(list_distinct(toks), {_markers_sql('en')})) AS h_en,
+                     len(list_intersect(list_distinct(toks), {_markers_sql('de')})) AS h_de,
+                     len(list_intersect(list_distinct(toks), {_markers_sql('es')})) AS h_es,
+                     len(list_intersect(list_distinct(toks), {_markers_sql('fr')})) AS h_fr
+              FROM {_TOKS_SQL}),
+            p AS (
+              SELECT CASE
+                WHEN greatest(h_en, h_de, h_es, h_fr) = 0 THEN 'und'
+                WHEN h_en >= h_de AND h_en >= h_es AND h_en >= h_fr THEN 'en'
+                WHEN h_de >= h_es AND h_de >= h_fr THEN 'de'
+                WHEN h_es >= h_fr THEN 'es'
+                ELSE 'fr' END AS lang_pred
+              FROM h)
+            SELECT lang_pred, count(*) AS n FROM p
+            GROUP BY lang_pred ORDER BY lang_pred""")
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic: predicted language counts."""
     from geomesa_spark.text.analysis import lang_id
@@ -1055,14 +1451,51 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n")))
 
 
+@query("doc_fingerprint", oracle=f"""
+            WITH t AS (SELECT doc_id,
+                regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+                FROM documents)
+            SELECT doc_id,
+                   list_reduce(list_prepend(CAST(0 AS BIGINT),
+                     list_transform(toks,
+                       tok -> {_char_hash_sql('tok', 31)})),
+                     (acc, h) -> (acc * 31 + h) % 2147483647) AS fp
+            FROM t ORDER BY doc_id""")
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprints (rows-only: crc32 not in DuckDB;
-    exact oracle lives in tests/test_text_pipeline.py)."""
+    """Rolling-hash document fingerprints, checked against a bit-exact
+    SQL replica of the char-fold hash."""
     from geomesa_spark.text.analysis import fingerprint
     docs = _docs(spark, sf_dir)
     return fingerprint(docs).select("doc_id", "fp")
 
 
+@query("repetition_filter", oracle=f"""
+            WITH t AS (
+              SELECT doc_id, toks, len(toks) AS nt,
+                     len(list_distinct(toks)) AS ndt
+              FROM {_TOKS_SQL}),
+            b AS (
+              SELECT doc_id,
+                     unnest(list_transform(generate_series(1, nt - 1),
+                            i -> toks[i] || ' ' || toks[i+1])) AS bg
+              FROM t WHERE nt >= 2),
+            c AS (SELECT doc_id, bg, count(*) AS c
+                  FROM b GROUP BY doc_id, bg),
+            m AS (SELECT doc_id, max(c) AS topc FROM c GROUP BY doc_id),
+            v AS (
+              SELECT t.doc_id, nt,
+                     CASE WHEN nt > 0
+                          THEN 1.0 - ndt / CAST(nt AS DOUBLE)
+                          ELSE 0.0 END AS dupf,
+                     CASE WHEN nt >= 2
+                          THEN coalesce(topc, 0) / CAST(nt - 1 AS DOUBLE)
+                          ELSE 0.0 END AS tops
+              FROM t LEFT JOIN m ON t.doc_id = m.doc_id)
+            SELECT doc_id, nt AS rep_tokens,
+                   round(dupf, 6) AS rep_dup_token_frac,
+                   round(tops, 6) AS rep_top_bigram_share,
+                   (tops > 0.18 OR dupf > 0.6) AS rep_flagged
+            FROM v ORDER BY doc_id""")
 def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality filters: duplicate-token fraction
     + top-bigram share per doc and the drop flag a training pipeline
@@ -1072,6 +1505,11 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_features(docs)
 
 
+@query("exact_dedup", oracle="""
+            SELECT min(doc_id) AS doc_id, count(*) AS dup_count
+            FROM documents
+            GROUP BY regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')
+            ORDER BY doc_id""")
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text: keeper id + group size."""
     from geomesa_spark.text.dedup import exact_dedup
@@ -1082,6 +1520,8 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM_EXACT_CAP = 5000
 
 
+@query("ngram_dedup_pairs", oracle=_jaccard_pairs_sql(0.3,
+                                                cap=_NGRAM_EXACT_CAP))
 def q_ngram_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs 3-gram Jaccard near-dup pairs (threshold 0.3) over
     a bounded audit sample. Exact shingle-join cost grows with the sum of
@@ -1098,6 +1538,7 @@ def q_ngram_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                audit_cap=_NGRAM_EXACT_CAP)
 
 
+@query("minhash_dedup_pairs", oracle=_jaccard_pairs_sql(0.5))
 def q_minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs, exact-verified (threshold 0.5): output
     equals brute-force Jaccard pairs (miss prob <= (1-t^2)^64 ~ 1e-8)."""
@@ -1106,24 +1547,39 @@ def q_minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_pairs(docs, threshold=0.5)
 
 
+@query("simhash_dedup_pairs", oracle=_simhash_sql())
 def q_simhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs within hamming 3 (rows-only: crc32 not in
-    DuckDB; pigeonhole-exact semantics tested in pytest)."""
+    """SimHash near-dup pairs within hamming 3, checked against a SQL
+    replica of the char-fold token hashes and the 64-bit signature;
+    pigeonhole-exact semantics are tested in pytest."""
     from geomesa_spark.text.dedup import simhash_pairs
     docs = _docs(spark, sf_dir)
     return simhash_pairs(docs, max_hamming=3)
 
 
+def _ann_queries(emb: DataFrame) -> DataFrame:
+    """The ANN query set: every 50th vector, keyed by its id."""
+    return emb.where(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").cast("string").alias("query_id"), "embedding")
+
+
+@query("ann_topk", oracle=_EXACT_ANN_SQL)
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-10 for every 50th vector as query."""
     from geomesa_spark.ml.similarity import cosine_topk
     emb = _emb(spark, sf_dir)
-    queries_df = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").cast("string").alias("query_id"), "embedding")
+    queries_df = _ann_queries(emb)
     out = cosine_topk(emb, queries_df, 10)
     return out.select("query_id", "rank", "vec_id")
 
 
+@query("embedding_near_dup", oracle="""
+            SELECT a.vec_id AS a, b.vec_id AS b
+            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+            WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+                                         CAST(b.embedding AS DOUBLE[]))
+                  >= 0.4
+            ORDER BY a, b""")
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (exact, threshold 0.4) via the
     distributed block-matrix join — no driver-side collect of the corpus
@@ -1134,6 +1590,8 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     method="block").select("a", "b")
 
 
+@query("lsh_topk", oracle=lambda sf_dir: _lsh_oracle_sql(
+    _ensure_lsh_oracle_index(sf_dir)[0]))
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-10 (random hyperplanes, 8 tables,
     multiprobe) for the same query set as ann_topk. The DuckDB twin reads
@@ -1143,8 +1601,7 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate fixtures by plane-count sizing) is asserted in pytest."""
     from geomesa_spark.ml.similarity import lsh_topk_indexed
     emb = _emb(spark, sf_dir)
-    queries_df = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").cast("string").alias("query_id"), "embedding")
+    queries_df = _ann_queries(emb)
     index, meta = _lsh_index_table(spark, sf_dir)  # stored + sidecar
     out = lsh_topk_indexed(index, emb, queries_df, 10,
                            n_planes=meta["n_planes"],
@@ -1154,6 +1611,8 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "rank", "vec_id")
 
 
+@query("ivf_topk", oracle=lambda sf_dir: _ivf_oracle_sql(
+    _ensure_ivf_oracle_index(sf_dir), _IVF_NPROBE))
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat approximate top-10 over the STORED inverted-list index
     (sqrt(n) spherical-kmeans lists, nprobe=4) for the same query set as
@@ -1163,8 +1622,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately in pytest (lsh_topk's twin now follows this design)."""
     from geomesa_spark.ml.ivf import ivf_topk_indexed
     emb = _emb(spark, sf_dir)
-    queries_df = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").cast("string").alias("query_id"), "embedding")
+    queries_df = _ann_queries(emb)
     index, cents, meta = _ivf_index_table(spark, sf_dir)
     out = ivf_topk_indexed(index, queries_df, 10, nprobe=_IVF_NPROBE,
                            centroids=cents, seed=meta["seed"],
@@ -1173,6 +1631,29 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("query_id", "rank", "vec_id")
 
 
+def _ann_routed_oracle(sf_dir: str) -> str:
+    """Router-aware twin of ann_routed: replicate the cost decision
+    (`ml/router.py:decide_ann` — pure arithmetic over corpus/query
+    counts + the index sidecars, the same inputs ``q_ann_routed``
+    passes) and return the SQL twin of WHICHEVER path the engine will
+    take: the exact cross-join at gate scale, the index-reading twin
+    when the router switches to a stored index (>=50k vectors)."""
+    from geomesa_spark.ml.ivf import read_ivf_meta
+    from geomesa_spark.ml.router import decide_ann
+    n = _parquet_num_rows(f"{sf_dir}/embeddings.parquet")
+    lsh_path, lsh_meta = _ensure_lsh_oracle_index(sf_dir)
+    ivf_path = _ensure_ivf_oracle_index(sf_dir)
+    s = decide_ann(n, (n + 49) // 50, lsh_meta=lsh_meta,
+                   ivf_meta=read_ivf_meta(ivf_path),
+                   multiprobe=2, nprobe=_IVF_NPROBE)
+    if s.kind == "lsh":
+        return _lsh_oracle_sql(lsh_path)
+    if s.kind == "ivf":
+        return _ivf_oracle_sql(ivf_path, _IVF_NPROBE)
+    return _EXACT_ANN_SQL
+
+
+@query("ann_routed", oracle=_ann_routed_oracle)
 def q_ann_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cost-routed ANN (StrategyDecider parity for the ANN family): the
     decider (`ml/router.py:decide_ann`) weighs exact vs the two stored
@@ -1186,8 +1667,7 @@ def q_ann_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries, BENCH_SF1_LOCAL)."""
     from geomesa_spark.ml.router import ann_topk_routed
     emb = _emb(spark, sf_dir)
-    queries_df = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").cast("string").alias("query_id"), "embedding")
+    queries_df = _ann_queries(emb)
     lsh_index, lsh_meta = _lsh_index_table(spark, sf_dir)
     ivf_index, cents, ivf_meta = _ivf_index_table(spark, sf_dir)
     # pass the counts the router would otherwise re-derive per call:
@@ -1206,6 +1686,10 @@ def q_ann_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ID_LOOKUP_IDS = [3, 1717, 4242, 7777, 9999]
 
 
+@query("id_lookup", oracle=f"""
+            SELECT event_id, event_type, value, lon, lat FROM {_POINTS_SQL}
+            WHERE event_id IN ({", ".join(map(str, _ID_LOOKUP_IDS))})
+            ORDER BY event_id""")
 def q_id_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Fetch these feature ids': the strategy decider picks the id
     strategy (exact |ids| cost — IdFilterStrategy parity) and the scan
@@ -1220,513 +1704,13 @@ def q_id_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "event_type", "value", "lon", "lat")
 
 
+def _scale_factor(sf_dir: str) -> float:
+    return float(sf_dir.rstrip("/").split("sf")[-1])
+
+
 def _n_images(sf_dir: str) -> int:
-    sf = float(sf_dir.rstrip("/").split("sf")[-1])
+    sf = _scale_factor(sf_dir)
     return max(200, int(50_000 * sf))
-
-
-def q_image_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tile assignment over the deterministic image fixture, value-checked
-    end-to-end: the DuckDB oracle regenerates every coordinate bit-exactly
-    (sha256 phash bits -> base lon/lat; sha256 Irwin-Hall city offsets for
-    hot rows) and re-derives the Morton tile in SQL."""
-    from geomesa_spark.operators.tiles import tile_counts
-    from geomesa_spark.raster.fixtures import images_df
-    return tile_counts(images_df(spark, _n_images(sf_dir)))
-
-
-def q_image_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zoom pyramid over the image fixture: counts per tile per
-    resolution 1..4. One data shuffle at the finest level; coarser levels
-    roll up the (already tiny) aggregate by Morton-prefix truncation."""
-    from geomesa_spark.operators.tiles import tile_pyramid
-    from geomesa_spark.raster.fixtures import images_df
-    return tile_pyramid(images_df(spark, _n_images(sf_dir)),
-                        max_res=4, min_res=1)
-
-
-def q_image_brightness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode images (pandas-UDF codec) and aggregate decoded-pixel
-    brightness per format. Value-checked end-to-end: the fixture noise is
-    counter-mode sha256 (``raster/fixtures.py:_pixel_noise``) so the
-    DuckDB oracle regenerates every decoded pixel — gradient, noise,
-    clip, and the q5 quantize/reconstruct — bit-exactly in SQL, and the
-    aggregate is an exact integer pixel-sum divided once (IEEE-identical
-    on both engines; decode fidelity separately pytest-gated at
-    PSNR>=40dB)."""
-    from geomesa_spark.operators.tiles import image_features
-    from geomesa_spark.raster.fixtures import images_df
-    imgs = images_df(spark, _n_images(sf_dir))
-    return (image_features(imgs)
-            .join(imgs.select("image_id", "fmt"), "image_id")
-            .groupBy("fmt")
-            .agg(F.count("*").alias("n"),
-                 (F.sum("px_sum").cast("double") /
-                  F.sum("n_px").cast("double")).alias("avg_brightness")))
-
-
-def _n_audio(sf_dir: str) -> int:
-    sf = float(sf_dir.rstrip("/").split("sf")[-1])
-    return max(100, int(1_000_000 * sf) // 100)
-
-
-def _n_videos(sf_dir: str) -> int:
-    sf = float(sf_dir.rstrip("/").split("sf")[-1])
-    return max(60, int(1_000_000 * sf) // 160)
-
-
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio feature-extract stage over the deterministic PCM fixture
-    (duration, RMS, peak, zero-cross rate). Value-checked end-to-end:
-    the fixture PCM is counter-mode sha256 (media_fixtures.reference_pcm)
-    so the DuckDB oracle regenerates every sample and reproduces each
-    feature as an exact integer sum divided once (IEEE-identical)."""
-    from geomesa_spark.raster.media import audio_features
-    from geomesa_spark.raster.media_fixtures import audio_df
-    clips = audio_df(spark, _n_audio(sf_dir))
-    return audio_features(clips).select(
-        "media_id",
-        F.round("duration_s", 6).alias("duration_s"),
-        F.round("rms", 6).alias("rms"),
-        "peak",
-        F.round("zero_cross_rate", 6).alias("zero_cross_rate"))
-
-
-def q_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling stage (every 2nd frame) + per-frame mean
-    value over the deterministic video fixture — the sha256 pixel
-    construction makes the sampled-frame statistics SQL-regenerable
-    bit-exactly (same pattern as image_brightness)."""
-    from geomesa_spark.raster.media import frame_stats, sample_frames
-    from geomesa_spark.raster.media_fixtures import videos_df
-    vids = videos_df(spark, _n_videos(sf_dir))
-    return frame_stats(sample_frames(vids, every=2)).select(
-        "media_id", "frame_idx",
-        F.round("mean_value", 6).alias("mean_value"))
-
-
-def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-data pipeline composition: quality-score filter
-    -> exact dedup (min-id keeper) -> join embeddings -> per-language
-    stats. Every stage is one of the engine's operators; the whole thing
-    is a single Catalyst plan."""
-    from geomesa_spark.text.analysis import quality_features
-    from geomesa_spark.text.dedup import normalized_text
-    from pyspark.sql import Window
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = quality_features(docs).where(F.col("q_score") >= 0.5)
-    w = Window.partitionBy(normalized_text("text")).orderBy("doc_id")
-    kept = (q.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1))
-    norm = F.sqrt(F.aggregate(
-        "embedding", F.lit(0.0),
-        lambda a, x: a + x.cast("double") * x.cast("double")))
-    joined = kept.join(emb, kept["doc_id"] == emb["vec_id"]) \
-        .withColumn("_norm", norm)
-    return joined.groupBy("lang").agg(
-        F.count("*").alias("n"),
-        F.round(F.avg("_norm"), 6).alias("avg_norm"),
-        F.round(F.avg("q_score"), 6).alias("avg_score"))
-
-
-def q_stats_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stat-query surface (Stats process: cardinality + quantiles per
-    type). Value-checked: exact distinct + exact interpolated percentile
-    (DuckDB quantile_cont twin). The approximate-sketch variants
-    (approx_count_distinct / count_min_sketch / percentile_approx) have
-    no cross-engine oracle and are bound-gated in
-    tests/test_stats_sketches.py instead."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("n_users"),
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("q50"),
-        F.round(F.expr("percentile(value, 0.95)"), 6).alias("q95"))
-
-
-def q_density_footprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DensityScan polygon renderer: rasterize the region boxes onto a
-    72x36 world grid (RenderingGrid semantics: snapped scanline fill),
-    summing weight per pixel."""
-    from geomesa_spark.operators.density import density_footprint
-    out = density_footprint(_regions_df(spark),
-                            envelope=(-180.0, -90.0, 180.0, 90.0),
-                            width=72, height=36)
-    return out.select("col", "row", "x", "y",
-                      F.col("weight").cast("long").alias("weight"))
-
-
-def q_descriptive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DescriptiveStats stat: mean/var/stddev/skew/kurtosis + correlation
-    (Stat.scala:313 semantics via built-in aggregates)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.round(F.avg("value"), 6).alias("mean_v"),
-        F.round(F.var_samp("value"), 6).alias("var_v"),
-        F.round(F.stddev_samp("value"), 6).alias("std_v"),
-        F.round(F.corr("value", F.col("user_id").cast("double")), 6)
-        .alias("corr_vu"))
-
-
-def q_region_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polygon-polygon spatial join (st_intersects) of the region boxes
-    against themselves — the general geometry-pair join path with
-    cover-cell equi-join + exact refine + (a,b) dedupe."""
-    from geomesa_spark.operators.join import spatial_join_pairs
-    reg = _wide_regions_df(spark)
-    left = reg.select(F.col("region_id").alias("a"),
-                      F.col("geom").alias("geom_a"))
-    right = reg.select(F.col("region_id").alias("b"),
-                       F.col("geom").alias("geom_b"))
-    out = spatial_join_pairs(left, right, predicate="st_intersects",
-                             left_geom="geom_a", right_geom="geom_b",
-                             left_id="a", right_id="b")
-    return (out.where(F.col("a").cast("int") < F.col("b").cast("int"))
-            .select("a", "b"))
-
-
-def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ConvexHull UDAF (partial-hull merge) + st_geomFromWKT/st_numPoints/
-    st_area over the result, value-checked against a DuckDB recursive
-    gift-wrapping oracle. Coordinates are the exact integer event grid so
-    every cross product is exact in float64 — the two hull algorithms
-    (monotone chain here, gift wrap in SQL) provably agree. Hull WKT
-    strings themselves are byte-layout-gated in tests/test_export.py."""
-    from geomesa_spark.operators.export import convex_hull_agg
-    from geomesa_spark.sources import read_balanced
-    _ensure_functions(spark)
-    # full-scan query with PYTHON pre-shuffle work (the mapInPandas
-    # partial-hull stage): split-balance the single-row-group fixture
-    # scan so the partials run on every core (see _docs)
-    ev = read_balanced(spark, f"{sf_dir}/events.parquet")
-    pts = ev.select(
-        "user_id",
-        (F.col("event_id") * 7919 % 36000).cast("double").alias("lon"),
-        (F.col("event_id") * 104729 % 18000).cast("double").alias("lat"))
-    hulls = convex_hull_agg(pts, group_cols=["user_id"])
-    n_pts = F.expr("st_numPoints(st_geomFromWKT(hull_wkt))")
-    return hulls.select(
-        "user_id",
-        F.when(F.col("hull_wkt").startswith("POLYGON"), n_pts - 1)
-        .otherwise(n_pts).cast("long").alias("n_vertices"),
-        F.round(F.expr("st_area(st_geomFromWKT(hull_wkt))"), 1)
-        .alias("area"))
-
-
-def q_bin_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BinAggregatingScan: 16-byte BIN viz records per event. The decoded
-    record fields (epoch seconds, float32 lat/lon, record width) are
-    value-checked against SQL recomputation; the crc32 track hash and the
-    packed byte layout have no DuckDB twin and are pytest-gated
-    (tests/test_export.py)."""
-    from geomesa_spark.operators.export import to_bin_records
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pts = ev.select(
-        "event_id", "ts", "user_id",
-        ((F.col("event_id") * 7919 % 36000) / 100.0 - 180.0).alias("lon"),
-        ((F.col("event_id") * 104729 % 18000) / 100.0 - 90.0).alias("lat"))
-    out = to_bin_records(pts, track="user_id", passthrough=("event_id",),
-                         emit_fields=True)
-    return out.select(
-        "event_id", "secs",
-        F.col("lat32").cast("double").alias("lat32"),
-        F.col("lon32").cast("double").alias("lon32"),
-        F.length("bin").alias("nbytes"))
-
-
-def q_geojson_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GeoJSON feature export (RFC 7946 Features; byte-identical strings
-    assembled in the SQL oracle)."""
-    from geomesa_spark.operators.export import to_geojson_features
-    pts = _events_points(spark, sf_dir).select("event_id", "lon", "lat")
-    return to_geojson_features(pts, id_col="event_id")
-
-
-def q_point2point(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point2Point process: per-user consecutive track segments ordered
-    by ts (Point2PointProcess.scala semantics: strict min-points,
-    zero-length filtering), value-checked against a SQL window oracle."""
-    from geomesa_spark.operators.processes import point2point
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        pts = ev.select(
-            "event_id", "user_id", "ts",
-            ((F.col("event_id") * 7919 % 36000) / 100.0 - 180.0)
-            .alias("lon"),
-            ((F.col("event_id") * 104729 % 18000) / 100.0 - 90.0)
-            .alias("lat"))
-        out = point2point(pts, group="user_id", sort="ts",
-                          min_points=5, tiebreak=["event_id"])
-        out = out.select(
-            "user_id", "seg", "x1", "y1", "x2", "y2",
-            F.col("ts_start").cast("timestamp").cast("double")
-            .alias("t_start"),
-            F.col("ts_end").cast("timestamp").cast("double")
-            .alias("t_end"),
-            F.round("dist_m", 0).alias("dist_m"))
-        out.schema  # force analysis while UTC is active
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-def q_track_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TrackLabel process: the latest event per user (ties by event_id
-    descending — the deterministic form of the reference's maxBy)."""
-    from geomesa_spark.operators.processes import track_label
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        out = track_label(ev, track="user_id", dtg="ts",
-                          tiebreak=["event_id"])
-        out = out.select("user_id", "event_id",
-                         F.col("ts").cast("timestamp").cast("double")
-                         .alias("t"), "value")
-        out.schema
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-def q_date_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DateOffset process: shift ts by P1DT2H, emit epoch seconds."""
-    from geomesa_spark.operators.processes import date_offset
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        out = date_offset(ev, date_col="ts", offset="P1DT2H")
-        out = out.select("event_id",
-                         F.col("ts").cast("timestamp").cast("double")
-                         .alias("t_shifted"))
-        out.schema
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-def q_hash_attribute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HashAttribute process: deterministic bucket of event_type mod 7
-    (char-fold hash — bit-exact in the SQL oracle)."""
-    from geomesa_spark.operators.processes import hash_attribute
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return hash_attribute(ev, attribute="event_type", modulo=7) \
-        .select("event_id", "hash")
-
-
-def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate images by perceptual-hash hamming distance: the
-    deterministic image-id grid derives phash natively (sha2 + conv),
-    planted duplicates flip <= 3 known bits, and the generalized
-    pigeonhole banding (text/dedup.py:hamming_pairs) recovers exactly the
-    planted pairs — value-checked against a DuckDB cross-join oracle."""
-    from geomesa_spark.operators.tiles import phash_expr, phash_pairs
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .where(F.col("event_id") < 3000).select("event_id")
-    base = ev.select(
-        F.format_string("img-%012d", "event_id").alias("image_id"),
-        phash_expr(F.format_string("img-%012d", "event_id")).alias("phash"),
-        F.col("event_id"))
-    mask = F.expr(
-        "shiftleft(1L, cast(event_id*7%63 as int)) ^ "
-        "shiftleft(1L, cast(event_id*13%63 as int)) ^ "
-        "shiftleft(1L, cast(event_id*29%63 as int))")
-    dups = base.select(
-        F.format_string("dup-%012d", "event_id").alias("image_id"),
-        F.col("phash").bitwiseXOR(mask).alias("phash"),
-        "event_id")
-    corpus = base.unionByName(dups).select("image_id", "phash")
-    out = phash_pairs(corpus, max_hamming=3)
-    return out.select("a", "b", F.col("hamming").cast("int").alias("hamming"))
-
-
-def _phash_cluster_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus of (image_id, phash) triples per event id < 1500: the base
-    image plus TWO planted near-dups (distinct <=3-bit masks). dup and
-    dup2 are usually 6 bits apart — NOT a pair at max_hamming=3 — so the
-    3-member cluster only falls out through transitive closure."""
-    from geomesa_spark.operators.tiles import phash_expr
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
-        .where(F.col("event_id") < 1500).select("event_id")
-    base = ev.select(
-        F.format_string("img-%012d", "event_id").alias("image_id"),
-        phash_expr(F.format_string("img-%012d", "event_id")).alias("phash"),
-        F.col("event_id"))
-    m1 = F.expr(
-        "shiftleft(1L, cast(event_id*7%63 as int)) ^ "
-        "shiftleft(1L, cast(event_id*13%63 as int)) ^ "
-        "shiftleft(1L, cast(event_id*29%63 as int))")
-    m2 = F.expr(
-        "shiftleft(1L, cast(event_id*11%63 as int)) ^ "
-        "shiftleft(1L, cast(event_id*17%63 as int)) ^ "
-        "shiftleft(1L, cast(event_id*23%63 as int))")
-    dup1 = base.select(
-        F.format_string("dup-%012d", "event_id").alias("image_id"),
-        F.col("phash").bitwiseXOR(m1).alias("phash"), "event_id")
-    dup2 = base.select(
-        F.format_string("dup2-%012d", "event_id").alias("image_id"),
-        F.col("phash").bitwiseXOR(m2).alias("phash"), "event_id")
-    return base.unionByName(dup1).unionByName(dup2) \
-        .select("image_id", "phash")
-
-
-def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup last mile: phash near-dup PAIRS -> connected components ->
-    one row per cluster with its canonical keeper (min member id) and
-    member count. Clusters need transitive closure (dup <-> dup2 is not
-    itself a pair) — value-checked against a DuckDB recursive-CTE CC."""
-    from geomesa_spark.operators.graph import dedup_clusters
-    from geomesa_spark.operators.tiles import phash_pairs
-    pairs = phash_pairs(_phash_cluster_corpus(spark, sf_dir),
-                        max_hamming=3)
-    return dedup_clusters(pairs).select("keeper", "n_members")
-
-
-# RouteSearch fixtures: two long polylines over the global event grid;
-# every coordinate is an exact binary double so the Spark literals and
-# the SQL VALUES are bit-identical.
-ROUTE_COORDS = [
-    [(-170.0, -80.0), (-100.0, -20.0), (-30.0, 40.0), (40.0, 80.0)],
-    [(60.0, -70.0), (100.0, 0.0), (150.0, 60.0)],
-]
-ROUTE_BUFFER_M = 800_000.0
-ROUTE_HEADING_THRESH = 60.0
-
-
-def q_route_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RouteSearch process: events within 800 km of a route whose
-    heading tracks the closest in-buffer segment's bearing within 60
-    degrees (bidirectional). Heading is a deterministic function of
-    event_id so the SQL oracle replays it exactly."""
-    from geomesa_spark.operators.processes import route_search
-    pts = _events_points(spark, sf_dir).select(
-        "event_id", "lon", "lat",
-        ((F.col("event_id") * 131 % 3600) / 10.0).alias("heading"))
-    out = route_search(pts, ROUTE_COORDS, buffer_m=ROUTE_BUFFER_M,
-                       heading_threshold=ROUTE_HEADING_THRESH,
-                       id_col="event_id", bidirectional=True)
-    return out.select("event_id", "lon", "lat", "heading", "route_id",
-                      "seg", "dist_m", "route_heading")
-
-
-_LAST_QUERY_SF_DIR: str | None = None
-
-
-def _wrap(fn: Callable[[SparkSession, str], DataFrame]
-          ) -> Callable[[SparkSession, str], DataFrame]:
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # remember the SF the queries actually run on so the one
-        # env-coupled oracle (_ivf_oracle_entry) reads the index over
-        # the SAME data even when SPARK_GRAFT_ORACLE_SF_DIR is unset
-        global _LAST_QUERY_SF_DIR
-        _LAST_QUERY_SF_DIR = sf_dir
-        _ensure_workers(spark)
-        return fn(spark, sf_dir)
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    return wrapped
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _wrap(fn) for name, fn in _raw_queries().items()}
-
-
-def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering note: the correctness driver value-checks the FIRST 50
-    # entries only.  Queries that have not yet appeared in a driver
-    # CORRECTNESS window lead the dict; every entry past position 50 is
-    # driver-green in CORRECTNESS_r04 (and still swept every session by
-    # this repo's own `tools/check_oracles.py`, all 61 green).
-    return {
-        "id_lookup": q_id_lookup,
-        "hash_attribute": q_hash_attribute,
-        "route_search": q_route_search,
-        "phash_near_dup": q_phash_near_dup,
-        "near_dup_clusters": q_near_dup_clusters,
-        "ann_routed": q_ann_routed,
-        "pii_scrub": q_pii_scrub,
-        "url_host_stats": q_url_host_stats,
-        "contamination_check": q_contamination_check,
-        "stratified_sample": q_stratified_sample,
-        "shard_pack": q_shard_pack,
-        "spatial_join_contains": q_spatial_join_contains,
-        "spatial_join_intersects": q_spatial_join_intersects,
-        "knn": q_knn,
-        "density_grid": q_density_grid,
-        "cell_assignment": q_cell_assignment,
-        "bbox_query": q_bbox_query,
-        "distance_filter": q_distance_filter,
-        "geohash_agg": q_geohash_agg,
-        "sampling": q_sampling,
-        "topk_per_key": q_topk_per_key,
-        "tpch_pricing_summary": q_tpch_pricing_summary,
-        "join_pushdown": q_join_pushdown,
-        "proximity": q_proximity,
-        "tube_select": q_tube_select,
-        "z3_heatmap": q_z3_heatmap,
-        "xz3_bbox_time": q_xz3_bbox_time,
-        "mixed_filter": q_mixed_filter,
-        "xz2_bbox": q_xz2_bbox,
-        "s2_bbox_query": q_s2_bbox_query,
-        "text_quality": q_text_quality,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "repetition_filter": q_repetition_filter,
-        "exact_dedup": q_exact_dedup,
-        "ngram_dedup_pairs": q_ngram_dedup_pairs,
-        "minhash_dedup_pairs": q_minhash_dedup_pairs,
-        "simhash_dedup_pairs": q_simhash_dedup_pairs,
-        "ann_topk": q_ann_topk,
-        "lsh_topk": q_lsh_topk,
-        "ivf_topk": q_ivf_topk,
-        "embedding_near_dup": q_embedding_near_dup,
-        "image_tile_counts": q_image_tile_counts,
-        "image_tile_pyramid": q_image_tile_pyramid,
-        "image_brightness": q_image_brightness,
-        "audio_features": q_audio_features,
-        "video_frame_stats": q_video_frame_stats,
-        "training_pipeline": q_training_pipeline,
-        "stats_sketches": q_stats_sketches,
-        "density_footprint": q_density_footprint,
-        # --- past the driver's 50-entry window (long-stable, driver-green
-        # in CORRECTNESS_r04; still swept by tools/check_oracles.py) ---
-        "descriptive_stats": q_descriptive_stats,
-        "region_self_join": q_region_self_join,
-        "convex_hull": q_convex_hull,
-        "bin_export": q_bin_export,
-        "point2point": q_point2point,
-        "track_label": q_track_label,
-        "stats_minmax": q_stats_minmax,
-        "unique_values": q_unique_values,
-        "histogram": q_histogram,
-        "date_offset": q_date_offset,
-        "geojson_export": q_geojson_export,
-    }
-
-
-# ------------------------------------------------------------- oracles
-
-def _haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    return (f"2 * {EARTH_R!r} * asin(least(1.0, sqrt("
-            f"sin(radians(({lat2}) - ({lat1})) / 2) * sin(radians(({lat2}) - ({lat1})) / 2)"
-            f" + cos(radians({lat1})) * cos(radians({lat2}))"
-            f" * sin(radians(({lon2}) - ({lon1})) / 2) * sin(radians(({lon2}) - ({lon1})) / 2))))")
-
-
-def _z2_sql(res: int) -> str:
-    """Morton interleave of res-bit bins as a DuckDB expression."""
-    n = 1 << res
-    xbin = f"least(CAST(floor((lon + 180.0) / 360.0 * {n}) AS BIGINT), {n - 1})"
-    ybin = f"least(CAST(floor((lat + 90.0) / 180.0 * {n}) AS BIGINT), {n - 1})"
-    terms = []
-    for i in range(res):
-        terms.append(f"((({xbin}) >> {i}) & 1) << {2 * i}")
-        terms.append(f"((({ybin}) >> {i}) & 1) << {2 * i + 1}")
-    return " | ".join(f"({t})" for t in terms)
 
 
 def _image_coords_cte() -> str:
@@ -1839,6 +1823,59 @@ def _image_brightness_sql() -> str:
         FROM dec GROUP BY fmt ORDER BY fmt"""
 
 
+@query("image_tile_counts", oracle=_image_tiles_sql())
+def q_image_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tile assignment over the deterministic image fixture, value-checked
+    end-to-end: the DuckDB oracle regenerates every coordinate bit-exactly
+    (sha256 phash bits -> base lon/lat; sha256 Irwin-Hall city offsets for
+    hot rows) and re-derives the Morton tile in SQL."""
+    from geomesa_spark.operators.tiles import tile_counts
+    from geomesa_spark.raster.fixtures import images_df
+    return tile_counts(images_df(spark, _n_images(sf_dir)))
+
+
+@query("image_tile_pyramid", oracle=_image_pyramid_sql())
+def q_image_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zoom pyramid over the image fixture: counts per tile per
+    resolution 1..4. One data shuffle at the finest level; coarser levels
+    roll up the (already tiny) aggregate by Morton-prefix truncation."""
+    from geomesa_spark.operators.tiles import tile_pyramid
+    from geomesa_spark.raster.fixtures import images_df
+    return tile_pyramid(images_df(spark, _n_images(sf_dir)),
+                        max_res=4, min_res=1)
+
+
+@query("image_brightness", oracle=_image_brightness_sql())
+def q_image_brightness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Decode images (pandas-UDF codec) and aggregate decoded-pixel
+    brightness per format. Value-checked end-to-end: the fixture noise is
+    counter-mode sha256 (``raster/fixtures.py:_pixel_noise``) so the
+    DuckDB oracle regenerates every decoded pixel — gradient, noise,
+    clip, and the q5 quantize/reconstruct — bit-exactly in SQL, and the
+    aggregate is an exact integer pixel-sum divided once (IEEE-identical
+    on both engines; decode fidelity separately pytest-gated at
+    PSNR>=40dB)."""
+    from geomesa_spark.operators.tiles import image_features
+    from geomesa_spark.raster.fixtures import images_df
+    imgs = images_df(spark, _n_images(sf_dir))
+    return (image_features(imgs)
+            .join(imgs.select("image_id", "fmt"), "image_id")
+            .groupBy("fmt")
+            .agg(F.count("*").alias("n"),
+                 (F.sum("px_sum").cast("double") /
+                  F.sum("n_px").cast("double")).alias("avg_brightness")))
+
+
+def _n_audio(sf_dir: str) -> int:
+    sf = _scale_factor(sf_dir)
+    return max(100, int(1_000_000 * sf) // 100)
+
+
+def _n_videos(sf_dir: str) -> int:
+    sf = _scale_factor(sf_dir)
+    return max(60, int(1_000_000 * sf) // 160)
+
+
 def _audio_features_sql() -> str:
     """SQL twin of q_audio_features: regenerates every PCM sample of
     every fixture clip (counter-mode sha256 words % 4001 - 2000,
@@ -1875,6 +1912,24 @@ def _audio_features_sql() -> str:
         FROM feat ORDER BY media_id"""
 
 
+@query("audio_features", oracle=_audio_features_sql())
+def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio feature-extract stage over the deterministic PCM fixture
+    (duration, RMS, peak, zero-cross rate). Value-checked end-to-end:
+    the fixture PCM is counter-mode sha256 (media_fixtures.reference_pcm)
+    so the DuckDB oracle regenerates every sample and reproduces each
+    feature as an exact integer sum divided once (IEEE-identical)."""
+    from geomesa_spark.raster.media import audio_features
+    from geomesa_spark.raster.media_fixtures import audio_df
+    clips = audio_df(spark, _n_audio(sf_dir))
+    return audio_features(clips).select(
+        "media_id",
+        F.round("duration_s", 6).alias("duration_s"),
+        F.round("rms", 6).alias("rms"),
+        "peak",
+        F.round("zero_cross_rate", 6).alias("zero_cross_rate"))
+
+
 def _video_frame_stats_sql() -> str:
     """SQL twin of q_video_frame_stats: regenerates the sampled frames'
     pixels (sha256 words % 256, media_fixtures.reference_video; sample k
@@ -1899,6 +1954,515 @@ def _video_frame_stats_sql() -> str:
                round(CAST(sum(v) AS DOUBLE) / count(*), 6) AS mean_value
         FROM vals WHERE frame % 2 = 0
         GROUP BY i, frame ORDER BY media_id, frame_idx"""
+
+
+@query("video_frame_stats", oracle=_video_frame_stats_sql())
+def q_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video frame-sampling stage (every 2nd frame) + per-frame mean
+    value over the deterministic video fixture — the sha256 pixel
+    construction makes the sampled-frame statistics SQL-regenerable
+    bit-exactly (same pattern as image_brightness)."""
+    from geomesa_spark.raster.media import frame_stats, sample_frames
+    from geomesa_spark.raster.media_fixtures import videos_df
+    vids = videos_df(spark, _n_videos(sf_dir))
+    return frame_stats(sample_frames(vids, every=2)).select(
+        "media_id", "frame_idx",
+        F.round("mean_value", 6).alias("mean_value"))
+
+
+@query("training_pipeline", oracle=f"""
+            WITH u AS (
+              SELECT doc_id, lang, text, nc, len(toks) AS nt,
+                     list_distinct(toks) AS dt,
+                     nc - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
+                       AS np
+              FROM (SELECT d.*, length(text) AS nc,
+                           regexp_split_to_array(lower(trim(text)), '\\s+')
+                             AS toks
+                    FROM documents d)),
+            scored AS (
+              SELECT doc_id, lang, text,
+                     round(least(nt / 64.0, 1.0) * 0.4
+                       + (1.0 - least(CASE WHEN nc > 0 THEN
+                           np / CAST(nc AS DOUBLE) ELSE 0.0 END * 4.0,
+                           1.0)) * 0.3
+                       + least(CASE WHEN nt > 0 THEN
+                           len(list_intersect(dt,
+                             ['the','and','of','to','a','is']))
+                           / CAST(len(dt) AS DOUBLE) ELSE 0.0 END * 5.0,
+                           1.0) * 0.3, 6) AS q_score
+              FROM u),
+            kept AS (
+              SELECT doc_id, lang, q_score FROM (
+                SELECT *, row_number() OVER (
+                  PARTITION BY regexp_replace(lower(trim(text)),
+                                              '\\s+', ' ', 'g')
+                  ORDER BY doc_id) AS rn
+                FROM scored WHERE q_score >= 0.5)
+              WHERE rn = 1)
+            SELECT k.lang, count(*) AS n,
+                   round(avg(sqrt(list_dot_product(
+                     CAST(e.embedding AS DOUBLE[]),
+                     CAST(e.embedding AS DOUBLE[])))), 6) AS avg_norm,
+                   round(avg(k.q_score), 6) AS avg_score
+            FROM kept k JOIN embeddings e ON k.doc_id = e.vec_id
+            GROUP BY k.lang ORDER BY k.lang""")
+def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end training-data pipeline composition: quality-score filter
+    -> exact dedup (min-id keeper) -> join embeddings -> per-language
+    stats. Every stage is one of the engine's operators; the whole thing
+    is a single Catalyst plan."""
+    from geomesa_spark.text.analysis import quality_features
+    from geomesa_spark.text.dedup import normalized_text
+    from pyspark.sql import Window
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = quality_features(docs).where(F.col("q_score") >= 0.5)
+    w = Window.partitionBy(normalized_text("text")).orderBy("doc_id")
+    kept = (q.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1))
+    norm = F.sqrt(F.aggregate(
+        "embedding", F.lit(0.0),
+        lambda a, x: a + x.cast("double") * x.cast("double")))
+    joined = kept.join(emb, kept["doc_id"] == emb["vec_id"]) \
+        .withColumn("_norm", norm)
+    return joined.groupBy("lang").agg(
+        F.count("*").alias("n"),
+        F.round(F.avg("_norm"), 6).alias("avg_norm"),
+        F.round(F.avg("q_score"), 6).alias("avg_score"))
+
+
+@query("stats_sketches", oracle="""
+            SELECT event_type, count(DISTINCT user_id) AS n_users,
+                   round(quantile_cont(value, 0.5), 6) AS q50,
+                   round(quantile_cont(value, 0.95), 6) AS q95
+            FROM events GROUP BY event_type ORDER BY event_type""")
+def q_stats_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stat-query surface (Stats process: cardinality + quantiles per
+    type). Value-checked: exact distinct + exact interpolated percentile
+    (DuckDB quantile_cont twin). The approximate-sketch variants
+    (approx_count_distinct / count_min_sketch / percentile_approx) have
+    no cross-engine oracle and are bound-gated in
+    tests/test_stats_sketches.py instead."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return ev.groupBy("event_type").agg(
+        F.count_distinct("user_id").alias("n_users"),
+        F.round(F.expr("percentile(value, 0.5)"), 6).alias("q50"),
+        F.round(F.expr("percentile(value, 0.95)"), 6).alias("q95"))
+
+
+@query("density_footprint", oracle=f"""
+            WITH px AS (
+              SELECT least(greatest(CAST(floor((CAST(x0 AS DOUBLE) + 180.0) / 5.0) AS
+                       BIGINT), 0), 71) AS i0,
+                     least(greatest(CAST(floor((CAST(x1 AS DOUBLE) + 180.0) / 5.0) AS
+                       BIGINT), 0), 71) AS i1,
+                     least(greatest(CAST(floor((CAST(y0 AS DOUBLE) + 90.0) / 5.0) AS
+                       BIGINT), 0), 35) AS j0,
+                     least(greatest(CAST(floor((CAST(y1 AS DOUBLE) + 90.0) / 5.0) AS
+                       BIGINT), 0), 35) AS j1
+              FROM {_REGIONS_SQL}),
+            cells AS (
+              SELECT CAST(unnest(generate_series(i0, i1)) AS INT) AS col,
+                     CAST(j.j AS INT) AS row
+              FROM px, unnest(generate_series(px.j0, px.j1)) AS j(j))
+            SELECT col, row,
+                   CAST(-180.0 + (col + 0.5) * 5.0 AS DOUBLE) AS x,
+                   CAST(-90.0 + (row + 0.5) * 5.0 AS DOUBLE) AS y,
+                   count(*) AS weight
+            FROM cells GROUP BY col, row ORDER BY col, row""")
+def q_density_footprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DensityScan polygon renderer: rasterize the region boxes onto a
+    72x36 world grid (RenderingGrid semantics: snapped scanline fill),
+    summing weight per pixel."""
+    from geomesa_spark.operators.density import density_footprint
+    out = density_footprint(_regions_df(spark),
+                            envelope=(-180.0, -90.0, 180.0, 90.0),
+                            width=72, height=36)
+    return out.select("col", "row", "x", "y",
+                      F.col("weight").cast("long").alias("weight"))
+
+
+@query("descriptive_stats", oracle="""
+            SELECT event_type, count(*) AS n,
+                   round(avg(value), 6) AS mean_v,
+                   round(var_samp(value), 6) AS var_v,
+                   round(stddev_samp(value), 6) AS std_v,
+                   round(corr(value, CAST(user_id AS DOUBLE)), 6) AS corr_vu
+            FROM events GROUP BY event_type ORDER BY event_type""")
+def q_descriptive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DescriptiveStats stat: mean/var/stddev/skew/kurtosis + correlation
+    (Stat.scala:313 semantics via built-in aggregates)."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return ev.groupBy("event_type").agg(
+        F.count("*").alias("n"),
+        F.round(F.avg("value"), 6).alias("mean_v"),
+        F.round(F.var_samp("value"), 6).alias("var_v"),
+        F.round(F.stddev_samp("value"), 6).alias("std_v"),
+        F.round(F.corr("value", F.col("user_id").cast("double")), 6)
+        .alias("corr_vu"))
+
+
+@query("region_self_join", oracle=f"""
+            SELECT a.region_id AS a, b.region_id AS b
+            FROM {_boxes_sql(_WIDE_REGIONS, "a")}
+            JOIN {_boxes_sql(_WIDE_REGIONS, "b")}
+              ON CAST(a.region_id AS INT) < CAST(b.region_id AS INT)
+             AND a.x0 <= b.x1 AND b.x0 <= a.x1
+             AND a.y0 <= b.y1 AND b.y0 <= a.y1
+            ORDER BY a, b""")
+def q_region_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Polygon-polygon spatial join (st_intersects) of the region boxes
+    against themselves — the general geometry-pair join path with
+    cover-cell equi-join + exact refine + (a,b) dedupe."""
+    from geomesa_spark.operators.join import spatial_join_pairs
+    reg = _boxes_df(spark, "wide_regions", _WIDE_REGIONS)
+    left = reg.select(F.col("region_id").alias("a"),
+                      F.col("geom").alias("geom_a"))
+    right = reg.select(F.col("region_id").alias("b"),
+                       F.col("geom").alias("geom_b"))
+    out = spatial_join_pairs(left, right, predicate="st_intersects",
+                             left_geom="geom_a", right_geom="geom_b",
+                             left_id="a", right_id="b")
+    return (out.where(F.col("a").cast("int") < F.col("b").cast("int"))
+            .select("a", "b"))
+
+
+# convex_hull: recursive gift-wrapping walk over the exact integer
+# event grid. Every cross product is a sum/product of <=2^36-scale
+# integers in float64 (exact), so the CCW walk reproduces the
+# monotone-chain hull vertex-for-vertex deterministically.
+@query("convex_hull", oracle="""
+            WITH RECURSIVE
+            pts AS (SELECT DISTINCT user_id AS u,
+                    CAST(event_id*7919%36000 AS DOUBLE) AS x,
+                    CAST(event_id*104729%18000 AS DOUBLE) AS y
+                    FROM events),
+            strt AS (
+              SELECT u, x, y FROM (
+                SELECT u, x, y,
+                       row_number() OVER (PARTITION BY u ORDER BY x, y) rn
+                FROM pts) t WHERE rn = 1),
+            walk(u, step, cx, cy, sx, sy, closed) AS (
+              SELECT u, 0, x, y, x, y, FALSE FROM strt
+              UNION ALL
+              SELECT u, step+1, nx, ny, sx, sy,
+                     (nx = sx AND ny = sy) FROM (
+                SELECT w.u, w.step, w.sx, w.sy, p.x AS nx, p.y AS ny,
+                  row_number() OVER (PARTITION BY w.u ORDER BY
+                    (p.x-w.cx)*(p.x-w.cx)+(p.y-w.cy)*(p.y-w.cy) DESC) rn
+                FROM walk w JOIN pts p ON p.u = w.u
+                  AND (p.x <> w.cx OR p.y <> w.cy)
+                  AND NOT w.closed
+                  AND NOT EXISTS (SELECT 1 FROM pts r WHERE r.u = w.u
+                    AND ((p.x-w.cx)*(r.y-w.cy)
+                         - (p.y-w.cy)*(r.x-w.cx)) < 0)
+              ) t WHERE rn = 1 AND step < 1000
+            ),
+            seg AS (SELECT u, step, cx, cy,
+                      lead(cx) OVER (PARTITION BY u ORDER BY step) AS nx,
+                      lead(cy) OVER (PARTITION BY u ORDER BY step) AS ny
+                    FROM walk)
+            SELECT u AS user_id,
+                   count(*) AS n_vertices,
+                   round(abs(sum(cx*ny - nx*cy)) / 2.0, 1) AS area
+            FROM seg WHERE nx IS NOT NULL
+            GROUP BY u ORDER BY user_id""")
+def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ConvexHull UDAF (partial-hull merge) + st_geomFromWKT/st_numPoints/
+    st_area over the result, value-checked against a DuckDB recursive
+    gift-wrapping oracle. Coordinates are the exact integer event grid so
+    every cross product is exact in float64 — the two hull algorithms
+    (monotone chain here, gift wrap in SQL) provably agree. Hull WKT
+    strings themselves are byte-layout-gated in tests/test_export.py."""
+    from geomesa_spark.operators.export import convex_hull_agg
+    from geomesa_spark.sources import read_balanced
+    _ensure_functions(spark)
+    # full-scan query with PYTHON pre-shuffle work (the mapInPandas
+    # partial-hull stage): split-balance the single-row-group fixture
+    # scan so the partials run on every core (see _docs)
+    ev = read_balanced(spark, f"{sf_dir}/events.parquet")
+    pts = ev.select(
+        "user_id",
+        (F.col("event_id") * 7919 % 36000).cast("double").alias("lon"),
+        (F.col("event_id") * 104729 % 18000).cast("double").alias("lat"))
+    hulls = convex_hull_agg(pts, group_cols=["user_id"])
+    n_pts = F.expr("st_numPoints(st_geomFromWKT(hull_wkt))")
+    return hulls.select(
+        "user_id",
+        F.when(F.col("hull_wkt").startswith("POLYGON"), n_pts - 1)
+        .otherwise(n_pts).cast("long").alias("n_vertices"),
+        F.round(F.expr("st_area(st_geomFromWKT(hull_wkt))"), 1)
+        .alias("area"))
+
+
+@query("bin_export", oracle="""
+            SELECT event_id,
+                   CAST(floor(epoch(ts)) AS INT) AS secs,
+                   CAST(CAST((event_id*104729%18000)/100.0-90.0 AS FLOAT)
+                        AS DOUBLE) AS lat32,
+                   CAST(CAST((event_id*7919%36000)/100.0-180.0 AS FLOAT)
+                        AS DOUBLE) AS lon32,
+                   16 AS nbytes
+            FROM events ORDER BY event_id""")
+def q_bin_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BinAggregatingScan: 16-byte BIN viz records per event. The decoded
+    record fields (epoch seconds, float32 lat/lon, record width) are
+    value-checked against SQL recomputation; the crc32 track hash and the
+    packed byte layout have no DuckDB twin and are pytest-gated
+    (tests/test_export.py)."""
+    from geomesa_spark.operators.export import to_bin_records
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    pts = ev.select("event_id", "ts", "user_id", *lonlat_cols())
+    out = to_bin_records(pts, track="user_id", passthrough=("event_id",),
+                         emit_fields=True)
+    return out.select(
+        "event_id", "secs",
+        F.col("lat32").cast("double").alias("lat32"),
+        F.col("lon32").cast("double").alias("lon32"),
+        F.length("bin").alias("nbytes"))
+
+
+@query("geojson_export", oracle="""
+            SELECT '{"type":"Feature","id":' || event_id ||
+                   ',"geometry":{"type":"Point","coordinates":[' ||
+                   CAST((event_id*7919%36000)/100.0-180.0 AS VARCHAR) ||
+                   ',' ||
+                   CAST((event_id*104729%18000)/100.0-90.0 AS VARCHAR) ||
+                   ']},"properties":{"event_id":' || event_id ||
+                   '}}' AS geojson
+            FROM events""")
+def q_geojson_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GeoJSON feature export (RFC 7946 Features; byte-identical strings
+    assembled in the SQL oracle)."""
+    from geomesa_spark.operators.export import to_geojson_features
+    pts = _events_points(spark, sf_dir).select("event_id", "lon", "lat")
+    return to_geojson_features(pts, id_col="event_id")
+
+
+@query("point2point", oracle=f"""
+            WITH pts AS (
+              SELECT user_id, event_id, ts,
+                     (event_id*7919%36000)/100.0-180.0 AS lon,
+                     (event_id*104729%18000)/100.0-90.0 AS lat
+              FROM events),
+            seg AS (
+              SELECT user_id,
+                     row_number() OVER w - 1 AS seg,
+                     lon AS x1, lat AS y1,
+                     lead(lon) OVER w AS x2, lead(lat) OVER w AS y2,
+                     epoch(ts) AS t_start,
+                     epoch(lead(ts) OVER w) AS t_end,
+                     count(*) OVER (PARTITION BY user_id) AS n
+              FROM pts
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+            SELECT user_id, seg, x1, y1, x2, y2, t_start, t_end,
+                   round({_haversine_sql('x1', 'y1', 'x2', 'y2')}, 0)
+                     AS dist_m
+            FROM seg
+            WHERE n > 5 AND x2 IS NOT NULL
+              AND {_haversine_sql('x1', 'y1', 'x2', 'y2')} > 0.0
+            ORDER BY user_id, seg""")
+def q_point2point(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point2Point process: per-user consecutive track segments ordered
+    by ts (Point2PointProcess.scala semantics: strict min-points,
+    zero-length filtering), value-checked against a SQL window oracle."""
+    from geomesa_spark.operators.processes import point2point
+    with _utc(spark):
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        pts = ev.select("event_id", "user_id", "ts", *lonlat_cols())
+        out = point2point(pts, group="user_id", sort="ts",
+                          min_points=5, tiebreak=["event_id"])
+        out = out.select(
+            "user_id", "seg", "x1", "y1", "x2", "y2",
+            F.col("ts_start").cast("timestamp").cast("double")
+            .alias("t_start"),
+            F.col("ts_end").cast("timestamp").cast("double")
+            .alias("t_end"),
+            F.round("dist_m", 0).alias("dist_m"))
+        out.schema  # force analysis while UTC is active
+    return out
+
+
+@query("track_label", oracle="""
+            SELECT user_id, event_id, epoch(ts) AS t, value FROM (
+              SELECT *, row_number() OVER (
+                PARTITION BY user_id
+                ORDER BY ts DESC, event_id DESC) AS rn
+              FROM events) t WHERE rn = 1 ORDER BY user_id""")
+def q_track_label(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TrackLabel process: the latest event per user (ties by event_id
+    descending — the deterministic form of the reference's maxBy)."""
+    from geomesa_spark.operators.processes import track_label
+    with _utc(spark):
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        out = track_label(ev, track="user_id", dtg="ts",
+                          tiebreak=["event_id"])
+        out = out.select("user_id", "event_id",
+                         F.col("ts").cast("timestamp").cast("double")
+                         .alias("t"), "value")
+        out.schema
+    return out
+
+
+@query("date_offset", oracle="""
+            SELECT event_id,
+                   epoch(ts + INTERVAL 26 HOUR) AS t_shifted
+            FROM events ORDER BY event_id""")
+def q_date_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DateOffset process: shift ts by P1DT2H, emit epoch seconds."""
+    from geomesa_spark.operators.processes import date_offset
+    with _utc(spark):
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+        out = date_offset(ev, date_col="ts", offset="P1DT2H")
+        out = out.select("event_id",
+                         F.col("ts").cast("timestamp").cast("double")
+                         .alias("t_shifted"))
+        out.schema
+    return out
+
+
+@query("hash_attribute", oracle=f"""
+            SELECT event_id,
+                   CAST({_char_hash_sql('event_type', 31)} % 7 AS INT)
+                     AS hash
+            FROM events ORDER BY event_id""")
+def q_hash_attribute(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HashAttribute process: deterministic bucket of event_type mod 7
+    (char-fold hash — bit-exact in the SQL oracle)."""
+    from geomesa_spark.operators.processes import hash_attribute
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return hash_attribute(ev, attribute="event_type", modulo=7) \
+        .select("event_id", "hash")
+
+
+def _phash_corpus(spark: SparkSession, sf_dir: str, n_ids: int,
+                  dups: list[tuple[str, tuple[int, int, int]]]
+                  ) -> DataFrame:
+    """(image_id, phash) per event id < ``n_ids``: the base image
+    ``img-<id>`` plus one planted near-dup ``<prefix>-<id>`` per entry of
+    ``dups``, its phash with three id-derived bits flipped."""
+    from geomesa_spark.operators.tiles import phash_expr
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
+        .where(F.col("event_id") < n_ids).select("event_id")
+    base = ev.select(
+        F.format_string("img-%012d", "event_id").alias("image_id"),
+        phash_expr(F.format_string("img-%012d", "event_id")).alias("phash"),
+        F.col("event_id"))
+    corpus = base
+    for prefix, bits in dups:
+        mask = F.expr(" ^ ".join(
+            f"shiftleft(1L, cast(event_id*{b}%63 as int))" for b in bits))
+        corpus = corpus.unionByName(base.select(
+            F.format_string(f"{prefix}-%012d", "event_id").alias("image_id"),
+            F.col("phash").bitwiseXOR(mask).alias("phash"), "event_id"))
+    return corpus.select("image_id", "phash")
+
+
+@query("phash_near_dup", oracle="""
+            WITH ids AS (
+              SELECT event_id,
+                     printf('img-%012d', event_id) AS iid,
+                     printf('dup-%012d', event_id) AS did
+              FROM events WHERE event_id < 3000),
+            ph AS (
+              SELECT event_id, iid, did,
+                     (CASE WHEN u >= 9223372036854775808::HUGEINT
+                           THEN u::HUGEINT - 18446744073709551616::HUGEINT
+                           ELSE u::HUGEINT END)::BIGINT AS phash
+              FROM (SELECT *,
+                      ('0x' || substr(sha256(iid), 1, 16))::UBIGINT AS u
+                    FROM ids)),
+            corpus AS (
+              SELECT iid AS image_id, phash FROM ph
+              UNION ALL
+              SELECT did,
+                     xor(phash,
+                         xor(xor(1::BIGINT << CAST(event_id*7%63 AS INT),
+                                 1::BIGINT << CAST(event_id*13%63 AS INT)),
+                             1::BIGINT << CAST(event_id*29%63 AS INT)))
+              FROM ph)
+            SELECT x.image_id AS a, y.image_id AS b,
+                   CAST(bit_count(xor(x.phash, y.phash)) AS INT) AS hamming
+            FROM corpus x JOIN corpus y ON x.image_id < y.image_id
+            WHERE bit_count(xor(x.phash, y.phash)) <= 3
+            ORDER BY a, b""")
+def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate images by perceptual-hash hamming distance: the
+    deterministic image-id grid derives phash natively (sha2 + conv),
+    planted duplicates flip <= 3 known bits, and the generalized
+    pigeonhole banding (text/dedup.py:hamming_pairs) recovers exactly the
+    planted pairs — value-checked against a DuckDB cross-join oracle."""
+    from geomesa_spark.operators.tiles import phash_pairs
+    corpus = _phash_corpus(spark, sf_dir, 3000, [("dup", (7, 13, 29))])
+    out = phash_pairs(corpus, max_hamming=3)
+    return out.select("a", "b", F.col("hamming").cast("int").alias("hamming"))
+
+
+@query("near_dup_clusters", oracle="""
+            WITH RECURSIVE ids AS (
+              SELECT event_id,
+                     printf('img-%012d', event_id) AS iid
+              FROM events WHERE event_id < 1500),
+            ph AS (
+              SELECT event_id, iid,
+                     (CASE WHEN u >= 9223372036854775808::HUGEINT
+                           THEN u::HUGEINT - 18446744073709551616::HUGEINT
+                           ELSE u::HUGEINT END)::BIGINT AS phash
+              FROM (SELECT *,
+                      ('0x' || substr(sha256(iid), 1, 16))::UBIGINT AS u
+                    FROM ids)),
+            corpus AS (
+              SELECT iid AS image_id, phash FROM ph
+              UNION ALL
+              SELECT printf('dup-%012d', event_id),
+                     xor(phash,
+                         xor(xor(1::BIGINT << CAST(event_id*7%63 AS INT),
+                                 1::BIGINT << CAST(event_id*13%63 AS INT)),
+                             1::BIGINT << CAST(event_id*29%63 AS INT)))
+              FROM ph
+              UNION ALL
+              SELECT printf('dup2-%012d', event_id),
+                     xor(phash,
+                         xor(xor(1::BIGINT << CAST(event_id*11%63 AS INT),
+                                 1::BIGINT << CAST(event_id*17%63 AS INT)),
+                             1::BIGINT << CAST(event_id*23%63 AS INT)))
+              FROM ph),
+            ed AS (
+              SELECT x.image_id AS s, y.image_id AS t
+              FROM corpus x JOIN corpus y ON x.image_id <> y.image_id
+              WHERE bit_count(xor(x.phash, y.phash)) <= 3),
+            cc(node, comp) AS (
+              SELECT image_id, image_id FROM corpus
+              WHERE image_id IN (SELECT s FROM ed)
+              UNION
+              SELECT e.t, c.comp FROM cc c JOIN ed e ON e.s = c.node),
+            final AS (
+              SELECT node, min(comp) AS comp FROM cc GROUP BY node)
+            SELECT comp AS keeper, count(*) AS n_members
+            FROM final GROUP BY comp ORDER BY keeper""")
+def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup last mile: phash near-dup PAIRS -> connected components ->
+    one row per cluster with its canonical keeper (min member id) and
+    member count. Clusters need transitive closure (dup <-> dup2 is not
+    itself a pair) — value-checked against a DuckDB recursive-CTE CC."""
+    from geomesa_spark.operators.graph import dedup_clusters
+    from geomesa_spark.operators.tiles import phash_pairs
+    corpus = _phash_corpus(spark, sf_dir, 1500, [("dup", (7, 13, 29)),
+                                                 ("dup2", (11, 17, 23))])
+    pairs = phash_pairs(corpus, max_hamming=3)
+    return dedup_clusters(pairs).select("keeper", "n_members")
+
+
+# RouteSearch fixtures: two long polylines over the global event grid;
+# every coordinate is an exact binary double so the Spark literals and
+# the SQL VALUES are bit-identical.
+ROUTE_COORDS = [
+    [(-170.0, -80.0), (-100.0, -20.0), (-30.0, 40.0), (40.0, 80.0)],
+    [(60.0, -70.0), (100.0, 0.0), (150.0, 60.0)],
+]
+ROUTE_BUFFER_M = 800_000.0
+ROUTE_HEADING_THRESH = 60.0
 
 
 def _route_search_sql() -> str:
@@ -1956,739 +2520,21 @@ def _route_search_sql() -> str:
         ORDER BY event_id"""
 
 
-def _knn_values_sql() -> str:
-    rows = ", ".join(f"('{qid}', {qlon!r}, {qlat!r})"
-                     for (qid, qlon, qlat) in KNN_QUERIES)
-    return f"(VALUES {rows}) AS q(query_id, qlon, qlat)"
-
-
-_TOKS_SQL = ("(SELECT doc_id, text, length(text) AS nc, "
-             "regexp_split_to_array(lower(trim(text)), '\\s+') AS toks "
-             "FROM documents)")
-
-_SHINGLES_SQL = f"""
-    (SELECT doc_id,
-            CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(
-                   generate_series(1, len(toks) - 2),
-                   i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-                 ELSE [list_reduce(toks, (x, y) -> x || ' ' || y)] END AS sh
-     FROM {_TOKS_SQL})"""
-
-
-def _jaccard_pairs_sql(threshold: float, cap: int | None = None) -> str:
-    # `cap` mirrors q_ngram_dedup_pairs' audit-sample bound (no-op at the
-    # <= sf0.1 gates). The minhash oracle must stay UNCAPPED: its Spark
-    # side runs over the full corpus.
-    cap_sql = f"WHERE doc_id < {cap}" if cap is not None else ""
-    return f"""
-        WITH e AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS s
-                   FROM {_SHINGLES_SQL}
-                   {cap_sql})
-        SELECT a, b, jaccard FROM (
-          SELECT ea.doc_id AS a, eb.doc_id AS b,
-                 round(count(*) / CAST(ea.n + eb.n - count(*) AS DOUBLE),
-                       6) AS jaccard
-          FROM e ea JOIN e eb ON ea.s = eb.s AND ea.doc_id < eb.doc_id
-          GROUP BY ea.doc_id, eb.doc_id, ea.n, eb.n)
-        WHERE jaccard >= {threshold} ORDER BY a, b"""
-
-
-def _char_hash_sql(expr: str, mult: int) -> str:
-    """DuckDB replica of text.analysis.char_hash_expr (bit-exact)."""
-    return (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            f"list_transform(string_split({expr}, ''), "
-            f"c -> CAST(ascii(c) AS BIGINT))), "
-            f"(a, h) -> (a * {mult} + h) % 2147483647)")
-
-
-def _simhash_sql() -> str:
-    from geomesa_spark.text.dedup import (SIMHASH_A2 as _SH_A2,
-                                          SIMHASH_A3 as _SH_A3,
-                                          SIMHASH_B2 as _SH_B2,
-                                          SIMHASH_B3 as _SH_B3,
-                                          _simhash_bit_source)
-    srcs = [_simhash_bit_source(b) for b in range(64)]
-    sums = ", ".join(
-        f"sum(CASE WHEN ((h{idx} >> {pos}) & 1) = 1 "
-        f"THEN 1 ELSE -1 END) AS s{b}"
-        for b, (idx, pos) in enumerate(srcs))
-    bits = " + ".join(
-        f"(CASE WHEN s{b} > 0 THEN "
-        + (f"CAST(-9223372036854775808 AS BIGINT)" if b == 63
-           else f"CAST({1 << b} AS BIGINT)")
-        + " ELSE 0 END)" for b in range(64))
-    return f"""
-        WITH tok AS (
-          SELECT doc_id,
-                 unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                   AS t
-          FROM documents),
-        h0 AS (SELECT doc_id, {_char_hash_sql('t', 31)} AS h1 FROM tok),
-        h AS (SELECT doc_id, h1,
-                     (h1 * {_SH_A2} + {_SH_B2}) % 2147483647 AS h2,
-                     (h1 * {_SH_A3} + {_SH_B3}) % 2147483647 AS h3
-              FROM h0),
-        s AS (SELECT doc_id, {sums} FROM h GROUP BY doc_id),
-        sig AS (SELECT doc_id, CAST({bits} AS BIGINT) AS sim FROM s)
-        SELECT a.doc_id AS a, b.doc_id AS b,
-               CAST(bit_count(xor(a.sim, b.sim)) AS INT) AS hamming
-        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.sim, b.sim)) <= 3
-        ORDER BY a, b"""
-
-
-def _lang_markers_sql() -> dict[str, str]:
-    from geomesa_spark.text.analysis import LANG_MARKERS
-    return {lang: "[" + ", ".join(f"'{m}'" for m in ms) + "]"
-            for lang, ms in LANG_MARKERS.items()}
-
-
-def oracle_sql() -> dict[str, str]:
-    pts = _POINTS_SQL
-    regions = _regions_values_sql()
-    hav = _haversine_sql("p.lon", "p.lat", "q.qlon", "q.qlat")
-    hav_paris = _haversine_sql("lon", "lat", "2.35", "48.85")
-    mk = _lang_markers_sql()
-    wide_regions = _wide_regions_values_sql()
-    return {
-        "spatial_join_contains": f"""
-            SELECT p.event_id, r.region_id
-            FROM {pts} p JOIN {regions}
-              ON p.lon > r.x0 AND p.lon < r.x1 AND p.lat > r.y0 AND p.lat < r.y1
-            ORDER BY p.event_id, r.region_id""",
-        "spatial_join_intersects": f"""
-            SELECT r.region_id, count(*) AS n_points
-            FROM {pts} p JOIN {regions}
-              ON p.lon >= r.x0 AND p.lon <= r.x1 AND p.lat >= r.y0 AND p.lat <= r.y1
-            GROUP BY r.region_id ORDER BY r.region_id""",
-        "knn": f"""
-            SELECT query_id, rank, event_id, dist_m FROM (
-              SELECT q.query_id,
-                     row_number() OVER (PARTITION BY q.query_id ORDER BY {hav}, p.event_id) AS rank,
-                     p.event_id,
-                     round({hav}, 0) AS dist_m
-              FROM {pts} p CROSS JOIN {_knn_values_sql()}
-            ) WHERE rank <= {KNN_K} ORDER BY query_id, rank""",
-        "density_grid": f"""
-            SELECT col, row,
-                   -180.0 + (col + 0.5) * 5.0 AS x,
-                   -90.0 + (row + 0.5) * 5.0 AS y,
-                   count(*) AS weight
-            FROM (SELECT least(CAST(floor((lon - -180.0) / 5.0) AS BIGINT), 71) AS col,
-                         least(CAST(floor((lat - -90.0) / 5.0) AS BIGINT), 35) AS row
-                  FROM {pts})
-            GROUP BY col, row ORDER BY col, row""",
-        "cell_assignment": f"""
-            SELECT ({_z2_sql(4)}) AS cell, count(*) AS n
-            FROM {pts} GROUP BY 1 ORDER BY cell""",
-        "bbox_query": f"""
-            SELECT event_id FROM {pts}
-            WHERE lon >= -30 AND lon <= 40 AND lat >= -20 AND lat <= 35
-            ORDER BY event_id""",
-        "distance_filter": f"""
-            SELECT event_id, round({hav_paris}, 0) AS dist_m
-            FROM {pts} WHERE {hav_paris} <= 1000000.0 ORDER BY event_id""",
-        "geohash_agg": f"""
-            WITH b AS (
-              SELECT least(CAST(floor((lon + 180.0) / 360.0 * 32) AS
-                       BIGINT), 31) AS xb,
-                     least(CAST(floor((lat + 90.0) / 180.0 * 32) AS
-                       BIGINT), 31) AS yb
-              FROM {pts}),
-            v AS (SELECT ({" | ".join(
-                f"(((xb >> {4 - i}) & 1) << {9 - 2 * i}) | "
-                f"(((yb >> {4 - i}) & 1) << {8 - 2 * i})"
-                for i in range(5))}) AS val FROM b)
-            SELECT substr('0123456789bcdefghjkmnpqrstuvwxyz',
-                          CAST((val >> 5) AS INT) + 1, 1)
-                   || substr('0123456789bcdefghjkmnpqrstuvwxyz',
-                             CAST((val & 31) AS INT) + 1, 1) AS gh,
-                   count(*) AS n
-            FROM v GROUP BY 1 ORDER BY gh""",
-        "stats_minmax": f"""
-            SELECT count(*) AS cnt,
-                   round(min(lon), 6) AS min_lon, round(max(lon), 6) AS max_lon,
-                   round(min(lat), 6) AS min_lat, round(max(lat), 6) AS max_lat,
-                   count(DISTINCT event_type) AS n_types
-            FROM {pts}""",
-        "unique_values": """
-            SELECT event_type, count(*) AS n FROM events
-            GROUP BY event_type ORDER BY event_type""",
-        "sampling": """
-            SELECT event_id, user_id FROM (
-              SELECT event_id, user_id,
-                     row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
-              FROM events) WHERE rn % 10 = 1 ORDER BY event_id""",
-        "topk_per_key": """
-            SELECT event_type, rank, event_id, value FROM (
-              SELECT event_type, event_id, value,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY value DESC, event_id) AS rank
-              FROM events) WHERE rank <= 3 ORDER BY event_type, rank""",
-        "histogram": """
-            SELECT least(CAST(floor(value / 25.0) AS BIGINT), 39) AS bin,
-                   count(*) AS n
-            FROM events WHERE value >= 0 AND value <= 1000
-            GROUP BY 1 ORDER BY bin""",
-        "tpch_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(avg(l_quantity), 6) AS avg_qty,
-                   count(*) AS count_order
-            FROM lineitem WHERE l_shipdate <= '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus""",
-        "join_pushdown": """
-            SELECT c_mktsegment, count(*) AS n_orders,
-                   round(sum(o_totalprice), 2) AS revenue
-            FROM orders JOIN customer ON o_custkey = c_custkey
-            WHERE o_totalprice > 100000.0
-            GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-        "training_pipeline": f"""
-            WITH u AS (
-              SELECT doc_id, lang, text, nc, len(toks) AS nt,
-                     list_distinct(toks) AS dt,
-                     nc - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
-                       AS np
-              FROM (SELECT d.*, length(text) AS nc,
-                           regexp_split_to_array(lower(trim(text)), '\\s+')
-                             AS toks
-                    FROM documents d)),
-            scored AS (
-              SELECT doc_id, lang, text,
-                     round(least(nt / 64.0, 1.0) * 0.4
-                       + (1.0 - least(CASE WHEN nc > 0 THEN
-                           np / CAST(nc AS DOUBLE) ELSE 0.0 END * 4.0,
-                           1.0)) * 0.3
-                       + least(CASE WHEN nt > 0 THEN
-                           len(list_intersect(dt,
-                             ['the','and','of','to','a','is']))
-                           / CAST(len(dt) AS DOUBLE) ELSE 0.0 END * 5.0,
-                           1.0) * 0.3, 6) AS q_score
-              FROM u),
-            kept AS (
-              SELECT doc_id, lang, q_score FROM (
-                SELECT *, row_number() OVER (
-                  PARTITION BY regexp_replace(lower(trim(text)),
-                                              '\\s+', ' ', 'g')
-                  ORDER BY doc_id) AS rn
-                FROM scored WHERE q_score >= 0.5)
-              WHERE rn = 1)
-            SELECT k.lang, count(*) AS n,
-                   round(avg(sqrt(list_dot_product(
-                     CAST(e.embedding AS DOUBLE[]),
-                     CAST(e.embedding AS DOUBLE[])))), 6) AS avg_norm,
-                   round(avg(k.q_score), 6) AS avg_score
-            FROM kept k JOIN embeddings e ON k.doc_id = e.vec_id
-            GROUP BY k.lang ORDER BY k.lang""",
-        "density_footprint": f"""
-            WITH px AS (
-              SELECT least(greatest(CAST(floor((CAST(x0 AS DOUBLE) + 180.0) / 5.0) AS
-                       BIGINT), 0), 71) AS i0,
-                     least(greatest(CAST(floor((CAST(x1 AS DOUBLE) + 180.0) / 5.0) AS
-                       BIGINT), 0), 71) AS i1,
-                     least(greatest(CAST(floor((CAST(y0 AS DOUBLE) + 90.0) / 5.0) AS
-                       BIGINT), 0), 35) AS j0,
-                     least(greatest(CAST(floor((CAST(y1 AS DOUBLE) + 90.0) / 5.0) AS
-                       BIGINT), 0), 35) AS j1
-              FROM {regions}),
-            cells AS (
-              SELECT CAST(unnest(generate_series(i0, i1)) AS INT) AS col,
-                     CAST(j.j AS INT) AS row
-              FROM px, unnest(generate_series(px.j0, px.j1)) AS j(j))
-            SELECT col, row,
-                   -180.0 + (col + 0.5) * 5.0 AS x,
-                   -90.0 + (row + 0.5) * 5.0 AS y,
-                   count(*) AS weight
-            FROM cells GROUP BY col, row ORDER BY col, row""",
-        "descriptive_stats": """
-            SELECT event_type, count(*) AS n,
-                   round(avg(value), 6) AS mean_v,
-                   round(var_samp(value), 6) AS var_v,
-                   round(stddev_samp(value), 6) AS std_v,
-                   round(corr(value, CAST(user_id AS DOUBLE)), 6) AS corr_vu
-            FROM events GROUP BY event_type ORDER BY event_type""",
-        "region_self_join": f"""
-            SELECT a.region_id AS a, b.region_id AS b
-            FROM {wide_regions.replace("AS r(", "AS a(")}
-            JOIN {wide_regions.replace("AS r(", "AS b(")}
-              ON CAST(a.region_id AS INT) < CAST(b.region_id AS INT)
-             AND a.x0 <= b.x1 AND b.x0 <= a.x1
-             AND a.y0 <= b.y1 AND b.y0 <= a.y1
-            ORDER BY a, b""",
-        "proximity": f"""
-            SELECT q.query_id, p.event_id, round({hav}, 0) AS dist_m
-            FROM {pts} p CROSS JOIN (VALUES {", ".join(
-                f"('{q}', {x!r}, {y!r})" for (q, x, y) in PROX_QUERIES)})
-                 AS q(query_id, qlon, qlat)
-            WHERE {hav} <= {PROX_RADIUS!r}
-            ORDER BY query_id, event_id""",
-        "tube_select": f"""
-            WITH p AS (SELECT e.event_id, e.ts, d.lon, d.lat
-                       FROM events e JOIN {pts} d ON e.event_id = d.event_id)
-            SELECT p.event_id, round(min({_haversine_sql(
-                "p.lon", "p.lat", "t.qlon", "t.qlat")}), 0) AS dist_m
-            FROM p CROSS JOIN (VALUES {", ".join(
-                f"(TIMESTAMP '{t}', {x!r}, {y!r})"
-                for (t, x, y) in TUBE_TRACK)}) AS t(qts, qlon, qlat)
-            WHERE {_haversine_sql("p.lon", "p.lat", "t.qlon", "t.qlat")}
-                    <= {TUBE_RADIUS!r}
-              AND abs(epoch(p.ts) - epoch(t.qts)) <= {TUBE_DT!r}
-            GROUP BY p.event_id ORDER BY p.event_id""",
-        "z3_heatmap": f"""
-            WITH p AS (SELECT e.ts, d.lon, d.lat
-                       FROM events e JOIN {pts} d ON e.event_id = d.event_id),
-            b AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS sec, lon, lat
-                  FROM p),
-            c AS (SELECT CAST(floor(sec / 604800) AS BIGINT) AS epoch,
-                    least(CAST(floor((lon + 180.0) / 360.0 * 16) AS BIGINT),
-                          15) AS xb,
-                    least(CAST(floor((lat + 90.0) / 180.0 * 16) AS BIGINT),
-                          15) AS yb,
-                    least(CAST(floor((sec - CAST(floor(sec / 604800) AS
-                          BIGINT) * 604800) / 604800.0 * 16) AS BIGINT),
-                          15) AS tb
-                  FROM b)
-            SELECT epoch, ({" | ".join(
-                f"(((xb >> {i}) & 1) << {3 * i}) | "
-                f"(((yb >> {i}) & 1) << {3 * i + 1}) | "
-                f"(((tb >> {i}) & 1) << {3 * i + 2})" for i in range(4))})
-                   AS z3, count(*) AS n
-            FROM c GROUP BY 1, 2 ORDER BY epoch, z3""",
-        # XZ3 prune+refine must equal the plain bbox-intersect +
-        # interval-overlap predicate (events as 1.0 x 0.5 deg boxes alive
-        # for 4 hours; window 2024-01-08..15 UTC crosses a week boundary)
-        "xz3_bbox_time": f"""
-            SELECT e.event_id
-            FROM events e JOIN {pts} d ON e.event_id = d.event_id
-            WHERE d.lon - 0.5 <= 40.0 AND d.lon + 0.5 >= -30.0
-              AND d.lat - 0.25 <= 35.0 AND d.lat + 0.25 >= -20.0
-              AND epoch(e.ts) <= 1705276800.0
-              AND epoch(e.ts + INTERVAL 4 HOUR) >= 1704672000.0
-            ORDER BY e.event_id""",
-        # mixed AND/OR of bbox + interval + attribute == plain predicate
-        # (bbox "intersects" is boundary-inclusive, "contains" strict)
-        "mixed_filter": f"""
-            SELECT e.event_id
-            FROM events e JOIN {pts} d ON e.event_id = d.event_id
-            WHERE (d.lon >= -30.0 AND d.lon <= 40.0
-                   AND d.lat >= -20.0 AND d.lat <= 35.0
-                   AND epoch(e.ts) >= 1704672000.0
-                   AND epoch(e.ts) <= 1705276800.0
-                   AND e.event_type = 'click')
-               OR (d.lon > 100.0 AND d.lon < 140.0
-                   AND d.lat > 0.0 AND d.lat < 50.0
-                   AND e.value > 300.0)
-            ORDER BY e.event_id""",
-        # XZ2 prune+refine == plain bbox-intersect over the derived boxes
-        "xz2_bbox": f"""
-            SELECT event_id FROM {pts}
-            WHERE lon - 0.5 <= 40.0 AND lon + 0.5 >= -30.0
-              AND lat - 0.25 <= 35.0 AND lat + 0.25 >= -20.0
-            ORDER BY event_id""",
-        # S2 cover-prune + exact refine == the plain bbox predicate
-        "s2_bbox_query": f"""
-            SELECT event_id FROM {pts}
-            WHERE lon >= 60.0 AND lon <= 150.0
-              AND lat >= 55.0 AND lat <= 75.0
-            ORDER BY event_id""",
-        "url_host_stats": """
-            WITH aug AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 4 = 0 THEN
-                       text || ' see https://site' || (doc_id % 50)
-                            || '.example.org/p/' || doc_id
-                            || ' and http://cdn.example.net/x'
-                            || (doc_id % 7)
-                     ELSE text END AS t
-              FROM documents),
-            urls AS (
-              SELECT doc_id, unnest(regexp_extract_all(t,
-                'https?://[A-Za-z0-9.-]+(/[A-Za-z0-9./_-]*)?')) AS url
-              FROM aug)
-            SELECT regexp_extract(url, 'https?://([A-Za-z0-9.-]+)', 1)
-                     AS host,
-                   count(*) AS n_urls,
-                   count(DISTINCT doc_id) AS n_docs
-            FROM urls GROUP BY 1 ORDER BY host""",
-        "contamination_check": f"""
-            WITH s AS (SELECT * FROM {_SHINGLES_SQL}),
-            bench AS (SELECT DISTINCT unnest(sh) AS sg FROM s
-                      WHERE doc_id % {CONTAM_BENCH_MOD} = 0),
-            corp AS (SELECT doc_id, len(sh) AS n, unnest(sh) AS sg
-                     FROM s WHERE doc_id % {CONTAM_BENCH_MOD} <> 0)
-            SELECT doc_id,
-                   count(*) AS n_shared,
-                   CAST(n AS BIGINT) AS n_shingles,
-                   round(count(*) / CAST(n AS DOUBLE), 6) AS ratio,
-                   round(count(*) / CAST(n AS DOUBLE), 6)
-                     >= {CONTAM_FLAG_RATIO!r} AS flagged
-            FROM corp JOIN bench USING (sg)
-            GROUP BY doc_id, n ORDER BY doc_id""",
-        "stratified_sample": f"""
-            SELECT doc_id, lang, source FROM documents
-            WHERE (doc_id * 2654435761) % 4294967296 <
-              CASE lang {" ".join(
-                  f"WHEN '{k}' THEN {int(v * (1 << 32))}"
-                  for k, v in SAMPLE_RATES.items())}
-              ELSE {int(SAMPLE_DEFAULT_RATE * (1 << 32))} END
-            ORDER BY doc_id""",
-        # shard_pack's oracle IS the naive unpartitioned running-sum
-        # window the Spark operator refuses to run (single-partition at
-        # scale) — DuckDB is welcome to it at gate size, and the compare
-        # proves the distributed two-level scan is bit-identical to it.
-        "shard_pack": f"""
-            WITH t AS (
-              SELECT doc_id,
-                     CAST(len(regexp_split_to_array(lower(trim(text)),
-                                                    '\\s+')) AS BIGINT)
-                       AS n_tokens
-              FROM documents),
-            c AS (
-              SELECT doc_id, n_tokens,
-                     CAST(sum(n_tokens) OVER (ORDER BY doc_id) AS BIGINT)
-                       - n_tokens AS global_start
-              FROM t)
-            SELECT doc_id, n_tokens, global_start,
-                   global_start // {SHARD_TOKENS} AS shard_id,
-                   global_start % {SHARD_TOKENS} AS shard_offset
-            FROM c ORDER BY doc_id""",
-        # pii_scrub: DuckDB regexp_replace needs the 'g' flag for
-        # global replacement (Spark replaces all matches by default);
-        # the patterns are the shared Java-regex/RE2 subset from
-        # text/analysis.py (no \b, no lookaround, no backreferences)
-        "pii_scrub": """
-            WITH aug AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 = 0 THEN
-                       text || ' contact user' || doc_id
-                            || '@mail.example.com from 10.'
-                            || (doc_id % 256) || '.0.' || (doc_id % 100)
-                            || ' acct ' || (doc_id * 1234567 + 100000000)
-                     ELSE text END AS t
-              FROM documents),
-            s1 AS (
-              SELECT doc_id,
-                     len(regexp_extract_all(t,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
-                       AS n_emails,
-                     regexp_replace(t,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
-                       '<EMAIL>', 'g') AS t1
-              FROM aug),
-            s2 AS (
-              SELECT doc_id, n_emails,
-                     len(regexp_extract_all(t1,
-                       '\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}'))
-                       AS n_ips,
-                     regexp_replace(t1,
-                       '\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}',
-                       '<IP>', 'g') AS t2
-              FROM s1),
-            s3 AS (
-              SELECT doc_id, n_emails, n_ips,
-                     len(regexp_extract_all(t2, '\\d{9,}')) AS n_idnums,
-                     regexp_replace(t2, '\\d{9,}', '<ID>', 'g') AS masked
-              FROM s2)
-            SELECT doc_id, n_emails, n_ips, n_idnums, masked
-            FROM s3 ORDER BY doc_id""",
-        "text_quality": f"""
-            WITH u AS (
-              SELECT doc_id, nc, len(toks) AS nt, list_distinct(toks) AS dt,
-                     nc - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
-                       AS np
-              FROM {_TOKS_SQL}),
-            v AS (
-              SELECT doc_id, nc, nt,
-                     CASE WHEN nc > 0 THEN np / CAST(nc AS DOUBLE)
-                          ELSE 0.0 END AS pr,
-                     CASE WHEN nt > 0 THEN
-                       len(list_intersect(dt, ['the','and','of','to','a','is']))
-                         / CAST(len(dt) AS DOUBLE) ELSE 0.0 END AS sr
-              FROM u)
-            SELECT doc_id, nc AS q_chars, nt AS q_tokens,
-                   round(CASE WHEN nt > 0 THEN (nc - (nt - 1))
-                         / CAST(nt AS DOUBLE) ELSE 0.0 END, 6)
-                     AS q_avg_token_len,
-                   round(pr, 6) AS q_punct_ratio,
-                   round(sr, 6) AS q_stopword_ratio,
-                   round(least(nt / 64.0, 1.0) * 0.4
-                         + (1.0 - least(pr * 4.0, 1.0)) * 0.3
-                         + least(sr * 5.0, 1.0) * 0.3, 6) AS q_score
-            FROM v ORDER BY doc_id""",
-        "repetition_filter": f"""
-            WITH t AS (
-              SELECT doc_id, toks, len(toks) AS nt,
-                     len(list_distinct(toks)) AS ndt
-              FROM {_TOKS_SQL}),
-            b AS (
-              SELECT doc_id,
-                     unnest(list_transform(generate_series(1, nt - 1),
-                            i -> toks[i] || ' ' || toks[i+1])) AS bg
-              FROM t WHERE nt >= 2),
-            c AS (SELECT doc_id, bg, count(*) AS c
-                  FROM b GROUP BY doc_id, bg),
-            m AS (SELECT doc_id, max(c) AS topc FROM c GROUP BY doc_id),
-            v AS (
-              SELECT t.doc_id, nt,
-                     CASE WHEN nt > 0
-                          THEN 1.0 - ndt / CAST(nt AS DOUBLE)
-                          ELSE 0.0 END AS dupf,
-                     CASE WHEN nt >= 2
-                          THEN coalesce(topc, 0) / CAST(nt - 1 AS DOUBLE)
-                          ELSE 0.0 END AS tops
-              FROM t LEFT JOIN m ON t.doc_id = m.doc_id)
-            SELECT doc_id, nt AS rep_tokens,
-                   round(dupf, 6) AS rep_dup_token_frac,
-                   round(tops, 6) AS rep_top_bigram_share,
-                   (tops > 0.18 OR dupf > 0.6) AS rep_flagged
-            FROM v ORDER BY doc_id""",
-        "lang_id": f"""
-            WITH h AS (
-              SELECT doc_id,
-                     len(list_intersect(list_distinct(toks), {mk['en']})) AS h_en,
-                     len(list_intersect(list_distinct(toks), {mk['de']})) AS h_de,
-                     len(list_intersect(list_distinct(toks), {mk['es']})) AS h_es,
-                     len(list_intersect(list_distinct(toks), {mk['fr']})) AS h_fr
-              FROM {_TOKS_SQL}),
-            p AS (
-              SELECT CASE
-                WHEN greatest(h_en, h_de, h_es, h_fr) = 0 THEN 'und'
-                WHEN h_en >= h_de AND h_en >= h_es AND h_en >= h_fr THEN 'en'
-                WHEN h_de >= h_es AND h_de >= h_fr THEN 'de'
-                WHEN h_es >= h_fr THEN 'es'
-                ELSE 'fr' END AS lang_pred
-              FROM h)
-            SELECT lang_pred, count(*) AS n FROM p
-            GROUP BY lang_pred ORDER BY lang_pred""",
-        "doc_fingerprint": f"""
-            WITH t AS (SELECT doc_id,
-                regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
-                FROM documents)
-            SELECT doc_id,
-                   list_reduce(list_prepend(CAST(0 AS BIGINT),
-                     list_transform(toks,
-                       tok -> {_char_hash_sql('tok', 31)})),
-                     (acc, h) -> (acc * 31 + h) % 2147483647) AS fp
-            FROM t ORDER BY doc_id""",
-        "simhash_dedup_pairs": _simhash_sql(),
-        "exact_dedup": """
-            SELECT min(doc_id) AS doc_id, count(*) AS dup_count
-            FROM documents
-            GROUP BY regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')
-            ORDER BY doc_id""",
-        "ngram_dedup_pairs": _jaccard_pairs_sql(0.3,
-                                                cap=_NGRAM_EXACT_CAP),
-        "minhash_dedup_pairs": _jaccard_pairs_sql(0.5),
-        "ann_topk": _EXACT_ANN_SQL,
-        # lsh_topk oracle reads the SAME stored signature index + probe
-        # sidecar (materialized by the numpy twin builder if the Spark
-        # query hasn't run yet) — an exact plumbing check at any recall,
-        # green at every SF (the historical exact-top-k recall gate went
-        # red by design past the ~50k-vector under-recall boundary;
-        # recall is pytest-asserted instead).
-        **_lsh_oracle_entry(),
-        # ann_routed: the oracle replicates the router's cost decision
-        # from the same counts + sidecars and emits the twin of the path
-        # the engine will actually take (exact at gate scale, the
-        # index-reading twin past the documented crossover).
-        **_ann_routed_oracle_entry(),
-        # ivf_topk oracle reads the SAME stored index (materialized by the
-        # numpy twin builder if the Spark query hasn't run yet) and
-        # replicates probe selection + candidate ranking — an exact check
-        # of the distributed plumbing at IVF's approximate recall.
-        **_ivf_oracle_entry(),
-        "embedding_near_dup": """
-            SELECT a.vec_id AS a, b.vec_id AS b
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                         CAST(b.embedding AS DOUBLE[]))
-                  >= 0.4
-            ORDER BY a, b""",
-        "point2point": f"""
-            WITH pts AS (
-              SELECT user_id, event_id, ts,
-                     (event_id*7919%36000)/100.0-180.0 AS lon,
-                     (event_id*104729%18000)/100.0-90.0 AS lat
-              FROM events),
-            seg AS (
-              SELECT user_id,
-                     row_number() OVER w - 1 AS seg,
-                     lon AS x1, lat AS y1,
-                     lead(lon) OVER w AS x2, lead(lat) OVER w AS y2,
-                     epoch(ts) AS t_start,
-                     epoch(lead(ts) OVER w) AS t_end,
-                     count(*) OVER (PARTITION BY user_id) AS n
-              FROM pts
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-            SELECT user_id, seg, x1, y1, x2, y2, t_start, t_end,
-                   round({_haversine_sql('x1', 'y1', 'x2', 'y2')}, 0)
-                     AS dist_m
-            FROM seg
-            WHERE n > 5 AND x2 IS NOT NULL
-              AND {_haversine_sql('x1', 'y1', 'x2', 'y2')} > 0.0
-            ORDER BY user_id, seg""",
-        "track_label": """
-            SELECT user_id, event_id, epoch(ts) AS t, value FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY user_id
-                ORDER BY ts DESC, event_id DESC) AS rn
-              FROM events) t WHERE rn = 1 ORDER BY user_id""",
-        "date_offset": """
-            SELECT event_id,
-                   epoch(ts + INTERVAL 26 HOUR) AS t_shifted
-            FROM events ORDER BY event_id""",
-        "hash_attribute": f"""
-            SELECT event_id,
-                   CAST({_char_hash_sql('event_type', 31)} % 7 AS INT)
-                     AS hash
-            FROM events ORDER BY event_id""",
-        "route_search": _route_search_sql(),
-        "phash_near_dup": """
-            WITH ids AS (
-              SELECT event_id,
-                     printf('img-%012d', event_id) AS iid,
-                     printf('dup-%012d', event_id) AS did
-              FROM events WHERE event_id < 3000),
-            ph AS (
-              SELECT event_id, iid, did,
-                     (CASE WHEN u >= 9223372036854775808::HUGEINT
-                           THEN u::HUGEINT - 18446744073709551616::HUGEINT
-                           ELSE u::HUGEINT END)::BIGINT AS phash
-              FROM (SELECT *,
-                      ('0x' || substr(sha256(iid), 1, 16))::UBIGINT AS u
-                    FROM ids)),
-            corpus AS (
-              SELECT iid AS image_id, phash FROM ph
-              UNION ALL
-              SELECT did,
-                     xor(phash,
-                         xor(xor(1::BIGINT << CAST(event_id*7%63 AS INT),
-                                 1::BIGINT << CAST(event_id*13%63 AS INT)),
-                             1::BIGINT << CAST(event_id*29%63 AS INT)))
-              FROM ph)
-            SELECT x.image_id AS a, y.image_id AS b,
-                   CAST(bit_count(xor(x.phash, y.phash)) AS INT) AS hamming
-            FROM corpus x JOIN corpus y ON x.image_id < y.image_id
-            WHERE bit_count(xor(x.phash, y.phash)) <= 3
-            ORDER BY a, b""",
-        "stats_sketches": """
-            SELECT event_type, count(DISTINCT user_id) AS n_users,
-                   round(quantile_cont(value, 0.5), 6) AS q50,
-                   round(quantile_cont(value, 0.95), 6) AS q95
-            FROM events GROUP BY event_type ORDER BY event_type""",
-        "bin_export": """
-            SELECT event_id,
-                   CAST(floor(epoch(ts)) AS INT) AS secs,
-                   CAST(CAST((event_id*104729%18000)/100.0-90.0 AS FLOAT)
-                        AS DOUBLE) AS lat32,
-                   CAST(CAST((event_id*7919%36000)/100.0-180.0 AS FLOAT)
-                        AS DOUBLE) AS lon32,
-                   16 AS nbytes
-            FROM events ORDER BY event_id""",
-        "geojson_export": """
-            SELECT '{"type":"Feature","id":' || event_id ||
-                   ',"geometry":{"type":"Point","coordinates":[' ||
-                   CAST((event_id*7919%36000)/100.0-180.0 AS VARCHAR) ||
-                   ',' ||
-                   CAST((event_id*104729%18000)/100.0-90.0 AS VARCHAR) ||
-                   ']},"properties":{"event_id":' || event_id ||
-                   '}}' AS geojson
-            FROM events""",
-        # convex_hull: recursive gift-wrapping walk over the exact integer
-        # event grid. Every cross product is a sum/product of <=2^36-scale
-        # integers in float64 (exact), so the CCW walk reproduces the
-        # monotone-chain hull vertex-for-vertex deterministically.
-        "convex_hull": """
-            WITH RECURSIVE
-            pts AS (SELECT DISTINCT user_id AS u,
-                    CAST(event_id*7919%36000 AS DOUBLE) AS x,
-                    CAST(event_id*104729%18000 AS DOUBLE) AS y
-                    FROM events),
-            strt AS (
-              SELECT u, x, y FROM (
-                SELECT u, x, y,
-                       row_number() OVER (PARTITION BY u ORDER BY x, y) rn
-                FROM pts) t WHERE rn = 1),
-            walk(u, step, cx, cy, sx, sy, closed) AS (
-              SELECT u, 0, x, y, x, y, FALSE FROM strt
-              UNION ALL
-              SELECT u, step+1, nx, ny, sx, sy,
-                     (nx = sx AND ny = sy) FROM (
-                SELECT w.u, w.step, w.sx, w.sy, p.x AS nx, p.y AS ny,
-                  row_number() OVER (PARTITION BY w.u ORDER BY
-                    (p.x-w.cx)*(p.x-w.cx)+(p.y-w.cy)*(p.y-w.cy) DESC) rn
-                FROM walk w JOIN pts p ON p.u = w.u
-                  AND (p.x <> w.cx OR p.y <> w.cy)
-                  AND NOT w.closed
-                  AND NOT EXISTS (SELECT 1 FROM pts r WHERE r.u = w.u
-                    AND ((p.x-w.cx)*(r.y-w.cy)
-                         - (p.y-w.cy)*(r.x-w.cx)) < 0)
-              ) t WHERE rn = 1 AND step < 1000
-            ),
-            seg AS (SELECT u, step, cx, cy,
-                      lead(cx) OVER (PARTITION BY u ORDER BY step) AS nx,
-                      lead(cy) OVER (PARTITION BY u ORDER BY step) AS ny
-                    FROM walk)
-            SELECT u AS user_id,
-                   count(*) AS n_vertices,
-                   round(abs(sum(cx*ny - nx*cy)) / 2.0, 1) AS area
-            FROM seg WHERE nx IS NOT NULL
-            GROUP BY u ORDER BY user_id""",
-        "image_tile_counts": _image_tiles_sql(),
-        "image_tile_pyramid": _image_pyramid_sql(),
-        "near_dup_clusters": """
-            WITH RECURSIVE ids AS (
-              SELECT event_id,
-                     printf('img-%012d', event_id) AS iid
-              FROM events WHERE event_id < 1500),
-            ph AS (
-              SELECT event_id, iid,
-                     (CASE WHEN u >= 9223372036854775808::HUGEINT
-                           THEN u::HUGEINT - 18446744073709551616::HUGEINT
-                           ELSE u::HUGEINT END)::BIGINT AS phash
-              FROM (SELECT *,
-                      ('0x' || substr(sha256(iid), 1, 16))::UBIGINT AS u
-                    FROM ids)),
-            corpus AS (
-              SELECT iid AS image_id, phash FROM ph
-              UNION ALL
-              SELECT printf('dup-%012d', event_id),
-                     xor(phash,
-                         xor(xor(1::BIGINT << CAST(event_id*7%63 AS INT),
-                                 1::BIGINT << CAST(event_id*13%63 AS INT)),
-                             1::BIGINT << CAST(event_id*29%63 AS INT)))
-              FROM ph
-              UNION ALL
-              SELECT printf('dup2-%012d', event_id),
-                     xor(phash,
-                         xor(xor(1::BIGINT << CAST(event_id*11%63 AS INT),
-                                 1::BIGINT << CAST(event_id*17%63 AS INT)),
-                             1::BIGINT << CAST(event_id*23%63 AS INT)))
-              FROM ph),
-            ed AS (
-              SELECT x.image_id AS s, y.image_id AS t
-              FROM corpus x JOIN corpus y ON x.image_id <> y.image_id
-              WHERE bit_count(xor(x.phash, y.phash)) <= 3),
-            cc(node, comp) AS (
-              SELECT image_id, image_id FROM corpus
-              WHERE image_id IN (SELECT s FROM ed)
-              UNION
-              SELECT e.t, c.comp FROM cc c JOIN ed e ON e.s = c.node),
-            final AS (
-              SELECT node, min(comp) AS comp FROM cc GROUP BY node)
-            SELECT comp AS keeper, count(*) AS n_members
-            FROM final GROUP BY comp ORDER BY keeper""",
-        "image_brightness": _image_brightness_sql(),
-        "audio_features": _audio_features_sql(),
-        "video_frame_stats": _video_frame_stats_sql(),
-        "id_lookup": f"""
-            SELECT event_id, event_type, value, lon, lat FROM {pts}
-            WHERE event_id IN ({", ".join(map(str, _ID_LOOKUP_IDS))})
-            ORDER BY event_id""",
-    }
+@query("route_search", oracle=_route_search_sql())
+def q_route_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RouteSearch process: events within 800 km of a route whose
+    heading tracks the closest in-buffer segment's bearing within 60
+    degrees (bidirectional). Heading is a deterministic function of
+    event_id so the SQL oracle replays it exactly."""
+    from geomesa_spark.operators.processes import route_search
+    pts = _events_points(spark, sf_dir).select(
+        "event_id", "lon", "lat",
+        ((F.col("event_id") * 131 % 3600) / 10.0).alias("heading"))
+    out = route_search(pts, ROUTE_COORDS, buffer_m=ROUTE_BUFFER_M,
+                       heading_threshold=ROUTE_HEADING_THRESH,
+                       id_col="event_id", bidirectional=True)
+    return out.select("event_id", "lon", "lat", "heading", "route_id",
+                      "seg", "dist_m", "route_heading")
 
 
 def entry(spark: SparkSession) -> DataFrame:

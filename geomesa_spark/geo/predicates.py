@@ -471,6 +471,12 @@ def _matches(dims: list[int], pattern: str) -> bool:
 # ------------------------------------------------------- named predicates
 
 def intersects(a: Geometry, b: Geometry) -> bool:
+    # a collection intersects iff one of its parts does: the matrix of a
+    # mixed-dimension collection misses a lower-dimension part's contact
+    if isinstance(a, GeometryCollection):
+        return any(intersects(p, b) for p in a.parts)
+    if isinstance(b, GeometryCollection):
+        return any(intersects(a, p) for p in b.parts)
     d = relate_dims(a, b)
     return d[0] != F or d[1] != F or d[3] != F or d[4] != F
 

@@ -10,9 +10,9 @@ Every entry of ``__spark_entry__.queries()`` (the same registry the
 correctness driver gates) is addressable by name; the result row count,
 wall time and (optionally) the formatted physical plan are printed, and
 ``--out`` writes the full result as parquet. ``--oracle`` additionally
-runs the query's DuckDB oracle SQL over the same tables and reports the
-row-count comparison — the single-query version of
-``tools/check_oracles.py``.
+checks the result against the query's DuckDB twin over the same tables
+with the typed comparison of ``tools/check_oracles.py``
+(``geomesa_spark.oracle.mismatch``) and reports the first difference.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ def main() -> None:
     ap.add_argument("--explain", action="store_true",
                     help="print the formatted physical plan")
     ap.add_argument("--oracle", action="store_true",
-                    help="also run the DuckDB oracle and compare rows")
+                    help="also check the result against its DuckDB twin")
     ap.add_argument("--show", type=int, default=0, metavar="N",
                     help="print the first N result rows")
     ap.add_argument("--cpus", type=int,
@@ -83,20 +83,10 @@ def main() -> None:
     rec = {"query": args.name, "rows": n, "seconds": wall,
            "sf_dir": args.sf_dir}
     if args.oracle:
-        sql = entry.oracle_sql().get(args.name)
-        if sql is None:
-            rec["oracle"] = "rows-only (no SQL twin)"
-        else:
-            import duckdb
-            con = duckdb.connect()
-            for t in ("region nation customer supplier part orders "
-                      "lineitem events documents embeddings").split():
-                p = f"{args.sf_dir}/{t}.parquet"
-                src = (f"read_parquet('{p}/*.parquet')" if os.path.isdir(p)
-                       else f"'{p}'")
-                con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
-            dn = len(con.sql(sql).fetchall())
-            rec["oracle"] = {"rows": dn, "rows_match": dn == n}
+        from geomesa_spark.oracle import connect, mismatch
+        diff = mismatch(df, connect(args.sf_dir),
+                        entry.oracle_sql(args.sf_dir).get(args.name))
+        rec["oracle"] = "match" if diff is None else diff
     spark.stop()
     print(json.dumps(rec))
 

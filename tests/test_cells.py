@@ -22,6 +22,9 @@ from geomesa_spark.cells import (
     z_decode,
     z_encode,
 )
+from geomesa_spark.cells.s2 import s2_cell_id, s2_cover_ranges
+from geomesa_spark.cells.xz2 import xz2_covers, xz2_index
+from geomesa_spark.cells.xz3 import xz3_covers, xz3_index
 
 RNG = np.random.default_rng(123)
 N = 10_000
@@ -129,3 +132,35 @@ def test_z_order_locality():
         x0, y0, x1, y1 = cell_bounds(np.asarray([p]), 2)
         assert np.all(LON[sel] >= x0[0] - 1e-9) and np.all(LON[sel] <= x1[0] + 1e-9)
         assert np.all(LAT[sel] >= y0[0] - 1e-9) and np.all(LAT[sel] <= y1[0] + 1e-9)
+
+
+class TestAntimeridianCovers:
+    def test_s2_inverted_box_not_empty_and_sound(self):
+        ranges = s2_cover_ranges(170.0, -10.0, -170.0, 10.0, level=8)
+        assert len(ranges) > 0
+        for lon in (175.0, 179.9, -179.9, -175.0):
+            cid = int(s2_cell_id([lon], [2.0], level=8)[0])
+            assert any(lo <= cid <= hi for lo, hi in ranges.tolist()), lon
+        # soundness only requires over-selection; a point far outside may
+        # still fall in a coarse range, so just check the cover is bounded
+        assert len(ranges) <= 4096
+
+    def test_xz2_inverted_box_not_empty_and_sound(self):
+        cov = xz2_covers(170.0, -10.0, -170.0, 10.0)
+        assert len(cov) > 0
+        for lon in (178.0, -178.0):
+            code = int(xz2_index([lon], [1.0], [lon + 0.01], [1.01])[0])
+            assert any(lo <= code <= hi for lo, hi in cov), lon
+        # merged, sorted, non-overlapping
+        flat = [v for r in cov for v in r]
+        assert flat == sorted(flat)
+
+    def test_xz3_inverted_box_not_empty_and_sound(self):
+        t0, t1 = 10_000.0, 20_000.0
+        cov = xz3_covers(170.0, -10.0, -170.0, 10.0, t0, t1)
+        assert len(cov) > 0
+        ts0 = np.int64(12_000) * 1_000_000
+        for lon in (178.0, -178.0):
+            _, code = xz3_index([lon], [1.0], [lon + 0.01], [1.01],
+                                [ts0], [ts0 + 1_000_000])
+            assert any(lo <= int(code[0]) <= hi for lo, hi in cov), lon

@@ -1,71 +1,69 @@
 """Local mirror of the driver's correctness gate: run every queries() entry
-at sf0.001 and compare rows against the DuckDB oracle (count + sorted
-values). The driver runs the same comparison at sf0.01."""
+at sf0.001 and check it against its DuckDB twin with the one typed
+comparison (``geomesa_spark.oracle.mismatch``). The driver runs the same
+twins at sf0.01."""
 
-import math
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from geomesa_spark.oracle import connect, mismatch
 
 SF_DIR = "/root/testdata/sf0.001"
-# index-reading oracles (ivf_topk) must point at the same SF as the
-# queries; the driver's gate leaves this unset and gets its sf0.01 default
-os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+
+# the shard_pack twin before its BIGINT cast: DuckDB's sum over BIGINT
+# is HUGEINT, which Spark's int64 global_start must not pass for
+SHARD_PACK_HUGEINT_TWIN = """
+    WITH t AS (
+      SELECT doc_id,
+             CAST(len(regexp_split_to_array(lower(trim(text)),
+                                            '\\s+')) AS BIGINT)
+               AS n_tokens
+      FROM documents),
+    c AS (
+      SELECT doc_id, n_tokens,
+             sum(n_tokens) OVER (ORDER BY doc_id)
+               - n_tokens AS global_start
+      FROM t)
+    SELECT doc_id, n_tokens, global_start,
+           global_start // 4096 AS shard_id,
+           global_start % 4096 AS shard_offset
+    FROM c ORDER BY doc_id"""
 
 
 @pytest.fixture(scope="module")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
-    return con
+    return connect(SF_DIR)
 
 
-def normalize(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                v = round(v, 9)
-                if v == -0.0:
-                    v = 0.0
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=repr)
-    return out
-
-
-ORACLES = entrymod.oracle_sql()
+ORACLES = entrymod.oracle_sql(SF_DIR)
 QUERIES = entrymod.queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, ddb, name):
     df = QUERIES[name](spark, SF_DIR)
-    got_cols = df.columns
-    got = normalize([tuple(r) for r in df.collect()], got_cols)
-    if name not in ORACLES:
-        assert len(got) >= 0  # rows-only check, like the driver
-        return
-    res = ddb.execute(ORACLES[name])
-    exp_cols = [d[0] for d in res.description]
-    exp = normalize(res.fetchall(), exp_cols)
-    assert sorted(got_cols) == sorted(exp_cols), f"{name} schema mismatch"
-    assert len(got) == len(exp), f"{name}: {len(got)} vs {len(exp)} rows"
-    mism = [(g, e) for g, e in zip(got, exp) if g != e]
-    assert not mism, f"{name}: first mismatches {mism[:5]}"
+    diff = mismatch(df, ddb, ORACLES.get(name))
+    assert diff is None, f"{name}: {diff}"
+
+
+def test_hugeint_twin_is_a_type_mismatch(spark, ddb):
+    diff = mismatch(QUERIES["shard_pack"](spark, SF_DIR), ddb,
+                    SHARD_PACK_HUGEINT_TWIN)
+    assert diff is not None and "type" in diff, diff
+    assert "decimal128(38, 0)" in diff, diff
+
+
+def test_window_order_least_recently_certified_first(monkeypatch):
+    names = list(entrymod._QUERIES)  # registration order
+    monkeypatch.setattr(entrymod, "_last_certified",
+                        lambda: {names[0]: 5, names[1]: 4, names[2]: 5})
+    order = list(entrymod.queries())
+    assert order == names[3:] + [names[1], names[0], names[2]]
 
 
 def test_entry_smoke(spark):

@@ -19,7 +19,12 @@ from geomesa_spark.geo import (
     to_wkt,
 )
 from geomesa_spark.geo import geohash, measures as M, process as PR
+from geomesa_spark.geo import io as gio
 from geomesa_spark.geo import predicates as P
+from geomesa_spark.geo.geohash import encode, geohash_expr
+from geomesa_spark.geo.measures import closest_point, distance
+from geomesa_spark.geo.model import MultiPoint, MultiPolygon, geometry_n
+from geomesa_spark.geo.predicates import locate
 
 WKTS = [
     "POINT (5 5)",
@@ -279,3 +284,163 @@ class TestUTMTransform:
         from geomesa_spark.geo.process import transform
         with pytest.raises(NotImplementedError):
             transform(Point(0, 0), "EPSG:4326", "EPSG:31370")
+
+
+def _box(x0, y0, x1, y1):
+    return Polygon([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+
+
+class TestMultiPartContainment:
+    def test_distance_zero_when_second_part_inside(self):
+        """distance() only probed the FIRST point of each geometry for
+        interior containment; a multi-geometry whose LATER part is the
+        contained one returned a positive distance."""
+        poly = _box(0, 0, 10, 10)
+        mp = MultiPoint([Point(50, 50), Point(5, 5)])  # 2nd part inside
+        assert distance(poly, mp) == 0.0
+        assert distance(mp, poly) == 0.0
+
+    def test_closest_point_uses_later_part(self):
+        poly = _box(0, 0, 10, 10)
+        mp = MultiPoint([Point(50, 50), Point(5, 5)])
+        cp = closest_point(poly, mp)
+        assert (cp.x, cp.y) == (5.0, 5.0)
+
+    def test_multipolygon_second_part_contains(self):
+        mp = MultiPolygon([_box(100, 100, 101, 101), _box(0, 0, 10, 10)])
+        line = LineString([[4, 4], [6, 6]])
+        assert distance(mp, line) == 0.0
+
+
+class TestGeohashClamp:
+    def test_below_range_clamps_to_sw_corner(self, spark):
+        import pyspark.sql.functions as F
+        df = spark.createDataFrame(
+            [(-200.0, -95.0), (-180.0, -90.0)], "lon double, lat double")
+        out = [r.gh for r in df.select(
+            geohash_expr(F.col("lon"), F.col("lat"), 40).alias("gh")
+        ).collect()]
+        assert out[0] == out[1] == encode(-180.0, -90.0, 40)
+        assert not out[0].startswith("z")
+
+
+class TestGeometryNGuard:
+    def test_zero_and_negative_raise(self):
+        mp = MultiPoint([Point(1, 1), Point(2, 2)])
+        with pytest.raises(IndexError):
+            geometry_n(mp, 0)  # would wrap to the LAST part
+        with pytest.raises(IndexError):
+            geometry_n(mp, -1)
+        assert geometry_n(mp, 2).x == 2.0
+
+
+class TestClosestPointIntersecting:
+    def test_crossing_boundaries_returns_shared_point(self):
+        # boundaries cross at x=0 and x=10; every vertex of each polygon
+        # is strictly outside the other
+        a = _box(0, 0, 10, 10)
+        b = _box(-5, 4, 15, 6)
+        assert distance(a, b) == 0.0
+        p = closest_point(a, b)
+        assert locate(a, p.x, p.y) != "E"
+        assert locate(b, p.x, p.y) != "E"
+
+    def test_a_inside_b_returns_point_of_a(self):
+        a = _box(3, 3, 4, 4)
+        b = _box(0, 0, 10, 10)
+        p = closest_point(a, b)
+        assert locate(a, p.x, p.y) != "E"
+        assert locate(b, p.x, p.y) != "E"
+
+    def test_disjoint_unchanged(self):
+        a = _box(0, 0, 1, 1)
+        b = _box(3, 0, 4, 1)
+        p = closest_point(a, b)
+        # nearest point ON a to b is the right edge of a
+        assert (p.x, p.y) == (1.0, 0.0) or p.x == 1.0
+
+
+class TestWktDimensionToken:
+    def test_point_z_drops_z(self):
+        from geomesa_spark.geo.io import from_wkt
+        g = from_wkt("POINT Z (1 2 3)")
+        assert (g.x, g.y, g.m) == (1.0, 2.0, None)
+
+    def test_point_zm_keeps_m(self):
+        from geomesa_spark.geo.io import from_wkt
+        g = from_wkt("POINT ZM (1 2 3 4)")
+        assert (g.x, g.y, g.m) == (1.0, 2.0, 4.0)
+
+    def test_point_m_keeps_m(self):
+        from geomesa_spark.geo.io import from_wkt
+        g = from_wkt("POINT M (1 2 9)")
+        assert (g.x, g.y, g.m) == (1.0, 2.0, 9.0)
+
+    def test_bare_three_ordinates_is_z(self):
+        from geomesa_spark.geo.io import from_wkt
+        g = from_wkt("POINT (1 2 3)")
+        assert (g.x, g.y, g.m) == (1.0, 2.0, None)
+
+    def test_bare_four_ordinates_is_zm(self):
+        from geomesa_spark.geo.io import from_wkt
+        g = from_wkt("POINT (1 2 3 4)")
+        assert (g.x, g.y, g.m) == (1.0, 2.0, 4.0)
+
+
+class TestEmptyBounds:
+    def test_linestring_empty_bounds_nan(self):
+        b = LineString(np.empty((0, 2))).bounds()
+        assert len(b) == 4 and all(np.isnan(v) for v in b)
+
+    def test_polygon_empty_bounds_nan(self):
+        b = Polygon(np.empty((0, 2))).bounds()
+        assert len(b) == 4 and all(np.isnan(v) for v in b)
+
+    def test_envelope_of_empty(self):
+        for wkt in ("LINESTRING EMPTY", "POLYGON EMPTY"):
+            env = M.envelope(gio.from_wkt(wkt))
+            assert gio.to_wkt(env) == "POLYGON EMPTY"
+
+    def test_st_envelope_sql_surface(self, spark):
+        df = spark.sql(
+            "SELECT st_asText(st_envelope(st_geomFromWKT("
+            "'LINESTRING EMPTY'))) AS w")
+        assert df.collect()[0].w == "POLYGON EMPTY"
+
+    def test_cell_cover_of_empty_is_disjoint(self):
+        from geomesa_spark.plans.planner import cell_cover_of_geometry
+        cov = cell_cover_of_geometry(gio.from_wkt("POLYGON EMPTY"))
+        assert cov is not None and len(cov) == 0
+
+
+class TestWktEmptyComponents:
+    CASES = [
+        "MULTILINESTRING ((0 0, 1 1), EMPTY)",
+        "MULTIPOINT (EMPTY, (1 2))",
+        "MULTIPOLYGON (EMPTY, ((0 0, 1 0, 1 1, 0 0)))",
+        "GEOMETRYCOLLECTION (POINT EMPTY, LINESTRING (0 0, 1 1))",
+    ]
+
+    def test_parse_and_roundtrip(self):
+        for wkt in self.CASES:
+            g = gio.from_wkt(wkt)
+            assert gio.to_wkt(g) == wkt                       # writer parity
+            assert gio.to_wkt(gio.from_wkt(wkt)) == wkt       # parser stable
+            assert gio.to_wkt(gio.from_wkb(gio.to_wkb(g))) == wkt  # via WKB
+
+    def test_empty_part_counts(self):
+        g = gio.from_wkt("MULTILINESTRING ((0 0, 1 1), EMPTY)")
+        assert len(g.parts) == 2
+        assert not g.parts[0].is_empty() and g.parts[1].is_empty()
+        assert not g.is_empty()  # one non-empty part
+
+
+class TestGeoJsonEmpty:
+    def test_roundtrip_and_valid_json(self):
+        import json
+        for wkt in ("POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY",
+                    "MULTIPOLYGON EMPTY", "GEOMETRYCOLLECTION EMPTY",
+                    "MULTILINESTRING ((0 0, 1 1), EMPTY)"):
+            gj = gio.to_geojson(gio.from_wkt(wkt))
+            json.loads(gj)  # NaN coordinates would make this raise
+            assert gio.to_wkt(gio.from_geojson(gj)) == wkt

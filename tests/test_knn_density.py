@@ -163,6 +163,9 @@ def _knn_jobs(spark, points, queries, k, **kw):
         out = knn_join(points, queries, k, tiebreak=["point_id"], **kw)
     finally:
         sc.setJobGroup("idle", "")
+    # the status tracker is filled from the async listener bus: drain it
+    # so every job-start event of the build has been delivered
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     by_q = {}
     for r in out.collect():
@@ -213,3 +216,28 @@ def test_knn_single_round_build_is_one_job(spark, clustered):
     got, jobs = _knn_jobs(spark, cells, [q], K)
     assert jobs == 1
     _assert_twin(got["dense"], lon, lat, q[1], q[2], K)
+
+
+class TestKnnExhaustionEmits:
+    def test_fewer_points_than_k_still_answered(self, spark):
+        """3 points total, k=5: the query must come back with all 3
+        confirmed neighbors instead of vanishing from the output."""
+        from geomesa_spark.operators.knn import knn_join
+        pts = spark.createDataFrame(
+            [(1, 0.1, 0.1), (2, -0.2, 0.3), (3, 0.4, -0.1)],
+            "id long, lon double, lat double")
+        out = knn_join(pts, [("q", 0.0, 0.0)], k=5,
+                       estimated_count=3, max_rounds=4).collect()
+        assert sorted(r.id for r in out) == [1, 2, 3]
+        assert sorted(r.rank for r in out) == [1, 2, 3]
+
+    def test_tight_max_rounds_flush(self, spark):
+        """max_rounds=1 can't reach max_radius; the loop-exit flush must
+        still emit the confirmed neighbors found in the only round."""
+        from geomesa_spark.operators.knn import knn_join
+        pts = spark.createDataFrame(
+            [(1, 0.01, 0.01), (2, 0.02, 0.0)],
+            "id long, lon double, lat double")
+        out = knn_join(pts, [("q", 0.0, 0.0)], k=5, estimated_count=2,
+                       initial_radius_m=50000.0, max_rounds=1).collect()
+        assert sorted(r.id for r in out) == [1, 2]

@@ -86,6 +86,26 @@ class TestBuilderTwins:
         assert not [d for d in os.listdir(tmp_path) if ".building-" in d]
 
 
+def _sidecar_probes(path):
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    tbl = pq.read_table(os.path.join(path, entry._LSH_PROBES_FILE))
+    return set(zip(tbl["query_id"].to_pylist(), tbl["bk"].to_pylist()))
+
+
+def _engine_probes(emb, meta):
+    from geomesa_spark.ml.similarity import (_collect_matrix,
+                                             compute_probe_rows)
+    queries = emb.where(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").cast("string").alias("query_id"), "embedding")
+    q_ids, q_mat = _collect_matrix(queries, "query_id", "embedding")
+    return compute_probe_rows(
+        q_ids, q_mat, n_planes=meta["n_planes"],
+        n_tables=meta["n_tables"], dim=meta["dim"],
+        seed=meta["seed"], multiprobe=2)
+
+
 class TestProbeSidecar:
     def test_sidecar_probes_equal_engine_probes(self, spark, emb,
                                                 monkeypatch, tmp_path):
@@ -93,24 +113,34 @@ class TestProbeSidecar:
         (query_id, bucket) pairs the engine's driver-side expansion
         probes — same _collect_matrix normalization, same seeded planes,
         same masks (one shared compute_probe_rows)."""
-        import pyarrow.parquet as pq
-
         import __spark_entry__ as entry
-        from geomesa_spark.ml.similarity import (_collect_matrix,
-                                                 compute_probe_rows)
         monkeypatch.setattr(entry, "_CACHE_ROOT", str(tmp_path))
         path, meta = entry._ensure_lsh_oracle_index(SF)
-        tbl = pq.read_table(os.path.join(path, entry._LSH_PROBES_FILE))
-        sidecar = set(zip(tbl["query_id"].to_pylist(),
-                          tbl["bk"].to_pylist()))
-        queries = emb.where(F.col("vec_id") % 50 == 0).select(
-            F.col("vec_id").cast("string").alias("query_id"), "embedding")
-        q_ids, q_mat = _collect_matrix(queries, "query_id", "embedding")
-        engine = compute_probe_rows(
-            q_ids, q_mat, n_planes=meta["n_planes"],
-            n_tables=meta["n_tables"], dim=meta["dim"],
-            seed=meta["seed"], multiprobe=2)
+        sidecar = _sidecar_probes(path)
+        engine = _engine_probes(emb, meta)
         assert sidecar == engine
+
+    def test_sidecar_follows_in_place_rebuild(self, spark, emb,
+                                              monkeypatch, tmp_path):
+        """A Spark rebuild under dynamic partition overwrite replaces the
+        index in place with another plane count and keeps the
+        directory's underscore files: the probe sidecar computed for the
+        old geometry must be rewritten, not reused."""
+        import __spark_entry__ as entry
+        from geomesa_spark.ml.similarity import build_lsh_index
+        monkeypatch.setattr(entry, "_CACHE_ROOT", str(tmp_path))
+        path, meta = entry._ensure_lsh_oracle_index(SF)
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "dynamic")
+        try:
+            build_lsh_index(emb, path, n_planes=meta["n_planes"] + 1,
+                            n_tables=8, bucket_partitions=16)
+        finally:
+            spark.conf.set(key, prev)
+        assert os.path.exists(os.path.join(path, entry._LSH_PROBES_FILE))
+        path, meta = entry._ensure_lsh_oracle_index(SF)
+        assert _sidecar_probes(path) == _engine_probes(emb, meta)
 
     def test_index_reading_oracle_matches_engine(self, spark,
                                                  monkeypatch, tmp_path):
@@ -176,9 +206,7 @@ class TestRoutedOracle:
         from geomesa_spark.ml.ivf import read_ivf_meta
         from geomesa_spark.ml.router import decide_ann
         monkeypatch.setattr(entry, "_CACHE_ROOT", str(tmp_path))
-        monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF)
-        got = entry._ann_routed_oracle_entry()
-        assert set(got) == {"ann_routed"}
+        got = entry.oracle_sql(SF)["ann_routed"]
         n = pq.read_metadata(f"{SF}/embeddings.parquet").num_rows
         _, lsh_meta = entry._ensure_lsh_oracle_index(SF)
         ivf_meta = read_ivf_meta(entry._ensure_ivf_oracle_index(SF))
@@ -186,10 +214,10 @@ class TestRoutedOracle:
                        ivf_meta=ivf_meta, multiprobe=2,
                        nprobe=entry._IVF_NPROBE)
         if s.kind == "exact":
-            assert "CROSS JOIN" in got["ann_routed"]
+            assert "CROSS JOIN" in got
         elif s.kind == "lsh":
-            assert entry._LSH_PROBES_FILE in got["ann_routed"]
+            assert entry._LSH_PROBES_FILE in got
         else:
-            assert "_ivf_centroids.parquet" in got["ann_routed"]
+            assert "_ivf_centroids.parquet" in got
         # the gate fixture is in the documented exact regime
         assert s.kind == "exact"

@@ -106,3 +106,18 @@ class TestParquetConverter:
         # row 1 has unparseable y -> skipped by validation mode
         assert len(rows) == 1 and rows[0].fid == "f-2"
         assert rows[0].x == 3.5 and rows[0].y == 4.5
+
+
+class TestOsmDuplicateNodes:
+    def test_duplicated_node_id_does_not_drop_way(self, spark):
+        from geomesa_spark.sources.osm import osm_way_geometries
+        nodes = spark.createDataFrame(
+            [(1, 0.0, 0.0), (2, 1.0, 0.0), (1, 0.0, 0.0)],
+            "node_id long, lon double, lat double")
+        ways = spark.createDataFrame(
+            [(10, [1, 2], {"highway": "residential"})],
+            "way_id long, refs array<long>, tags map<string,string>")
+        out = osm_way_geometries(nodes, ways).collect()
+        assert len(out) == 1
+        assert out[0].n_points == 2
+        assert out[0].geom is not None

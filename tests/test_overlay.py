@@ -15,7 +15,11 @@ import numpy as np
 import pytest
 
 from geomesa_spark.geo import io as gio
+from geomesa_spark.geo import process as PR
+from geomesa_spark.geo.io import to_wkt
 from geomesa_spark.geo.measures import area as geo_area
+from geomesa_spark.geo.model import (GeometryCollection, LineString, Point,
+                                     Polygon)
 from geomesa_spark.geo.predicates import locate
 from geomesa_spark.geo.process import difference, intersection
 
@@ -199,3 +203,36 @@ def test_random_star_polygons(trial):
         gi = (locate(inter, x, y) == "I") if not inter.is_empty() else False
         gd = (locate(diff, x, y) == "I") if not diff.is_empty() else False
         assert gi == want_i and gd == want_d, (trial, x, y)
+
+
+def _box(x0, y0, x1, y1):
+    return Polygon([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+
+
+class TestAntimeridianHoles:
+    def test_holed_polygon_keeps_hole(self):
+        """The convex clip fast path dropped holes, silently re-including
+        the hole region in the world-clipped output."""
+        shell = [[150, -20], [210, -20], [210, 20], [150, 20], [150, -20]]
+        hole = [[170, -5], [190, -5], [190, 5], [170, 5], [170, -5]]
+        g = Polygon(shell, [hole])
+        safe = PR.antimeridian_safe(g)
+        # a point inside the hole must stay exterior
+        assert locate(safe, 175.0, 0.0) == "E"
+        assert locate(safe, 160.0, 10.0) != "E"  # shell region kept
+        # the wrapped lobe also lands on the west side, hole excluded there
+        assert locate(safe, -175.0, 10.0) != "E"
+
+
+class TestDim1Intersection:
+    def test_geometrycollection_linework_intersected(self):
+        gc = GeometryCollection([LineString([[0, 0], [10, 0]]),
+                                 Point(50, 50)])
+        r = PR.intersection(gc, _box(2, -1, 8, 1))
+        assert to_wkt(r) == "LINESTRING (2 0, 8 0)"
+
+    def test_crossing_lines_still_yield_point(self):
+        """The point fallback (now computed lazily) must still fire."""
+        r = PR.intersection(LineString([[0, 0], [10, 10]]),
+                            LineString([[0, 10], [10, 0]]))
+        assert to_wkt(r) == "POINT (5 5)"

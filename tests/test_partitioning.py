@@ -118,3 +118,68 @@ class TestRtreeStrategy:
         ja = {r["id"]: r["p"] for r in a.collect()}
         jb = {r["id"]: r["p"] for r in b.collect()}
         assert ja == jb
+
+
+class TestCoverBudgetHonored:
+    def test_huge_reexpansion_returns_no_prune(self):
+        """A near-world polygon with a tiny budget: coarsening succeeds
+        but re-expanding to partition res would blow the budget by far
+        more than the 4x slack -> None (scan + exact refine), never a
+        six-figure isin list."""
+        from geomesa_spark.geo.model import Polygon
+        from geomesa_spark.plans.planner import cell_cover_of_geometry
+        near_world = Polygon([[-180.0, -90.0], [180.0, -90.0],
+                              [180.0, 89.0], [-180.0, 89.0],
+                              [-180.0, -90.0]])
+        assert cell_cover_of_geometry(near_world, max_cells=4) is None
+
+    def test_small_query_still_prunes(self):
+        from geomesa_spark.geo.model import Polygon
+        from geomesa_spark.plans.planner import cell_cover_of_geometry
+        small = Polygon([[0.0, 0.0], [5.0, 0.0], [5.0, 5.0], [0.0, 5.0],
+                         [0.0, 0.0]])
+        cover = cell_cover_of_geometry(small)
+        assert cover is not None and 0 < len(cover) <= 16
+
+
+class TestSharedPartitionerSpec:
+    def test_same_spec_same_mapping_across_frames(self, spark):
+        """Data-dependent strategies must expose a fit-once/apply-many
+        path: the SAME fitted spec maps the same coordinates to the same
+        partition id on two different frames (independent fits would
+        derive different bin edges)."""
+        from geomesa_spark.plans.partitioning import (
+            fit_partitioner, partition_id_from_spec)
+        a = spark.createDataFrame(
+            [(float(i), float(i % 7)) for i in range(-50, 50)],
+            "lon double, lat double")
+        # b shares some of a's coordinates but has very different
+        # bounds/quantiles (an independent fit would bin differently)
+        b = spark.createDataFrame(
+            [(float(i), float(i % 7)) for i in range(10)]
+            + [(1000.0, 3.0)],
+            "lon double, lat double")
+        for strategy in ("equal", "weighted", "rtree"):
+            spec = fit_partitioner(a, strategy=strategy, parallelism=16)
+            pid = partition_id_from_spec(spec)
+            ma = {(r.lon, r.lat): r.pid for r in
+                  a.withColumn("pid", pid).collect()}
+            mb = {(r.lon, r.lat): r.pid for r in
+                  b.withColumn("pid", pid).collect()}
+            shared = set(ma) & set(mb)
+            assert shared, f"{strategy}: fixtures must overlap"
+            for k in shared:
+                assert ma[k] == mb[k], strategy
+
+    def test_spec_roundtrips_through_json(self, spark):
+        import json
+        from geomesa_spark.plans.partitioning import (
+            fit_partitioner, partition_id_from_spec)
+        df = spark.createDataFrame(
+            [(float(i), float(i % 5)) for i in range(100)],
+            "lon double, lat double")
+        spec = fit_partitioner(df, strategy="rtree", parallelism=8)
+        spec2 = json.loads(json.dumps(spec))
+        got = df.withColumn(
+            "pid", partition_id_from_spec(spec2)).collect()
+        assert all(r.pid >= -1 for r in got)

@@ -8,6 +8,10 @@ import pytest
 
 from geomesa_spark.geo import from_wkt
 from geomesa_spark.geo import predicates as P
+from geomesa_spark.geo import process as PR
+from geomesa_spark.geo.io import to_wkt
+from geomesa_spark.geo.model import LineString
+from geomesa_spark.geo.predicates import _seg_intersection
 
 BOX_REF = "POLYGON((0 0, 0 10, 10 10, 10 0, 0 0))"
 LINE_REF = "LINESTRING(0 10, 0 -10)"
@@ -140,3 +144,58 @@ def test_self_equals(name, wkt):
     assert P.intersects(g(wkt), g(wkt))
     assert P.covers(g(wkt), g(wkt))
     assert not P.touches(g(wkt), g(wkt))
+
+
+class TestCollectionIntersects:
+    """A collection intersects iff one of its parts does, in either
+    argument order: the box meets only the collection's point part."""
+
+    BOX = "POLYGON((90 10, 112.5 10, 112.5 22.5, 90 22.5, 90 10))"
+    GC = "GEOMETRYCOLLECTION(POLYGON((0 0, 40 0, 0 40, 0 0)), POINT(100 20))"
+    GC_APART = ("GEOMETRYCOLLECTION(POLYGON((0 0, 40 0, 0 40, 0 0)), "
+                "POINT(60 20))")
+
+    def test_point_part_inside_box(self):
+        assert P.intersects(g(self.BOX), g("POINT(100 20)"))
+        assert P.intersects(g(self.BOX), g(self.GC))
+        assert P.intersects(g(self.GC), g(self.BOX))
+
+    def test_disjoint_follows(self):
+        assert not P.disjoint(g(self.BOX), g(self.GC))
+        assert not P.disjoint(g(self.GC), g(self.BOX))
+        assert P.disjoint(g(self.BOX), g(self.GC_APART))
+        assert P.disjoint(g(self.GC_APART), g(self.BOX))
+
+    def test_sql_surface(self, spark):
+        row = spark.sql(f"""
+            SELECT st_intersects(st_geomFromWKT('{self.BOX}'),
+                                 st_geomFromWKT('{self.GC}')) AS ab,
+                   st_intersects(st_geomFromWKT('{self.GC}'),
+                                 st_geomFromWKT('{self.BOX}')) AS ba,
+                   st_disjoint(st_geomFromWKT('{self.BOX}'),
+                               st_geomFromWKT('{self.GC}')) AS dab,
+                   st_disjoint(st_geomFromWKT('{self.GC}'),
+                               st_geomFromWKT('{self.BOX}')) AS dba
+            """).collect()[0]
+        assert (row.ab, row.ba, row.dab, row.dba) == (True, True,
+                                                      False, False)
+
+
+class TestCollinearSteepSegments:
+    def test_steep_negative_slope_overlap(self):
+        """Sorting endpoints by y but comparing tuples x-first picked the
+        wrong lo/hi for steep negative-slope collinear segments, returning
+        the WHOLE first segment instead of the shared part."""
+        kind, seg = _seg_intersection((0, 10), (4, 0), (2, 5), (4, 0))
+        assert kind == "overlap"
+        pts = sorted(seg)
+        assert pts == [(2, 5), (4, 0)]
+
+    def test_steep_negative_slope_disjoint_collinear(self):
+        kind, _ = _seg_intersection((0, 10), (2, 5), (3, 2.5), (4, 0))
+        assert kind == "none"
+
+    def test_intersection_of_steep_collinear_lines(self):
+        a = LineString([[0, 10], [4, 0]])
+        b = LineString([[2, 5], [4, 0]])
+        assert to_wkt(PR.intersection(a, b)) == "LINESTRING (2 5, 4 0)"

@@ -5,6 +5,7 @@ GDAL or the spark-avro jar)."""
 from __future__ import annotations
 
 import json
+import struct
 
 import numpy as np
 import pytest
@@ -178,3 +179,25 @@ class TestAvroSchemaRegistry:
                                  Field("label", "string", "kind")])
         df = conv.from_avro_registry(spark, str(d), self.REGISTRY)
         assert sorted(r["fid"] for r in df.collect()) == [1, 2, 3]
+
+
+class TestShapefileEmpty:
+    def test_write_shp_empty_rows_null_shape(self):
+        from geomesa_spark.sources.shapefile import read_shp, write_shp
+        geoms = [Point(1, 2),
+                 gio.from_wkt("LINESTRING EMPTY"),
+                 gio.from_wkt("POLYGON EMPTY")]
+        data = write_shp(geoms)
+        bbox = struct.unpack("<8d", data[36:100])[:4]
+        assert bbox == (1.0, 2.0, 1.0, 2.0)  # empties excluded, no NaN
+        back = read_shp(data)
+        assert gio.to_wkt(back[0]) == "POINT (1 2)"
+        assert back[1] is None and back[2] is None  # spec Null Shape
+
+    def test_write_shp_empty_part_in_multi(self):
+        from geomesa_spark.sources.shapefile import read_shp, write_shp
+        g = gio.from_wkt("MULTILINESTRING ((0 0, 1 1), EMPTY)")
+        back = read_shp(write_shp([g]))
+        # the empty part is dropped from the part array (a 0-point part
+        # is invalid per spec); the non-empty linework survives
+        assert gio.to_wkt(back[0]) == "LINESTRING (0 0, 1 1)"

@@ -65,3 +65,13 @@ def test_run_query_list_names_all_queries():
          "--list"], capture_output=True, text=True, timeout=120)
     assert out.returncode == 0
     assert out.stdout.split() == list(entry.queries())
+
+
+def test_warm_index_tables_ships_package(spark):
+    """warm_index_tables is an entry point too: run from any cwd, it
+    must ship the package before its pandas-UDF index builds."""
+    import __spark_entry__ as entry
+
+    shipping._SHIPPED.discard(spark.sparkContext.applicationId)
+    entry.warm_index_tables(spark, "/root/testdata/sf0.001")
+    assert spark.sparkContext.applicationId in shipping._SHIPPED

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from geomesa_spark.geo import Point, Polygon, to_wkb
+from geomesa_spark.geo import io as gio
 from geomesa_spark.operators.join import (
     locate_points_in_geometry,
     spatial_join,
@@ -488,3 +489,20 @@ class TestWorldSpanningRegions:
                 F.countDistinct("tile").alias("n"),
                 F.min("tile").alias("lo")).first()
             assert (tiles.n, tiles.lo) == (4 ** res, 0)
+
+
+class TestJoinWithEmptyGeometry:
+    def test_pair_join_empty_matches_nothing(self, spark):
+        from geomesa_spark.operators.join import spatial_join_pairs
+        sq = gio.to_wkb(gio.from_wkt(
+            "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"))
+        empty = gio.to_wkb(gio.from_wkt("POLYGON EMPTY"))
+        left = spark.createDataFrame(
+            [(1, bytearray(sq)), (2, bytearray(empty))],
+            "left_id int, geom binary")
+        right = spark.createDataFrame(
+            [(10, bytearray(sq))], "right_id int, geom_r binary")
+        rows = spatial_join_pairs(left, right).select(
+            "left_id", "right_id").collect()
+        # no executor crash; the empty geometry intersects nothing
+        assert sorted((r.left_id, r.right_id) for r in rows) == [(1, 10)]

@@ -5,6 +5,8 @@ including null propagation for every function exercised."""
 
 import pytest
 
+from geomesa_spark.geo.model import LineString, MultiLineString
+
 BOX = "POLYGON((0 0, 0 10, 10 10, 10 0, 0 0))"
 
 
@@ -269,3 +271,34 @@ def test_predicate_fast_path_sql_surface(spark):
     want = {i for i, x, y in rows
             if gp.contains(poly, gio.from_wkt(f"POINT({x} {y})"))}
     assert got == want
+
+
+class TestMultiLineStringIsClosed:
+    def test_closed_parts(self):
+        mls = MultiLineString([
+            LineString([[0, 0], [1, 0], [1, 1], [0, 0]]),
+            LineString([[5, 5], [6, 5], [6, 6], [5, 5]])])
+        assert mls.is_closed() is True
+
+    def test_open_part(self):
+        mls = MultiLineString([
+            LineString([[0, 0], [1, 0], [1, 1], [0, 0]]),
+            LineString([[5, 5], [6, 5]])])
+        assert mls.is_closed() is False
+
+    def test_empty_is_not_closed(self):
+        # JTS MultiLineString.isClosed: empty -> false (not vacuous true)
+        assert MultiLineString([]).is_closed() is False
+
+
+class TestStIsRingIsClosedSurface:
+    def test_st_isring_multilinestring(self, spark):
+        from geomesa_spark.geo import io as gio
+        ring = gio.to_wkb(MultiLineString(
+            [LineString([[0, 0], [1, 0], [1, 1], [0, 0]])]))
+        open_ = gio.to_wkb(MultiLineString(
+            [LineString([[0, 0], [1, 0]])]))
+        df = spark.createDataFrame([(bytearray(ring),), (bytearray(open_),)],
+                                   "g binary")
+        rows = df.selectExpr("st_isRing(g) r", "st_isClosed(g) c").collect()
+        assert [(r.r, r.c) for r in rows] == [(True, True), (False, False)]

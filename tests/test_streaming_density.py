@@ -103,3 +103,16 @@ def test_streaming_density_checkpoint_resume(spark, tmp_path):
     # no new data: resume is a no-op, nothing re-emitted
     run_once()
     assert sink_rows() == [("00:00", 0, 0, 2)]
+
+
+class TestLambdaViewOptionalSeq:
+    def test_log_without_seq_column(self, spark):
+        from geomesa_spark.streaming.density import lambda_view
+        batch = spark.createDataFrame(
+            [("a", 1.0, "batch"), ("b", 1.0, "batch")],
+            "key string, ts double, val string")
+        log = spark.createDataFrame(
+            [("a", "put", 2.0, "stream"), ("c", "put", 2.0, "stream")],
+            "key string, op string, ts double, val string")
+        rows = {r.key: r.val for r in lambda_view(batch, log).collect()}
+        assert rows == {"a": "stream", "b": "batch", "c": "stream"}

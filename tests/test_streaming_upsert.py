@@ -197,3 +197,49 @@ class TestLiveSnapshot:
         live = {r["key"]: r["payload"]
                 for r in live_snapshot(changelog).collect()}
         assert live == {"a": "new"}  # pre-offset events replay-skipped
+
+
+class TestUpsertCrossBatchSameTs:
+    def test_later_batch_same_ts_wins_without_seq(self, spark, tmp_path):
+        """Events without a seq column: the synthetic per-batch index
+        must not be compared against a PREVIOUS batch's stored index —
+        a same-timestamp update arriving in a later micro-batch is the
+        last write and must win."""
+        import json
+        import os
+        from geomesa_spark.streaming.upsert import upsert_stream
+
+        schema = ("key string, op string, ts timestamp, lon double, "
+                  "lat double, payload string")
+        d = str(tmp_path / "in"); ck = str(tmp_path / "ck")
+        o = str(tmp_path / "out")
+        os.makedirs(d)
+
+        def run():
+            src = spark.readStream.schema(schema).json(d)
+            q = (upsert_stream(src).writeStream.format("parquet")
+                 .option("path", o).option("checkpointLocation", ck)
+                 .outputMode("append").trigger(availableNow=True).start())
+            q.awaitTermination(120)
+            return spark.read.schema(schema).parquet(o)
+
+        ts = "2024-01-01T00:00:05"
+        with open(os.path.join(d, "b1.json"), "w") as f:
+            f.write(json.dumps({"key": "k", "op": "put", "ts": ts,
+                                "lon": 1.0, "lat": 1.0,
+                                "payload": "first"}) + "\n")
+            f.write(json.dumps({"key": "k", "op": "put", "ts": ts,
+                                "lon": 1.0, "lat": 1.0,
+                                "payload": "second"}) + "\n")
+        run()
+        with open(os.path.join(d, "b2.json"), "w") as f:
+            f.write(json.dumps({"key": "k", "op": "put", "ts": ts,
+                                "lon": 2.0, "lat": 2.0,
+                                "payload": "third"}) + "\n")
+        out = run()
+        payloads = [r.payload for r in
+                    out.where(F.col("op") == "upsert")
+                       .orderBy("payload").collect()]
+        # batch 1 emitted 'second' (intra-batch LWW); batch 2's same-ts
+        # arrival is later and must emit 'third', not be dropped as stale
+        assert payloads == ["second", "third"]

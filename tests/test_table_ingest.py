@@ -295,3 +295,37 @@ class TestReadBalanced:
             .toString().split("\n")[0] + \
             df._jdf.queryExecution().toString()
         assert df.count() == 1000
+
+
+class TestIngestExactlyOnceAfterCrash:
+    def test_orphaned_chunk_files_are_scrubbed_on_resume(
+            self, spark, tmp_path):
+        """Simulate a job killed BETWEEN a chunk's data write and its
+        lineage commit marker: the resume must not double-count that
+        chunk's rows (the orphaned ingest_chunk=c dirs are deleted
+        before the re-write)."""
+        from pyspark.sql import functions as F
+        from geomesa_spark.cells import PARTITION_RES
+        from geomesa_spark.cells.native import cell_expr
+        from geomesa_spark.sources.table import (
+            _images_range, ingest_images, read_images, write_partitioned)
+        p = str(tmp_path / "crash")
+        # commit chunk 0 normally
+        ingest_images(spark, p, n=100, chunk_rows=100,
+                      partitions_per_chunk=2)
+        # write chunk 1's DATA but no lineage marker (the crash window)
+        orphan = (_images_range(spark, 100, 200, 2)
+                  .withColumn("cell_prefix",
+                              cell_expr("lon", "lat", PARTITION_RES))
+                  .withColumn("ingest_chunk", F.lit(1).cast("long"))
+                  .repartition("cell_prefix"))
+        write_partitioned(orphan, p, mode="append",
+                          extra_partition_cols=("ingest_chunk",))
+        assert read_images(spark, p).count() == 200  # orphans visible
+        # resume: chunk 1 absent from lineage -> re-ingested exactly once
+        resumed = ingest_images(spark, p, n=200, chunk_rows=100,
+                                partitions_per_chunk=2)
+        assert resumed["ingested"] == [1] and resumed["skipped"] == [0]
+        df = read_images(spark, p)
+        assert df.count() == 200
+        assert df.select("image_id").distinct().count() == 200

@@ -114,3 +114,20 @@ class TestXZ2Query:
         pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
         assert "Or(" in pushed and "GreaterThanOrEqual(xz2," in pushed \
             and "LessThanOrEqual(xz2," in pushed, pushed
+
+
+class TestCoalesceRangesBudget:
+    def test_max_n_one_merges_everything(self):
+        from geomesa_spark.operators.xz2_query import coalesce_ranges
+        r = [(0, 5), (10, 20), (100, 110)]
+        assert coalesce_ranges(r, 1) == [(0, 110)]
+
+    def test_max_n_two_keeps_widest_gap(self):
+        from geomesa_spark.operators.xz2_query import coalesce_ranges
+        r = [(0, 5), (10, 20), (100, 110)]
+        assert coalesce_ranges(r, 2) == [(0, 20), (100, 110)]
+
+    def test_under_budget_untouched(self):
+        from geomesa_spark.operators.xz2_query import coalesce_ranges
+        r = [(0, 5), (10, 20)]
+        assert coalesce_ranges(r, 4) == r

@@ -133,3 +133,32 @@ class TestTubeSelect:
                                         qlat) <= radius:
                     want.add(r["event_id"])
         assert got == want and len(want) > 0
+
+
+class TestZ3BadRowSentinel:
+    TS = np.int64(1_700_000_000_000_000)
+
+    def test_numpy_kernel_sentinels_bad_rows(self):
+        lon = [float("nan"), 200.0, 10.0]
+        lat = [10.0, 10.0, float("nan")]
+        epoch, z = z3_cell(lon, lat, [self.TS] * 3)
+        assert z.tolist()[:2] == [-1, -1] and z[2] == -1
+        lon = [float("nan"), 200.0, 10.0]
+        lat = [10.0, 10.0, 10.0]
+        epoch, z = z3_cell(lon, lat, [self.TS] * 3)
+        assert z.tolist()[0] == -1 and z.tolist()[1] == -1
+        assert epoch.tolist()[0] == -1 and epoch.tolist()[1] == -1
+        assert z[2] >= 0 and epoch[2] >= 0
+
+    def test_native_expr_matches_kernel(self, spark):
+        import pyspark.sql.functions as F
+        rows = [(float("nan"), 10.0), (200.0, 10.0), (None, 10.0),
+                (10.0, 95.0), (10.0, 10.0)]
+        df = spark.createDataFrame(rows, "lon double, lat double") \
+            .withColumn("ts", F.timestamp_micros(F.lit(int(self.TS))))
+        out = df.select(z3_expr("lon", "lat", "ts").alias("s")) \
+                .select("s.epoch", "s.z3").collect()
+        got = [(r.epoch, r.z3) for r in out]
+        assert got[:4] == [(-1, -1)] * 4
+        ke, kz = z3_cell([10.0], [10.0], [self.TS])
+        assert got[4] == (int(ke[0]), int(kz[0]))

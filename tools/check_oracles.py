@@ -1,43 +1,27 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run every
-``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB over the
-same parquet tables, compare row counts and value multisets (columns
-sorted by name, floats rounded)."""
+``queries()`` entry on Spark and check it against its ``oracle_sql()``
+twin on DuckDB over the same parquet tables, with the one typed
+comparison (``geomesa_spark.oracle.mismatch``).
+
+    python tools/check_oracles.py [name ...]   # SF from $SPARK_GRAFT_SF_DIR
+"""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-# Index-backed oracles (ivf_topk) resolve their stored-index path from
-# this var; keep it pointed at the SF the views are registered on.
-os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
-
-
-def norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return round(v, 6)
-    return v
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
 def main() -> None:
-    import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from geomesa_spark.oracle import connect, mismatch
 
     only = set(sys.argv[1:])
     spark = (SparkSession.builder.master("local[8]")
@@ -47,44 +31,16 @@ def main() -> None:
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        src = (f"read_parquet('{p}/*.parquet')" if os.path.isdir(p)
-               else f"'{p}'")  # Spark-written tables are directories
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
-
-    oracles = entry.oracle_sql()
+    con = connect(SF_DIR)
+    oracles = entry.oracle_sql(SF_DIR)
     failed = []
     for name, fn in entry.queries().items():
         if only and name not in only:
             continue
-        sdf = fn(spark, SF_DIR)
-        srows = sdf.collect()
-        scols = sdf.columns
-        if name not in oracles:
-            print(f"{name:26s} rows-only: {len(srows)} rows")
-            continue
-        ddf = con.sql(oracles[name])
-        drows = ddf.fetchall()
-        dcols = [d[0] for d in ddf.description]
-        ok_cols = sorted(scols) == sorted(dcols)
-        ok_n = len(srows) == len(drows)
-        ok_vals = ok_cols and ok_n and \
-            norm_rows(scols, [tuple(r) for r in srows]) == \
-            norm_rows(dcols, drows)
-        status = "OK" if (ok_cols and ok_n and ok_vals) else "MISMATCH"
-        print(f"{name:26s} {status}  spark={len(srows)} duck={len(drows)}"
-              f" cols={'ok' if ok_cols else f'{sorted(scols)} vs {sorted(dcols)}'}"
-              f" vals={'ok' if ok_vals else 'DIFF'}")
-        if status != "OK":
+        diff = mismatch(fn(spark, SF_DIR), con, oracles.get(name))
+        print(f"{name:26s} {'OK' if diff is None else 'MISMATCH ' + diff}")
+        if diff is not None:
             failed.append(name)
-            if ok_cols and ok_n:
-                a = norm_rows(scols, [tuple(r) for r in srows])
-                b = norm_rows(dcols, drows)
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                for x, y in diffs:
-                    print(f"    spark={x}\n    duck ={y}")
     spark.stop()
     if failed:
         print("FAILED:", failed)
